@@ -23,14 +23,12 @@ per-batch work is bounded by Arrow's ``maxRecordsPerBatch``.
 
 from __future__ import annotations
 
-import hashlib
-import math
 from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -361,14 +359,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("mean_byte", T.DoubleType()),
     ]
 )
-
-
-def _byte_entropy(buf: bytes) -> float:
-    if not buf:
-        return 0.0
-    counts = np.bincount(np.frombuffer(buf, dtype=np.uint8), minlength=256)
-    p = counts[counts > 0] / len(buf)
-    return float(-(p * np.log2(p)).sum())
 
 
 def extract_features(media: DataFrame) -> DataFrame:

@@ -572,6 +572,15 @@ def refresh_table_schema(spark: SparkSession, path: str):
     return schema
 
 
+def _table_reader(spark: SparkSession, path: str):
+    """A parquet reader imposing the table's schema manifest, or footer-
+    merging (mergeSchema) when the table has none."""
+    schema = read_table_schema(path)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true")
+    return spark.read.schema(schema)
+
+
 def _read_table(spark: SparkSession, path: str) -> DataFrame:
     """The hot-reader scan: manifest-imposed when the table carries one
     (O(1) planning), mergeSchema otherwise. Partition columns in the
@@ -582,12 +591,7 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
     legacy root (``_data_read_paths``): a crashed legacy->pointer
     upgrade must leave the table readable, orphan excluded."""
     d, paths = _data_read_paths(path)
-    schema = read_table_schema(path)
-    reader = (
-        spark.read.schema(schema)
-        if schema is not None
-        else spark.read.option("mergeSchema", "true")
-    )
+    reader = _table_reader(spark, path)
     if paths is None:
         # a crash-stranded EMPTY _spark_metadata dir would make Spark
         # plan zero files over live data; repair it before the read
@@ -1604,12 +1608,14 @@ def _partition_scoped_read(
     partition-scoped rewrite (the merge, the partitioned vacuum, the
     fragmented-partition compaction). Manifest-less tables keep the
     plain dir-scoped read. Returns None when the manifest proves the
-    touched dirs hold no committed files."""
+    touched dirs hold no committed files.
+
+    The table's schema manifest is imposed when it carries one
+    (``_table_reader``, as ``_read_table`` does): no footer-merge job
+    per rewrite, and partition columns keep their written types."""
     from . import fileset
 
-    reader = spark.read.option("mergeSchema", "true").option(
-        "basePath", data_dir
-    )
+    reader = _table_reader(spark, data_dir).option("basePath", data_dir)
     logged = fileset.read_fileset(data_dir)
     if logged is None:
         return reader.parquet(*dirs)
@@ -2149,8 +2155,9 @@ def _apply_changes_locked(
     if exists:
         # listing-pruned read: resolve the touched tuples to their hive
         # directories and scope the scan to them via basePath, so
-        # DataFrame creation (listing + footer merge) is O(touched), not
-        # O(all partitions) — the difference between flat and linearly-
+        # DataFrame creation (listing, plus the footer merge on
+        # manifest-less tables) is O(touched), not O(all partitions) —
+        # the difference between flat and linearly-
         # degrading wall-per-batch as the table grows (see COVERAGE.md
         # CDC probe). Three-way outcome: a dir list => pruned read;
         # [] => every touched partition is new, nothing stored to merge
@@ -2256,27 +2263,33 @@ def overwrite_partitions_dropping_emptied(
     merge (``apply_changes``) and the partitioned tombstone vacuum so
     the surviving-set / stale-dir semantics cannot drift.
 
-    The surviving-partition set is collected BEFORE the write (the plan
-    reads the files the write is about to replace). Stale dirs are
-    resolved through the escape-aware walk in ONE pass; value types the
-    dir mapper refuses fall back to the raw path Spark wrote unescaped.
+    The surviving-partition set rides an ``Observation`` on the write's
+    own job, so ``df`` (a whole merge plan) executes exactly once. It
+    is observed as Spark's own dir-name rendering of each value
+    (``cast(... as string)``, as the partitioned writer does), and both
+    it and the candidates are resolved to their EXISTING dirs through
+    the escape-aware walk after the write; candidate value types the
+    dir mapper refuses fall back to the raw path. Comparing dirs, not
+    typed values, holds whatever partition types the read imposed.
 
     Commit semantics are dynamic overwrite's own: matched partitions
     are replaced per-partition at job commit, not as one atomic
     table-level swap — the standard exposure of every dynamic-partition
     MERGE on plain parquet (a lakehouse table format makes it
     transactional)."""
+    from pyspark.sql import Observation
+
     from . import fileset
 
     data_dir = table_data_dir(target_path)
-    remaining: set[tuple] = set()
+    obs = Observation()
     if candidates:
-        remaining = {
-            tuple(r)
-            for r in df.select(*[F.col(c) for c in partition_by])
-            .distinct()
-            .collect()
-        }
+        df = df.observe(
+            obs,
+            F.collect_set(
+                F.struct(*[F.col(c).cast("string") for c in partition_by])
+            ).alias("written"),
+        )
     _prestamp_schema_union(spark, target_path, df.schema)
     # dynamic overwrite rewrites matched partitions in place without
     # knowing its file delta: drop the fileset manifest FIRST (readers
@@ -2296,20 +2309,20 @@ def overwrite_partitions_dropping_emptied(
     _stamp_schema_union(spark, target_path, df.schema)
     if not candidates:
         return
-    stale = [tuple(v) for v in candidates if tuple(v) not in remaining]
-    if not stale:
-        return
-    subs = _touched_partition_dirs(data_dir, partition_by, stale, False)
+    # null and '' both land in __HIVE_DEFAULT_PARTITION__
+    written = [tuple(v or None for v in r) for r in obs.get["written"]]
+    kept = set(_touched_partition_dirs(data_dir, partition_by, written, False))
+    subs = _touched_partition_dirs(data_dir, partition_by, candidates, False)
     if subs is None:
         subs = [
             os.path.join(
                 data_dir,
                 *[f"{c}={v}" for c, v in zip(partition_by, vals)],
             )
-            for vals in stale
+            for vals in candidates
         ]
     for sub in subs:
-        if os.path.exists(sub):
+        if sub not in kept and os.path.exists(sub):
             shutil.rmtree(sub)
 
 

@@ -414,29 +414,6 @@ def _salted_bucket_pairs(
     return _bucket_join_pairs(banded, id_col, bucket_cap=bucket_cap)
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    num_hashes: int = 128,
-    bands: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """Candidate id pairs (i < j) sharing ≥1 LSH bucket.
-
-    Shuffle cost: (bands × n) rows of (band, bucket, id) — signatures
-    and shingles stay behind. The bucket self-join goes through
-    ``_salted_bucket_pairs`` so a degenerate bucket cannot serialize
-    into one straggler task.
-    """
-    rows = num_hashes // bands
-    sig = minhash_signature(F.col(shingle_col), num_hashes, seed)
-    banded = df.select(
-        F.col(id_col), F.explode(lsh_bands(sig, bands, rows)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-    return _salted_bucket_pairs(banded, id_col)
-
-
 def adaptive_band_rows(
     threshold: float, num_hashes: int, max_miss: float = 1e-7
 ) -> int:

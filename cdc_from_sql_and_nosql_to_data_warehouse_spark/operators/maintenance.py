@@ -34,20 +34,27 @@ def table_stats(spark: SparkSession, path: str) -> TableStats:
     """File-level stats driving the compaction decision (driver-side
     listing — the same information a catalog/manifest would hold).
     Hidden path segments ('.'/'_' prefixes: staging dirs, markers) are
-    invisible, mirroring Spark's own listing rules. The row count is a
-    parquet count-star — footer metadata, no column data read."""
+    invisible, mirroring Spark's own listing rules. The row count sums
+    parquet footers (``_planned_rows``) — no Spark job."""
     path = table_data_dir(path)
     fileset.repair_stranded_log(path)  # never hand Spark a stranded log
-    files = []
-    for dp, dns, fs in os.walk(path):
-        dns[:] = [d for d in dns if not d.startswith((".", "_"))]
-        files.extend(
-            os.path.join(dp, f)
-            for f in fs
-            if f.endswith(".parquet") or f.startswith("part-")
-        )
-    total = sum(os.path.getsize(f) for f in files)
-    return TableStats(len(files), total, spark.read.parquet(path).count())
+    files = fileset.walk_data_files(path)
+    total = sum(os.path.getsize(os.path.join(path, f)) for f in files)
+    return TableStats(len(files), total, _planned_rows(path, files))
+
+
+def _planned_rows(path: str, walked: list[str] | None = None) -> int:
+    """The row count a Spark scan of data dir ``path`` returns, read
+    from parquet footer metadata on the driver: summed over the fileset
+    log's files when the dir carries one (Spark plans from the log, so
+    unlogged junk is not counted), else over the hidden-dir-skipping
+    walk (``walked`` when the caller already has it)."""
+    import pyarrow.parquet as pq
+
+    files = fileset.read_fileset(path)
+    if files is None:
+        files = fileset.walk_data_files(path) if walked is None else walked
+    return sum(pq.read_metadata(os.path.join(path, f)).num_rows for f in files)
 
 
 def _leaf_partition_stats(
@@ -199,9 +206,7 @@ def compact_parquet(
             and nf > max(1, math.ceil(b / target_file_bytes))
         ]
         if n_files < min_files_to_compact or not frag_dirs:
-            return TableStats(
-                n_files, total_bytes, spark.read.parquet(data).count()
-            )
+            return TableStats(n_files, total_bytes, _planned_rows(data))
         with _no_partition_type_inference(spark):
             # manifest-honoring read of the fragmented dirs: a crashed
             # append's unlogged junk must not be read back into the

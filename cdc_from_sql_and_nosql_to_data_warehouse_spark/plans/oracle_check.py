@@ -106,8 +106,3 @@ def compare_query(spark: SparkSession, name: str, sf_dir: str) -> dict:
         if str(s[c].dtype) != str(o[c].dtype)
     ]
     return result
-
-
-def compare_all(spark: SparkSession, sf_dir: str, names=None) -> list[dict]:
-    names = names or [n for n in QUERIES if n in ORACLES]
-    return [compare_query(spark, n, sf_dir) for n in names]

@@ -55,11 +55,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict:
-    """Load the driver's TESTDATA parquet tables as DataFrames."""
-    from .config import TESTDATA_TABLES
-
-    names = names or TESTDATA_TABLES
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

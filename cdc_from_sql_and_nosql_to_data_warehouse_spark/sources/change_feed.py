@@ -19,7 +19,6 @@ tracks seen files (R3), ``maxFilesPerTrigger`` plays the reference's
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.dynamodb_json import wire_schema_for
@@ -104,23 +103,3 @@ def read_dynamodb_stream(
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
         return reader.json(feed_dir)
     return spark.read.schema(schema).json(feed_dir)
-
-
-def guard_event_names(df: DataFrame) -> DataFrame:
-    """P2's raise-on-unknown-event guard
-    (``write_dynamodb_stream_to_s3_lambda/handler.py:33-37``): any
-    eventName outside INSERT/MODIFY/REMOVE poisons the batch.
-
-    Implemented as a side-effect-free marker column checked by the sink
-    (``raise_if_unknown_ops``) so the guard stays inside the plan and
-    distributes — no driver-side scan of the data."""
-    return df.withColumn(
-        "_unknown_op", ~F.col("eventName").isin(*VALID_OPS)
-    )
-
-
-def raise_if_unknown_ops(df: DataFrame, op_col: str = "eventName") -> None:
-    """Batch-side assertion: one aggregate, fails fast like the reference."""
-    bad = df.filter(~F.col(op_col).isin(*VALID_OPS)).limit(1).collect()
-    if bad:
-        raise ValueError(f"unexpected change-event op: {bad[0][op_col]!r}")

@@ -29,9 +29,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if dict(raw.dtypes).get("ts") == "bigint":
         raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return raw
-
-
-def load_all(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
-    from ..config import TESTDATA_TABLES
-
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}

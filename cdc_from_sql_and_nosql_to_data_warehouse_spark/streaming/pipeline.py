@@ -34,12 +34,8 @@ from pyspark.sql import types as T
 from .. import fsio
 from ..config import EngineConfig
 from ..functions.dynamodb_json import _unwrap  # typed tag-stripping
-from ..operators.apply import apply_changes
-from ..sources.change_feed import (
-    read_dynamodb_stream,
-    read_envelope_feed,
-    raise_if_unknown_ops,
-)
+from ..operators.apply import _guarded_op, _reraise_bad_op, apply_changes
+from ..sources.change_feed import read_dynamodb_stream, read_envelope_feed
 
 
 def decode_stream_records(records: DataFrame, after_schema: T.StructType) -> DataFrame:
@@ -112,10 +108,16 @@ def run_stream_to_staging(
         )
 
     def stage_batch(batch: DataFrame, epoch_id: int) -> None:
-        raise_if_unknown_ops(batch)  # P2's raise-on-unknown guard
-        decoded = decode_stream_records(batch, after_schema).localCheckpoint(
-            eager=True  # micro-batch-sized; count + write share one eval
-        )
+        # P2's raise-on-unknown guard rides inline in the checkpoint job:
+        # the batch is read once, and an unknown eventName fails it
+        guarded = batch.withColumn("eventName", _guarded_op(F.col("eventName")))
+        try:
+            decoded = decode_stream_records(guarded, after_schema).localCheckpoint(
+                eager=True  # micro-batch-sized; count + write share one eval
+            )
+        except Exception as exc:
+            _reraise_bad_op(exc)
+            raise
         # filename count comes from the DataFrame, never from re-reading
         # staged bytes through the driver
         n = decoded.count()

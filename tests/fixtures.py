@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import types as T
 
@@ -150,3 +151,17 @@ def write_envelope_file(
         )
     with open(os.path.join(dir_path, file_name), "w") as f:
         f.write("\n".join(lines) + "\n")
+
+
+def run_counting_jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn launched from this thread),
+    counted through a job group once the listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

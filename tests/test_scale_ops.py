@@ -41,6 +41,49 @@ def test_compaction_noop_when_compact(spark, tmp_path):
     assert (after.n_files, after.n_rows) == (before.n_files, before.n_rows)
 
 
+@pytest.mark.parametrize("logged", [False, True], ids=["unlogged", "logged"])
+def test_noop_partitioned_compaction_launches_no_job(spark, tmp_path, logged):
+    """The no-op partitioned compaction (and ``table_stats``) take the
+    row count from parquet footers over the file set Spark would plan:
+    the fileset log's files when the table carries one (an unlogged
+    junk file is not counted), else the listing. The stats equal the
+    count-star ones and no Spark job runs."""
+    import glob
+    import shutil
+
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
+        TableStats,
+        adopt_fileset_manifest,
+    )
+
+    from .fixtures import run_counting_jobs
+
+    path = str(tmp_path / "t")
+    spark.range(300).withColumn("p", F.col("id") % 3).write.partitionBy(
+        "p"
+    ).parquet(tdd(path))
+    if logged:
+        assert adopt_fileset_manifest(spark, path) > 0
+        src = sorted(glob.glob(f"{tdd(path)}/p=0/*.parquet"))[0]
+        shutil.copy(src, os.path.join(tdd(path), "p=0", "part-junk.parquet"))
+    files = glob.glob(f"{tdd(path)}/p=*/*.parquet")
+    want = TableStats(
+        len(files),
+        sum(map(os.path.getsize, files)),
+        spark.read.parquet(tdd(path)).count(),
+    )
+    assert want.n_rows == 300
+    got, jobs = run_counting_jobs(
+        spark,
+        lambda: compact_parquet(
+            spark, path, partition_by=["p"], min_files_to_compact=1000
+        ),
+    )
+    assert (got, jobs) == (want, 0)
+    got, jobs = run_counting_jobs(spark, lambda: table_stats(spark, path))
+    assert (got, jobs) == (want, 0)
+
+
 @pytest.fixture(scope="module")
 def skewed(spark):
     # 90% of rows share one key — the classic hot-key shape

@@ -9,6 +9,7 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.config import EngineConfig
@@ -91,6 +92,25 @@ def test_empty_batch_writes_marker(spark, tmp_path):
     _await(run_stream_to_staging(spark, cfg, feed, staging, str(tmp_path / "ck"), TRADE_SCHEMA))
     markers = [f for f in os.listdir(tdd(staging)) if f.endswith("__no_inserted_or_modified_records.txt")]
     assert markers and os.path.getsize(os.path.join(staging, markers[0])) == 0
+
+
+def test_unknown_stream_event_fails_staging_and_stages_nothing(spark, tmp_path):
+    """P2's raise guard: an eventName outside INSERT/MODIFY/REMOVE fails
+    the staging query, and no staging file (not even a K4 marker) is
+    written for the poisoned batch."""
+    cfg = EngineConfig()
+    feed = str(tmp_path / "feed")
+    staging = str(tmp_path / "staging")
+    t0 = make_trade(0)
+    write_stream_records_file(
+        feed, "b1.json", [("INSERT", t0, 1), ("TRUNCATE", t0, 2)]
+    )
+    q = run_stream_to_staging(
+        spark, cfg, feed, staging, str(tmp_path / "ck"), TRADE_SCHEMA
+    )
+    with pytest.raises(Exception, match="unexpected change-event op"):
+        q.awaitTermination(120)
+    assert os.listdir(staging) == []
 
 
 def test_envelope_apply_collapsed_upsert(spark, tmp_path):
