@@ -35,6 +35,7 @@ real lakehouse this function body is `MERGE INTO` — semantics identical.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -199,8 +200,8 @@ def _legacy_orphan_versions(root: str) -> list[str]:
 
 def _purge_legacy_orphans(root: str) -> None:
     """Writer-side hygiene: delete aborted-commit orphans under a
-    pointer-less root. Callable ONLY while holding a mutation scope on
-    the table — the two-phase scope check guarantees no whole-table
+    pointer-less root. Callable ONLY while holding a ``_fence`` scope on
+    the table — the fence's scope cross-check guarantees no whole-table
     writer is mid-``_swap_into`` while any scope is held (a table-scope
     holder IS the only possible stager; partition/append scopes abort
     when the table fence is live), so a version dir seen here can never
@@ -483,11 +484,11 @@ def _stamp_schema_union(spark: SparkSession, path: str, new_schema) -> None:
     string) — and the writer knows the truth. New tables pay one
     footer pass over their own just-written files.
 
-    The read-union-write runs under the table's stamp mutex: two
+    The read-union-write runs under the table's ``"stamp"`` fence: two
     APPEND-scope writers stamping concurrently would each read the
     pre-both manifest and the last writer would erase the other's
     added columns."""
-    with _stamp_mutex(path):
+    with _fence(path, "stamp"):
         _stamp_schema_union_locked(spark, path, new_schema)
 
 
@@ -889,7 +890,7 @@ def _lock_path(target_path: str) -> str:
 
 def break_table_lock(target_path: str, all_locks: bool = False) -> bool:
     """Manually remove stranded writer locks of a table: the
-    whole-table fence and the schema-stamp mutex unconditionally (they
+    whole-table fence and the schema-stamp lock unconditionally (they
     are what the operator is pointing the tool at — e.g. a FENCE left
     by a writer that died on another host; breaking a live owner's
     fence is the documented judgment call), plus any partition/append
@@ -935,24 +936,27 @@ def _proc_start_time(pid: int) -> str | None:
 
 
 def _lock_owner_is_dead(lock: str) -> bool:
-    """True only when the lock PROVABLY belongs to a dead writer: the
-    owner recorded the same host and its (pid, process-start-time) no
-    longer exists — start-time matching makes the verdict STABLE under
-    pid reuse (a recycled pid reads as a different process, so dead
-    stays dead and the adoption path can never misjudge a live owner).
+    """True only when the lock PROVABLY has no live owner: the lock is
+    gone (adopting it then reports ``"gone"``), or the owner recorded
+    the same host and its (pid, process-start-time) no longer exists —
+    start-time matching makes the verdict STABLE under pid reuse (a
+    recycled pid reads as a different process, so dead stays dead and
+    the adoption path can never misjudge a live owner).
     A lock from another host (unless it has aged past the opt-in
     LOCK_LEASE_SECONDS), an unparseable lock (torn mid-write — the
     creator is between open and write), or a live pid all read as
     alive (conservative: a wrong 'dead' verdict re-opens the lost-
     commit window; a wrong 'alive' verdict only makes someone call
-    break_table_lock)."""
+    break_table_lock). The lock is read once, through ``fsio``."""
     import json
     import socket
     import time
 
+    text = fsio.read_text(lock)
+    if text is None:
+        return True
     try:
-        with open(lock) as f:
-            meta = json.loads(f.read())
+        meta = json.loads(text)
         if meta.get("host") != socket.gethostname():
             lease = LOCK_LEASE_SECONDS
             acquired = meta.get("acquired_unix")
@@ -971,14 +975,10 @@ def _lock_owner_is_dead(lock: str) -> bool:
             if current is not None and current != recorded:
                 return True  # pid reused by a different process
         return False
-    except (ValueError, KeyError, OSError) as e:
-        if isinstance(e, ProcessLookupError):
-            return True
-        if isinstance(e, PermissionError):
-            return False  # pid exists, owned by someone else
-        if isinstance(e, FileNotFoundError):
-            return False  # raced with the owner's release
-        return False
+    except ProcessLookupError:
+        return True
+    except (ValueError, KeyError, OSError):
+        return False  # torn content, or PermissionError: the pid exists
 
 
 def _owner_payload() -> bytes:
@@ -1006,11 +1006,11 @@ def _adopt_dead_lock(lock: str) -> str:
     deleted out from under its owner. Re-verify on the file we now own
     (pid-reuse edge: judged dead, now alive) and restore it
     non-clobberingly if the owner is alive after all. The ONE copy of
-    the adoption dance — the table fence, the partition/append locks,
-    and the stamp mutex all share it, so the liveness contract cannot
-    drift between lock classes. Returns ``"freed"`` (stale lock
-    removed), ``"live"`` (owner alive after all, lock restored), or
-    ``"gone"`` (someone else released/adopted it first)."""
+    the adoption dance — every ``_fence`` scope shares it, so the
+    liveness contract cannot drift between lock classes. Returns
+    ``"freed"`` (stale lock removed), ``"live"`` (owner alive after
+    all, lock restored), or ``"gone"`` (someone else released/adopted
+    it first)."""
     import uuid as _uuid
 
     stale = f"{lock}.adopt-{_uuid.uuid4().hex[:8]}"
@@ -1028,116 +1028,6 @@ def _adopt_dead_lock(lock: str) -> str:
     fsio.remove(stale)
     return "live"
 
-
-def _acquire_lock_file(lock: str, what: str) -> None:
-    """Acquire ``lock`` via the create-exclusive CAS, adopting a
-    provably-dead owner's leftover through ``_adopt_dead_lock``; raise
-    ConcurrentWriteError on a live owner (fail fast, never block — a
-    CDC apply loop would rather surface the conflict than stack up
-    behind it). Shared by the table fence, the partition-scoped locks,
-    and the stamp mutex so the liveness/adoption contract cannot drift
-    between them."""
-    payload = _owner_payload()
-    conflict = ConcurrentWriteError(
-        f"{what} is locked by another writer ({lock}); if its owner "
-        "is dead on another host, break_table_lock() frees the fence, "
-        "the stamp mutex, and provably-dead partition locks "
-        "(all_locks=True for foreign-host partition locks this host "
-        "cannot probe), or opt into the lease (LOCK_LEASE_SECONDS) "
-        "for automatic recovery"
-    )
-    for _ in range(3):
-        if fsio.create_exclusive(lock, payload):
-            return
-        if not _lock_owner_is_dead(lock):
-            raise conflict
-        if _adopt_dead_lock(lock) == "live":
-            raise conflict
-        # freed/gone: retry the atomic create
-    raise ConcurrentWriteError(f"could not acquire {what} lock ({lock})")
-
-
-def _write_lock(target_path: str):
-    """Context manager: the single-writer fence every WHOLE-TABLE
-    mutation runs under (swaps, folds, purges, vacuums, unpartitioned
-    merges). Acquisition is one atomic create-exclusive of the sibling
-    lock file (``fsio.create_exclusive`` — the portable file-system
-    mutex, a conditional PUT on object stores); the owner records
-    pid+host so a writer that DIED on this host is adopted
-    automatically instead of deadlocking crash recovery. A live
-    concurrent writer raises ConcurrentWriteError immediately. On a
-    lakehouse table format this fence is the transaction log's
-    optimistic-commit CAS; the reference's implicitly-multi-writer
-    pipeline delegates the same problem to its managed services
-    (concurrent Lambda invocations per shard,
-    cdk_infrastructure/__init__.py:351-359). Partition-DISJOINT writers
-    do not take this fence — see ``_mutation_scope``."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        lock = _lock_path(target_path)
-        fsio.makedirs(os.path.dirname(os.path.abspath(lock)))
-        _acquire_lock_file(lock, f"table {target_path!r}")
-        try:
-            # holding the fence, any version dir under a pointer-less
-            # root is PROVABLY an aborted commit (only a fence holder
-            # stages one) — clean it before this writer reads the table
-            _purge_legacy_orphans(target_path)
-            yield
-        finally:
-            fsio.remove(lock)
-
-    return _cm()
-
-
-# --- Concurrency scopes: disjoint writers commit concurrently --------------
-#
-# The single-writer fence serializes ALL mutations of a table — which
-# at 100 TB means two appends to disjoint partitions, or two merges
-# touching different partition sets, queue behind one lock for no
-# physical reason: blind appends only create new uniquely-named files,
-# and a partitioned merge's dynamic overwrite replaces only its own
-# partitions. ``_mutation_scope`` narrows the fence:
-#
-#   table scope      whole-table operations (swaps, folds, purges,
-#                    unpartitioned merges, table creation): the
-#                    exclusive sibling lock, as before — PLUS a check
-#                    that no partition-scoped work is in flight.
-#   append scope     blind appends (append/history modes): a unique
-#                    per-writer token under ``{table}__plocks/`` —
-#                    never conflicts with other appends (new files
-#                    cannot collide), conflicts with table scope.
-#   partitions scope the partitioned upsert merge: one lock per touched
-#                    partition under ``{table}__plocks/``, acquired in
-#                    sorted order — DISJOINT partition sets proceed
-#                    concurrently, overlapping ones fail fast on the
-#                    contended partition.
-#
-# Conflict detection between the scopes is the classic two-phase
-# check with NO waiting: table scope acquires the table lock, then
-# aborts if any live plock exists; partition/append scope creates its
-# plocks, then aborts if the table lock has a live owner. In the
-# overlap window both may abort (mutual abort — the engine's OCC
-# layer, ``_retrying_mutation_scope``, re-acquires with jittered
-# backoff), but both can never proceed, and with no blocking there is
-# no deadlock.
-# Dead owners are detected by the same (pid, start-time) liveness the
-# table fence uses and cleaned through the same TOCTOU-free rename
-# dance. Commit-time VALIDATION (true lakehouse OCC) is deliberately
-# not used for partitioned merges: dynamic partition overwrite on
-# plain parquet has no atomic multi-partition publish step to validate
-# against — per-partition locks are the honest equivalent — while
-# whole-table swaps are inherently conflicting (both readers read the
-# full table), so failing fast at start strictly beats aborting at
-# commit after the rewrite is paid for.
-#
-# Mode mixing caveat (documented contract): append tokens do not
-# conflict with partition locks, because a table is either blind-
-# append (append/history) or merge-maintained (upsert) — the engine
-# never mixes both write shapes on one path, and maintenance ops
-# (which may rewrite any table) take table scope and conflict with
-# everything.
 
 _PLOCKS_SUFFIX = "__plocks"
 _STAMP_SUFFIX = "__stamp"
@@ -1178,174 +1068,122 @@ def _live_plocks(target_path: str) -> list[str]:
     return live
 
 
-def _mutation_scope(
-    target_path: str,
-    kind: str = "table",
-    partition_by: list[str] | None = None,
-    partitions: list[tuple] | None = None,
-):
-    """Context manager for one table mutation at the narrowest sound
-    scope — see the module-section comment above for the protocol."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        if kind == "table":
-            with _write_lock(target_path):
-                live = _live_plocks(target_path)
-                if live:
-                    raise ConcurrentWriteError(
-                        f"table {target_path!r} has partition-scoped "
-                        f"writes in flight ({len(live)} live lock(s) "
-                        f"under {_plocks_dir(target_path)}); retry the "
-                        "whole-table operation after they finish"
-                    )
-                yield
-            return
-
-        d = _plocks_dir(target_path)
-        fsio.makedirs(d)
-        if kind == "append":
-            import uuid as _uuid
-
-            names = [f"a-{os.getpid()}-{_uuid.uuid4().hex[:8]}"]
-        elif kind == "partitions":
-            names = sorted(
-                {_partition_lock_name(partition_by, tuple(v)) for v in partitions}
-            )
-        else:  # pragma: no cover - internal misuse
-            raise ValueError(f"unknown mutation scope: {kind!r}")
-        held: list[str] = []
-        try:
-            for name in names:
-                lock = os.path.join(d, name)
-                _acquire_lock_file(
-                    lock, f"partition scope of table {target_path!r}"
-                )
-                held.append(lock)
-            # two-phase check: a whole-table writer that acquired the
-            # fence before our plocks landed must win exclusively
-            tlock = _lock_path(target_path)
-            if os.path.exists(tlock) and not _lock_owner_is_dead(tlock):
-                raise ConcurrentWriteError(
-                    f"table {target_path!r} is locked by a whole-table "
-                    f"writer ({tlock}); partition-scoped write aborted"
-                )
-            # no live fence holder -> no commit can be mid-staging, so
-            # version dirs under a pointer-less root are aborted junk
-            _purge_legacy_orphans(target_path)
-            yield
-        finally:
-            for lock in held:
-                fsio.remove(lock)
-
-    return _cm()
-
-
-# --- Engine-side optimistic retry over the scoped fences -------------------
-#
-# The scopes above FAIL FAST at acquisition (never block, never
-# deadlock). Round 9 left conflict retry to the caller; this layer
-# moves it into the engine — the plain-parquet equivalent of lakehouse
-# optimistic concurrency: a writer that loses the race re-acquires and
-# RE-RUNS its mutation against the new current state (every mutation
-# body reads the table INSIDE its scope, so re-running IS the rebase —
-# the max-seq merge, the fold, and the vacuum are all convergent over
-# whatever state they find). Only ACQUISITION failures retry: a
-# ConcurrentWriteError raised after the body started (e.g. the stamp
-# mutex timing out post-write) propagates, because re-running a
-# partially-applied body is exactly the double-apply the fences exist
-# to prevent. ConcurrentWriteError therefore reaches callers only for
-# conflicts that persisted through the full backoff budget — genuinely
-# long-held fences (a large compaction) or a stuck foreign writer.
-
-# Budget sizing (round 12): the worst sound hold a loser must outwait
-# is a COLD-SESSION whole-table mutation — first-job JIT can hold the
-# creation fence 7-12s (measured on both the r11 and r12 trees; the
-# two-racing-first-appends pin flaked standalone on either tree when
-# the jittered sum landed at the low end of the old 8-attempt budget,
-# ~3-10s). 10 attempts put the guaranteed minimum above that window
-# (sleep sum >= 0.05+0.1+...+2+2+2+2 ≈ 9.2s, jittering up to ~18s)
-# while warm-path conflicts still resolve in milliseconds.
-OCC_MAX_ATTEMPTS = 10
-OCC_BACKOFF_BASE_SECONDS = 0.05
-OCC_BACKOFF_CAP_SECONDS = 2.0
-
-
-def _retrying_mutation_scope(
-    target_path: str,
-    kind: str = "table",
-    partition_by: list[str] | None = None,
-    partitions: list[tuple] | None = None,
-):
-    """``_mutation_scope`` with engine-side bounded-backoff retry of
-    the ACQUISITION (see the section comment above). Jittered
-    exponential backoff so two symmetric losers (the partition/table
-    mutual-abort window) don't re-collide in lockstep."""
-    import contextlib
-    import random
-    import sys
-    import time
-
-    @contextlib.contextmanager
-    def _cm():
-        delay = OCC_BACKOFF_BASE_SECONDS
-        attempt = 0
-        while True:
-            attempt += 1
-            scope = _mutation_scope(
-                target_path, kind, partition_by, partitions
-            )
-            try:
-                scope.__enter__()
-            except ConcurrentWriteError:
-                if attempt >= OCC_MAX_ATTEMPTS:
-                    raise
-                time.sleep(delay * (1.0 + random.random()))
-                delay = min(delay * 2.0, OCC_BACKOFF_CAP_SECONDS)
-                continue
-            try:
-                yield
-            except BaseException:
-                if not scope.__exit__(*sys.exc_info()):
-                    raise
-                return
-            else:
-                scope.__exit__(None, None, None)
-                return
-
-    return _cm()
-
-
-def _stamp_mutex(target_path: str):
-    """Short mutex serializing the schema-manifest read-union-write:
-    concurrent APPEND-scope writers both stamping would lose one
-    union's added columns (classic read-modify-write). Stamps are
-    subsecond, so contention WAITS briefly (unlike the fail-fast
-    fences) — bounded retries, then surface the conflict; dead owners
-    are adopted by the shared acquisition dance."""
-    import contextlib
-    import time
-
-    @contextlib.contextmanager
-    def _cm():
-        lock = target_path.rstrip("/") + _STAMP_SUFFIX
+def _claim_lock(lock: str, payload: bytes) -> bool:
+    """One create-exclusive claim of ``lock``, adopting a provably dead
+    owner's leftover first; False while a live owner holds it. The
+    parent dir is made only when the create finds it missing."""
+    try:
+        if fsio.create_exclusive(lock, payload):
+            return True
+    except FileNotFoundError:
         fsio.makedirs(os.path.dirname(os.path.abspath(lock)))
-        deadline = time.monotonic() + 30.0
-        while True:
-            try:
-                _acquire_lock_file(lock, f"schema stamp of {target_path!r}")
-                break
-            except ConcurrentWriteError:
-                if time.monotonic() >= deadline:
-                    raise
-                time.sleep(0.05)
-        try:
-            yield
-        finally:
-            fsio.remove(lock)
+        return fsio.create_exclusive(lock, payload)
+    if _lock_owner_is_dead(lock) and _adopt_dead_lock(lock) != "live":
+        return fsio.create_exclusive(lock, payload)
+    return False
 
-    return _cm()
+
+# --- The commit fence -------------------------------------------------------
+#
+# Every table mutation runs inside ``_fence(path, scope)``. The scope
+# picks the lock files taken and the other lock class that must be idle:
+#
+#   "table"       ``{t}__lock``; refused while a partition/append lock
+#                 under ``{t}__plocks/`` is live (swaps, folds, purges,
+#                 unpartitioned merges, table creation, aggregate drains)
+#   "partitions"  one ``p-*`` lock per touched partition, sorted;
+#                 refused while ``{t}__lock`` is live
+#   "append"      one unique ``a-*`` token; refused while ``{t}__lock``
+#                 is live (appends never conflict with each other)
+#   "stamp"       ``{t}__stamp`` alone: the schema-manifest
+#                 read-union-write, taken inside another scope
+#
+# Invariant: each side claims its own locks BEFORE it checks the other
+# class, so a table writer and a partition/append writer may both back
+# off but can never both proceed, and no one waits while holding, so
+# there is no deadlock. Append tokens and partition locks do not check
+# each other: a table is blind-append or merge-maintained, never both.
+# A writer that is refused releases what it holds and retries with
+# jittered, capped exponential backoff for at most FENCE_WAIT_SECONDS.
+# Only acquisition is retried: an error raised inside the body
+# propagates, because re-running a partly applied body is the double
+# apply the fence exists to prevent. A writer that waited reads the
+# table only after acquiring, so it applies on top of the winner.
+FENCE_WAIT_SECONDS = 10.0
+
+
+@contextlib.contextmanager
+def _fence(
+    target_path: str,
+    scope: str,
+    partition_by: list[str] | None = None,
+    partitions: list[tuple] | None = None,
+):
+    """Hold ``scope``'s locks on ``target_path`` for the ``with`` body
+    (see the section comment above); ConcurrentWriteError once they
+    stay contended for FENCE_WAIT_SECONDS. On a lakehouse table format
+    this is the transaction log's optimistic-commit CAS."""
+    import random
+    import time
+
+    tlock = _lock_path(target_path)
+    plocks = _plocks_dir(target_path)
+    if scope == "table":
+        locks = [tlock]
+    elif scope == "stamp":
+        locks = [target_path.rstrip("/") + _STAMP_SUFFIX]
+    elif scope == "append":
+        token = f"a-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        locks = [os.path.join(plocks, token)]
+    elif scope == "partitions":
+        names = {_partition_lock_name(partition_by, tuple(v)) for v in partitions}
+        locks = [os.path.join(plocks, n) for n in sorted(names)]
+    else:  # pragma: no cover - internal misuse
+        raise ValueError(f"unknown fence scope: {scope!r}")
+    payload = _owner_payload()
+    deadline = time.monotonic() + FENCE_WAIT_SECONDS
+    delay = 0.05
+    held: list[str] = []
+    try:
+        while True:
+            blocker = None
+            for lock in locks:
+                if not _claim_lock(lock, payload):
+                    blocker = lock
+                    break
+                held.append(lock)
+            else:  # all claimed: the other lock class must be idle
+                if scope == "table":
+                    blocker = next(iter(_live_plocks(target_path)), None)
+                elif scope != "stamp" and not _lock_owner_is_dead(tlock):
+                    blocker = tlock
+            if blocker is None:
+                break
+            while held:
+                fsio.remove(held.pop())
+            left = deadline - time.monotonic()
+            if left <= 0:
+                raise ConcurrentWriteError(
+                    f"{scope} fence of table {target_path!r} is still "
+                    f"blocked by {blocker} after {FENCE_WAIT_SECONDS}s; "
+                    "if its owner is dead on another host, "
+                    "break_table_lock() frees the fence, the stamp lock, "
+                    "and provably-dead partition locks (all_locks=True "
+                    "for foreign-host partition locks this host cannot "
+                    "probe), or opt into the lease (LOCK_LEASE_SECONDS) "
+                    "for automatic recovery"
+                )
+            time.sleep(min(delay * (1.0 + random.random()), left))
+            delay = min(delay * 2.0, 2.0)
+        if scope != "stamp":
+            # no live table-scope holder but us -> no commit can be
+            # mid-staging, so version dirs under a pointer-less root
+            # are aborted junk; clean them before the body reads
+            _purge_legacy_orphans(target_path)
+        yield
+    finally:
+        for lock in held:
+            fsio.remove(lock)
 
 
 def _hive_partition_value_str(v):
@@ -1556,10 +1394,10 @@ def append_to_table(
     ``maintenance.vacuum_uncommitted`` or discarded wholesale when the
     next whole-table swap supersedes the version dir.
 
-    Concurrency: the append runs under its own APPEND scope (a unique
-    token — appends never conflict with each other, and whole-table
-    writers exclude them via the two-phase check), acquired here with
-    the OCC retry unless the caller already holds one
+    Concurrency: the append runs under its own ``_fence(path,
+    "append")`` (a unique token — appends never conflict with each
+    other, and whole-table writers exclude them via the scope cross-
+    check), acquired here unless the caller already holds one
     (``scoped=True`` — the apply paths do). Without the token, a
     direct caller like the bronze ingest would race a whole-table
     sweep: ``vacuum_uncommitted`` could delete files this append just
@@ -1571,7 +1409,7 @@ def append_to_table(
     from . import fileset
 
     if not scoped:
-        with _retrying_mutation_scope(target_path, "append"):
+        with _fence(target_path, "append"):
             append_to_table(df, target_path, partition_by, scoped=True)
         return
     data_dir = table_data_dir(target_path)
@@ -1915,14 +1753,14 @@ def apply_changes(
     as in every partitioned-MERGE system: a key's partition values must
     be immutable across its change events.
 
-    Concurrency: the mutation runs at the NARROWEST sound scope
-    (``_mutation_scope``): blind appends take a unique token (two
-    appends never conflict), a partitioned merge locks only its
-    touched partitions (disjoint merges commit concurrently,
-    overlapping ones raise ``ConcurrentWriteError`` on the contended
-    partition), and whole-table shapes (unpartitioned merge, table
-    creation, the null-partition-REMOVE fallback) keep the exclusive
-    single-writer fence.
+    Concurrency: the mutation runs under ``_fence`` at the NARROWEST
+    sound scope: blind appends take a unique token (two appends never
+    conflict), a partitioned merge locks only its touched partitions
+    (disjoint merges commit concurrently, overlapping ones wait for
+    the contended partition, up to ``FENCE_WAIT_SECONDS``, then raise
+    ``ConcurrentWriteError``), and whole-table shapes (unpartitioned
+    merge, table creation, the null-partition-REMOVE fallback) take the
+    exclusive table scope.
     """
     # Op validation rides INSIDE the batch's own jobs (round 12, guide
     # §1.2: don't pay a separate pass): the old eager
@@ -1941,7 +1779,7 @@ def apply_changes(
         kind, parts, probed = _scope_for(
             changes, target_path, mode, propagate_deletes, partition_by
         )
-        with _retrying_mutation_scope(target_path, kind, partition_by, parts):
+        with _fence(target_path, kind, partition_by, parts):
             _apply_changes_locked(
                 spark, changes, target_path, key, mode, propagate_deletes,
                 partition_by, scope_touched=probed,

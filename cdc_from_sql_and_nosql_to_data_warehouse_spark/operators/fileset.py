@@ -477,8 +477,9 @@ def append_batch(data_dir: str, rels: list[str]) -> int | None:
             # (a concurrent invalidate): same outcome as the empty-dir
             # check above — stay log-less, files visible via LIST.
             # Engine writers can no longer race this way (appends hold
-            # a token, invalidators hold table/partition scope), so
-            # this guards crash-replay leftovers and external misuse.
+            # an ``apply._fence`` "append" token, invalidators hold its
+            # "table"/"partitions" scope), so this guards crash-replay
+            # leftovers and external misuse.
             _FILESET_CACHE.pop(data_dir, None)
             return None
         if published:
@@ -577,10 +578,10 @@ def prune_log(data_dir: str, grace_seconds: float | None = None) -> int:
     restart batch ids at 0 over a different base, so a prune holding a
     pre-rebase kill list could delete the NEW incarnation's base under
     a colliding name). Both engine call sites qualify: the
-    opportunistic ``append_batch`` hook runs under the engine append
-    token (which table-scoped invalidators conflict with), and
-    ``run_maintenance`` takes the whole-table scope for its prune
-    step. Idempotent. Returns the number of files removed."""
+    opportunistic ``append_batch`` hook runs under the engine's
+    ``apply._fence(path, "append")`` token (which table-scoped
+    invalidators conflict with), and ``run_maintenance`` takes
+    ``_fence(path, "table")`` for its prune step. Idempotent. Returns the number of files removed."""
     import time
 
     grace = LOG_PRUNE_GRACE_SECONDS if grace_seconds is None else grace_seconds

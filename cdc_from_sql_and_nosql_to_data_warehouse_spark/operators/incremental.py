@@ -188,11 +188,11 @@ def sync_aggregate(
     touched keys, and the delta union; the aggregate table is
     O(groups).
     """
-    from .apply import _write_lock
+    from .apply import _fence
 
-    # single-writer fence on the AGGREGATE table: two concurrent drains
-    # would race their offset-carrying swaps (the source is only read)
-    with _write_lock(agg_path):
+    # table fence on the AGGREGATE table: two concurrent drains would
+    # race their offset-carrying swaps (the source is only read)
+    with _fence(agg_path, "table"):
         return _sync_aggregate_locked(
             spark, source_path, agg_path, group_col, value_col, value_cast
         )
@@ -440,15 +440,15 @@ def sync_aggregate_minmax(
         KEY_COL,
         SEQ_COL,
         _canonical_seq,
+        _fence,
         _read_table,
         _recover_swap,
         _swap_into,
-        _write_lock,
         current_max_seq,
         read_warehouse,
     )
 
-    with _write_lock(agg_path):
+    with _fence(agg_path, "table"):
         _recover_swap(agg_path)
         import os
 

@@ -113,21 +113,20 @@ def _no_partition_type_inference(spark: SparkSession):
 
 
 def _locked_on_path(fn):
-    """Run a (spark, path, ...) table mutation at WHOLE-TABLE scope
-    (``apply._retrying_mutation_scope``): it conflicts with every other
+    """Run a (spark, path, ...) table mutation under
+    ``apply._fence(path, "table")``: it conflicts with every other
     writer — including in-flight partition-scoped merges and append
-    tokens — and a lost acquisition race retries with bounded backoff
-    inside the engine (the round-10 OCC layer: the body reads the table
-    inside the scope, so a retry IS a rebase against the winner's
+    tokens — and waits out a held fence inside the engine (the body
+    reads the table inside the fence, so it runs against the winner's
     state). ConcurrentWriteError surfaces only for conflicts that
-    outlive the backoff budget."""
+    outlive ``FENCE_WAIT_SECONDS``."""
     import functools
 
     @functools.wraps(fn)
     def wrapper(spark, path, *args, **kwargs):
-        from .apply import _retrying_mutation_scope
+        from .apply import _fence
 
-        with _retrying_mutation_scope(path, "table"):
+        with _fence(path, "table"):
             # a crash in invalidate/write_base can strand an EMPTY
             # _spark_metadata dir, which makes any direct Spark read
             # of the data dir plan ZERO files over live data; every
@@ -434,7 +433,7 @@ def vacuum_uncommitted(spark: SparkSession, path: str) -> int:
     moved-but-never-published files — invisible to every reader by the
     manifest contract, pure storage junk) and stale ``_staged_append_*``
     staging dirs. Sound under the whole-table scope this runs in: the
-    two-phase fence check means no append can be mid-move while we
+    fence's scope cross-check means no append can be mid-move while we
     hold it, so an unlogged data file here is PROVABLY a dead writer's
     leftover, never a commit in flight (version dirs are engine-owned;
     external writers target legacy roots, which have no manifest and

@@ -66,8 +66,8 @@ def schedule_maintenance(
     eff = cfg if cfg is not None else MaintenanceConfig()
 
     def _tick(_df, _epoch_id) -> None:
-        # a transient failure (e.g. fence contention outlasting the
-        # OCC backoff under a swap-heavy writer) must not terminate
+        # a transient failure (e.g. fence contention outlasting
+        # FENCE_WAIT_SECONDS under a swap-heavy writer) must not terminate
         # the 'configured once, fires forever' scheduler: every sweep
         # is idempotent, so log and let the next tick retry. The
         # lifecycle-rule analogue has the same posture — a skipped

@@ -1442,8 +1442,8 @@ def test_single_writer_fence_serializes_or_fails_cleanly(spark, tmp_path):
 
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
         ConcurrentWriteError,
+        _fence,
         _lock_path,
-        _write_lock,
         break_table_lock,
     )
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
@@ -1458,7 +1458,7 @@ def test_single_writer_fence_serializes_or_fails_cleanly(spark, tmp_path):
     assert not os.path.exists(_lock_path(target))  # released after commit
 
     # a held lock blocks every mutator with a clean error
-    with _write_lock(target):
+    with _fence(target, "table"):
         for op in (
             lambda: apply_changes(spark, batch, target, "id", mode="upsert"),
             lambda: compact_parquet(spark, target),

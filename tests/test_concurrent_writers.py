@@ -1,12 +1,14 @@
 """Concurrency scopes: disjoint writers commit concurrently.
 
 The round-8 fence serialized EVERY mutation of a table behind one
-lock. ``apply._mutation_scope`` narrows it: blind appends take unique
+lock. ``apply._fence``'s scopes narrow it: blind appends take unique
 tokens (appends never conflict with each other), a partitioned merge
 locks only its touched partitions (disjoint merges run concurrently,
-overlapping ones fail fast), and whole-table operations keep the
-exclusive fence — now also refusing while partition-scoped work is in
-flight (two-phase check, abort-not-block, so no deadlock is possible).
+overlapping ones wait for the contended partition, up to
+``FENCE_WAIT_SECONDS``), and whole-table operations keep the exclusive
+table scope — also refused while partition-scoped work is in flight
+(each side claims its own locks, then checks the other class, and
+releases before it waits, so no deadlock is possible).
 """
 
 from __future__ import annotations
@@ -57,11 +59,11 @@ def test_disjoint_partition_merges_do_not_serialize(
     by holding the scope open rather than racing threads. Retry budget
     pinned to 1 attempt: this test is about ACQUISITION semantics; the
     engine-side retry layer has its own tests below."""
-    monkeypatch.setattr(A, "OCC_MAX_ATTEMPTS", 1)
+    monkeypatch.setattr(A, "FENCE_WAIT_SECONDS", 0)
     wh = str(tmp_path / "wh_disj")
     t1, t2 = _seed_partitioned(spark, tmp_path, wh)
 
-    with A._mutation_scope(wh, "partitions", ["ticker"], [("tk1",)]):
+    with A._fence(wh, "partitions", ["ticker"], [("tk1",)]):
         # tk2-only merge commits while tk1 is held
         apply_changes(
             spark,
@@ -90,7 +92,7 @@ def test_whole_table_ops_conflict_with_inflight_partition_work(
     merge refuses while the table fence is held. Retry budget pinned to
     1 attempt — acquisition semantics only (a held-for-the-duration
     lock would otherwise just stretch the test by the backoff)."""
-    monkeypatch.setattr(A, "OCC_MAX_ATTEMPTS", 1)
+    monkeypatch.setattr(A, "FENCE_WAIT_SECONDS", 0)
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
         compact_parquet,
     )
@@ -98,13 +100,13 @@ def test_whole_table_ops_conflict_with_inflight_partition_work(
     wh = str(tmp_path / "wh_tp")
     t1, _t2 = _seed_partitioned(spark, tmp_path, wh)
 
-    with A._mutation_scope(wh, "partitions", ["ticker"], [("tk1",)]):
+    with A._fence(wh, "partitions", ["ticker"], [("tk1",)]):
         with pytest.raises(ConcurrentWriteError):
             compact_parquet(spark, wh, partition_by=["ticker"])
     # released: the compaction proceeds
     compact_parquet(spark, wh, partition_by=["ticker"])
 
-    with A._write_lock(wh):
+    with A._fence(wh, "table"):
         with pytest.raises(ConcurrentWriteError):
             apply_changes(
                 spark,
@@ -120,7 +122,7 @@ def test_appends_never_conflict_with_each_other(spark, tmp_path, monkeypatch):
     swap refuses while any token is live. Retry budget pinned to 1:
     acquisition semantics only (the token is held for the whole block,
     so the backoff would only stretch the test)."""
-    monkeypatch.setattr(A, "OCC_MAX_ATTEMPTS", 1)
+    monkeypatch.setattr(A, "FENCE_WAIT_SECONDS", 0)
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
         compact_history,
     )
@@ -131,7 +133,7 @@ def test_appends_never_conflict_with_each_other(spark, tmp_path, monkeypatch):
         spark, _feed(spark, tmp_path, [("INSERT", t0, 1)], "a0"),
         wh, "id", mode="history",
     )
-    with A._mutation_scope(wh, "append"):
+    with A._fence(wh, "append"):
         apply_changes(
             spark,
             _feed(spark, tmp_path,
@@ -194,7 +196,7 @@ def test_overlapping_merge_engine_retry_converges(spark, tmp_path):
     t1, _ = _seed_partitioned(spark, tmp_path, wh)
     env = _feed(spark, tmp_path, [("MODIFY", dict(t1, shares=33), 9)], "r1")
 
-    holder = A._mutation_scope(wh, "partitions", ["ticker"], [("tk1",)])
+    holder = A._fence(wh, "partitions", ["ticker"], [("tk1",)])
     holder.__enter__()
     release = threading.Timer(1.0, lambda: holder.__exit__(None, None, None))
     release.start()
@@ -464,3 +466,107 @@ def test_manifest_stream_converges_under_concurrent_appends(
     )
     assert got == want
     assert len(got) == 11  # seed + 2 writers x 5 distinct keys
+
+
+def test_error_inside_fence_body_is_not_retried(spark, tmp_path, monkeypatch):
+    """Only ACQUISITION waits: a partitioned upsert whose pre-stamp
+    times out on a held ``"stamp"`` fence raises once. The body
+    (``_apply_changes_locked``) ran exactly once — re-running a partly
+    applied body is the double apply the fence prevents — and the
+    table still reads its pre-call rows."""
+    wh = str(tmp_path / "wh_body")
+    t1, _t2 = _seed_partitioned(spark, tmp_path, wh)
+    before = {r["id"]: r.asDict() for r in read_warehouse(spark, wh).collect()}
+    env = _feed(spark, tmp_path, [("MODIFY", dict(t1, shares=44), 9)], "b1")
+    calls = []
+    locked = A._apply_changes_locked
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return locked(*args, **kwargs)
+
+    monkeypatch.setattr(A, "_apply_changes_locked", counting)
+    monkeypatch.setattr(A, "FENCE_WAIT_SECONDS", 0.2)
+    with A._fence(wh, "stamp"):
+        with pytest.raises(ConcurrentWriteError):
+            apply_changes(
+                spark, env, wh, "id", mode="upsert", partition_by=["ticker"]
+            )
+    assert calls == [1]
+    after = {r["id"]: r.asDict() for r in read_warehouse(spark, wh).collect()}
+    assert after == before
+
+
+def test_drain_waits_out_held_aggregate_fence(spark, tmp_path):
+    """An aggregate drain that finds its table fence held waits like
+    every other mutation instead of failing fast: with the holder
+    released after 1 s, ``sync_aggregate`` commits and the aggregate
+    equals a full recompute."""
+    import time
+
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.incremental import (
+        sync_aggregate,
+    )
+
+    src = str(tmp_path / "wh_src")
+    agg = str(tmp_path / "wh_agg")
+    apply_changes(
+        spark,
+        _feed(spark, tmp_path,
+              [("INSERT", dict(make_trade(0), ticker="aa", price=10.0), 1),
+               ("INSERT", dict(make_trade(1), ticker="aa", price=20.0), 2),
+               ("INSERT", dict(make_trade(2), ticker="bb", price=5.0), 3)],
+              "g1"),
+        src, "id", mode="history",
+    )
+    holder = A._fence(agg, "table")
+    holder.__enter__()
+    t0 = time.monotonic()
+    release = threading.Timer(1.0, lambda: holder.__exit__(None, None, None))
+    release.start()
+    try:
+        assert sync_aggregate(spark, src, agg, "ticker", "price") is not None
+    finally:
+        release.join()
+    assert time.monotonic() - t0 >= 1.0
+    want = sorted(
+        (r["ticker"], r["n"], float(r["tv"]))
+        for r in read_warehouse(spark, src)
+        .groupBy("ticker")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("price").cast("decimal(18,2)")).alias("tv"),
+        )
+        .collect()
+    )
+    got = sorted(
+        (r["ticker"], r["n_keys"], float(r["total_value"]))
+        for r in spark.read.parquet(A.table_data_dir(agg)).collect()
+    )
+    assert got == want == [("aa", 2, 30.0), ("bb", 1, 5.0)]
+
+
+def test_fence_wait_is_bounded_by_deadline(spark, tmp_path, monkeypatch):
+    """A held fence makes a competitor raise once FENCE_WAIT_SECONDS
+    have passed — for a whole-table maintenance op behind a held
+    ``"table"`` scope and for a schema stamp behind a held ``"stamp"``.
+    Only the lower bound is asserted: the raise can never come early."""
+    import time
+
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
+        compact_parquet,
+    )
+
+    monkeypatch.setattr(A, "FENCE_WAIT_SECONDS", 0.5)
+    wh = str(tmp_path / "wh_deadline")
+    _seed_partitioned(spark, tmp_path, wh)
+    schema = A.read_table_schema(wh)
+    for scope, compete in (
+        ("table", lambda: compact_parquet(spark, wh)),
+        ("stamp", lambda: A._stamp_schema_union(spark, wh, schema)),
+    ):
+        with A._fence(wh, scope):
+            t0 = time.monotonic()
+            with pytest.raises(ConcurrentWriteError):
+                compete()
+            assert time.monotonic() - t0 >= 0.5, scope

@@ -626,7 +626,7 @@ def test_unscoped_append_holds_a_token(spark, tmp_path, monkeypatch):
     fence makes it conflict (budget pinned to 1 — acquisition
     semantics), and the apply paths' scoped=True calls still work
     under their own token."""
-    monkeypatch.setattr(A, "OCC_MAX_ATTEMPTS", 1)
+    monkeypatch.setattr(A, "FENCE_WAIT_SECONDS", 0)
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
         ConcurrentWriteError,
         append_to_table,
@@ -635,7 +635,7 @@ def test_unscoped_append_holds_a_token(spark, tmp_path, monkeypatch):
     wh = str(tmp_path / "wh")
     df = spark.range(4).selectExpr("cast(id as string) as k")
     append_to_table(df, wh)  # unscoped: acquires its own token
-    with A._write_lock(wh):
+    with A._fence(wh, "table"):
         with pytest.raises(ConcurrentWriteError):
             append_to_table(df, wh)
     append_to_table(df, wh)
