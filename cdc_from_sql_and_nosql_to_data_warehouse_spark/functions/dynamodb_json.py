@@ -11,18 +11,22 @@ It then downcasts Decimal to float when serializing to NDJSON
 Spark-first design: for a **known target schema** (the normal warehouse
 case — fixed DDL at ``load_s3_files...handler.py:74-82``) we derive the
 wire-side schema mechanically, parse with ``from_json`` (JVM, codegen),
-and strip the type tags with pure column expressions — zero Python in the
-hot path, works at any scale. A row-level Python ``deserialize_item`` is
+and strip the type tags with one Spark SQL projection rendered as text
+(``_unwrap_sql``) — the JVM parses and analyzes it once, zero Python in
+the hot path, works at any scale. A row-level Python ``deserialize_item`` is
 kept for tests and for schema discovery on unknown payloads.
 """
 
 from __future__ import annotations
 
+import base64
 from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .sql_templates import quote_ident, quote_literal
 
 _NUMERIC = (
     T.ByteType,
@@ -71,53 +75,56 @@ def wire_schema_for(dt: T.DataType) -> T.DataType:
     return T.StructType([T.StructField("S", T.StringType(), True)])
 
 
-def _unwrap(col: Column, dt: T.DataType) -> Column:
-    """Strip the wire tag from ``col`` (typed per ``wire_schema_for``)."""
+def _unwrap_sql(expr: str, dt: T.DataType, depth: int = 0) -> str:
+    """Spark SQL text stripping the wire tag from ``expr`` (an SQL
+    expression typed per ``wire_schema_for(dt)``). Pure Python: the
+    whole projection is one string, parsed and analyzed once by the
+    JVM, instead of a Column tree built call by call over Py4J.
+    ``depth`` counts the enclosing ``transform`` lambdas so each one
+    binds its own variable name."""
     if isinstance(dt, T.StructType):
-        return F.when(
-            col.getField("M").isNotNull(),
-            F.struct(
-                *[
-                    _unwrap(col.getField("M").getField(f.name), f.dataType).alias(
-                        f.name
-                    )
-                    for f in dt.fields
-                ]
-            ),
-        )
+        m = f"{expr}.`M`"
+        fields = ", ".join(_unwrap_fields_sql(m, dt, depth))
+        return f"CASE WHEN {m} IS NOT NULL THEN struct({fields}) END"
     if isinstance(dt, T.ArrayType):
-        return F.transform(col.getField("L"), lambda x: _unwrap(x, dt.elementType))
+        x = f"_x{depth}"
+        inner = _unwrap_sql(x, dt.elementType, depth + 1)
+        return f"transform({expr}.`L`, {x} -> {inner})"
     if isinstance(dt, T.BooleanType):
-        return col.getField("BOOL")
+        return f"{expr}.`BOOL`"
     if isinstance(dt, _NUMERIC):
-        return col.getField("N").cast(dt)
+        return f"CAST({expr}.`N` AS {dt.simpleString()})"
     if isinstance(dt, T.BinaryType):
-        return F.unbase64(col.getField("B"))
-    return col.getField("S").cast(dt)
+        return f"unbase64({expr}.`B`)"
+    return f"CAST({expr}.`S` AS {dt.simpleString()})"
 
 
-def decode_dynamodb_json(json_col, target_schema: T.StructType) -> Column:
-    """Wire-typed JSON string column -> typed struct column.
+def _unwrap_fields_sql(expr: str, schema: T.StructType, depth: int = 0) -> list[str]:
+    """One ``_unwrap_sql`` term per field of ``schema``, each reading
+    ``expr``'s wire field of that name and aliased back to it."""
+    return [
+        f"{_unwrap_sql(f'{expr}.{quote_ident(f.name)}', f.dataType, depth)}"
+        f" AS {quote_ident(f.name)}"
+        for f in schema.fields
+    ]
+
+
+def decode_dynamodb_json(json_col: str, target_schema: T.StructType) -> Column:
+    """Wire-typed JSON string column (by name) -> typed struct column.
 
     JVM-only pipeline: ``from_json`` with the derived wire schema, then
-    tag-stripping expressions. Numeric leaves land as the target type via
-    string cast, which realizes the reference's Decimal->float policy
-    (T2) when the target type is double/float.
+    the tag-stripping SQL of ``_unwrap_sql``. Numeric leaves land as the
+    target type via string cast, which realizes the reference's
+    Decimal->float policy (T2) when the target type is double/float.
     """
-    col = F.col(json_col) if isinstance(json_col, str) else json_col
     wire_root = T.StructType(
         [
             T.StructField(f.name, wire_schema_for(f.dataType), True)
             for f in target_schema.fields
         ]
     )
-    parsed = F.from_json(col, wire_root)
-    return F.struct(
-        *[
-            _unwrap(parsed.getField(f.name), f.dataType).alias(f.name)
-            for f in target_schema.fields
-        ]
-    )
+    parsed = f"from_json({quote_ident(json_col)}, {quote_literal(wire_root.json())})"
+    return F.expr(f"struct({', '.join(_unwrap_fields_sql(parsed, target_schema))})")
 
 
 # ---------------------------------------------------------------------------
@@ -137,6 +144,8 @@ def deserialize_value(tagged: dict[str, Any]) -> Any:
         return int(f) if f.is_integer() else f
     if tag == "BOOL":
         return bool(v)
+    if tag == "B":
+        return base64.b64decode(v)
     if tag == "NULL":
         return None
     if tag == "M":
@@ -163,6 +172,8 @@ def serialize_value(value: Any) -> dict[str, Any]:
         return {"N": repr(value)}
     if isinstance(value, str):
         return {"S": value}
+    if isinstance(value, bytes):
+        return {"B": base64.b64encode(value).decode("ascii")}
     if isinstance(value, dict):
         return {"M": {k: serialize_value(v) for k, v in value.items()}}
     if isinstance(value, (list, tuple)):

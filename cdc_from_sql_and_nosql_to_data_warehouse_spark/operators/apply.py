@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .. import fsio
+from ..functions.sql_templates import quote_ident, quote_literal
 from ..sources.change_feed import VALID_OPS
 
 SEQ_COL = "_seq"
@@ -1173,7 +1174,8 @@ def _fence(
                     "probe), or opt into the lease (LOCK_LEASE_SECONDS) "
                     "for automatic recovery"
                 )
-            time.sleep(min(delay * (1.0 + random.random()), left))
+            # jitter stays under the cap: no sleep outlasts 2 s
+            time.sleep(min(delay * (0.5 + 0.5 * random.random()), left))
             delay = min(delay * 2.0, 2.0)
         if scope != "stamp":
             # no live table-scope holder but us -> no commit can be
@@ -1336,19 +1338,21 @@ def _canonical_seq_py(seq) -> str:
 _BAD_OP_MARKER = "unexpected change-event op"
 
 
-def _guarded_op(op: F.Column) -> F.Column:
-    """``op`` with the VALID_OPS check riding inline (round 12): every
-    evaluating job raises on an unknown op instead of a dedicated
-    pre-flight scan paying one extra pass per apply. NULL ops pass,
-    exactly as they passed the old three-valued ``~isin`` probe (the
-    mode filters downstream drop them). ``raise_error``'s message is
-    restored to the documented ValueError by ``_reraise_bad_op``."""
-    return F.when(
-        op.isNull() | op.isin(*VALID_OPS), op
-    ).otherwise(
-        F.raise_error(
-            F.concat(F.lit(_BAD_OP_MARKER + ": '"), op, F.lit("'"))
-        ).cast("string")
+def _guarded_op_sql(name: str) -> str:
+    """Spark SQL text of column ``name`` with the VALID_OPS check riding
+    inline (round 12): every evaluating job raises on an unknown op
+    instead of a dedicated pre-flight scan paying one extra pass per
+    apply. NULL ops pass, exactly as they passed the old three-valued
+    ``~isin`` probe (the mode filters downstream drop them).
+    ``raise_error``'s message is restored to the documented ValueError
+    by ``_reraise_bad_op``. One text serves both the apply paths
+    (through ``F.expr``) and the stream staging filter."""
+    op = quote_ident(name)
+    ops = ", ".join(quote_literal(o) for o in VALID_OPS)
+    head, tail = quote_literal(_BAD_OP_MARKER + ": '"), quote_literal("'")
+    return (
+        f"CASE WHEN {op} IS NULL OR {op} IN ({ops}) THEN {op} "
+        f"ELSE CAST(raise_error(concat({head}, {op}, {tail})) AS STRING) END"
     )
 
 
@@ -1774,7 +1778,7 @@ def apply_changes(
     # a bad op: the staged write dies BEFORE any commit point (staged
     # dirs/orphan versions are reader-invisible junk the next commit or
     # vacuum reclaims), so no committed state can carry poison rows.
-    changes = changes.withColumn("op", _guarded_op(F.col("op")))
+    changes = changes.withColumn("op", F.expr(_guarded_op_sql("op")))
     try:
         kind, parts, probed = _scope_for(
             changes, target_path, mode, propagate_deletes, partition_by
@@ -2200,7 +2204,7 @@ def apply_changes_bucketed(
     at table creation.
     """
     # inline op guard — same rationale and mechanics as apply_changes
-    changes = changes.withColumn("op", _guarded_op(F.col("op")))
+    changes = changes.withColumn("op", F.expr(_guarded_op_sql("op")))
     recover_bucketed_table(spark, table_name)
     incoming = changes if propagate_deletes else changes.filter(
         F.col("op") != "REMOVE"

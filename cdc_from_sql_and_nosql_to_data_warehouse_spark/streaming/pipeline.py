@@ -21,42 +21,40 @@ contract (file naming T4/T5, empty-batch markers K4, FIXTURES.md F5).
 
 from __future__ import annotations
 
-import glob
+import functools
 import os
-import shutil
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import fsio
 from ..config import EngineConfig
-from ..functions.dynamodb_json import _unwrap  # typed tag-stripping
-from ..operators.apply import _guarded_op, _reraise_bad_op, apply_changes
+from ..functions.dynamodb_json import _unwrap_fields_sql  # typed tag-stripping
+from ..operators.apply import _guarded_op_sql, _reraise_bad_op, apply_changes
 from ..sources.change_feed import read_dynamodb_stream, read_envelope_feed
 
 
 def decode_stream_records(records: DataFrame, after_schema: T.StructType) -> DataFrame:
-    """P2+P3+T1+T2 as one projection: filter INSERT/MODIFY, keep only the
-    NewImage, strip wire tags into typed columns, carry seq + event time.
+    """P2+P3+T1+T2 as one filter and one projection: raise on an
+    unknown eventName, keep INSERT/MODIFY, keep only the NewImage,
+    strip wire tags into typed columns, carry seq + event time.
 
-    All column expressions — JVM side, streaming-safe."""
-    kept = records.filter(F.col("eventName").isin("INSERT", "MODIFY"))
-    image = F.col("dynamodb.NewImage")
-    decoded = [
-        _unwrap(image.getField(f.name), f.dataType).alias(f.name)
-        for f in after_schema.fields
-    ]
-    return kept.select(
-        *decoded,
+    Both are Spark SQL text rendered in Python (``_guarded_op_sql``,
+    ``_unwrap_fields_sql``): JVM side, streaming-safe, and analyzed once
+    instead of assembled column by column over Py4J."""
+    return records.where(
+        f"({_guarded_op_sql('eventName')}) IN ('INSERT', 'MODIFY')"
+    ).selectExpr(
+        *_unwrap_fields_sql("`dynamodb`.`NewImage`", after_schema),
         # real DynamoDB sequence numbers run up to 40 digits — too wide
         # for long (silent null) and decimal(38,0). Zero-padding to the
         # wire-format max keeps them strings whose lexicographic order
         # equals numeric order, so max-seq latest-wins stays exact.
-        F.lpad(F.col("dynamodb.SequenceNumber"), 40, "0").alias("_seq"),
-        F.col("dynamodb.ApproximateCreationDateTime").alias("_ts_ms"),
+        "lpad(`dynamodb`.`SequenceNumber`, 40, '0') AS `_seq`",
+        "`dynamodb`.`ApproximateCreationDateTime` AS `_ts_ms`",
     )
 
 
@@ -70,6 +68,40 @@ def _parity_filename(n_records: int) -> str:
     if n_records:
         return f"{stamp}__{uuid.uuid4()}__{n_records}__inserted_or_modified_records.json"
     return f"{stamp}__{uuid.uuid4()}__0__no_inserted_or_modified_records.txt"
+
+
+def stage_batch(
+    batch: DataFrame, epoch_id: int, staging_dir: str, after_schema: T.StructType
+) -> None:
+    """Hop 1's ``foreachBatch`` body: one micro-batch -> one K3 staging
+    file named with its record count, or a 0-byte K4 marker when no
+    record survives the INSERT/MODIFY filter.
+
+    One Spark job: the op guard, decode and write are one pass, and the
+    record count rides an ``Observation`` on that write. An unknown
+    eventName fails the write (documented ValueError via
+    ``_reraise_bad_op``) before anything reaches ``staging_dir``."""
+    obs = Observation()
+    decoded = decode_stream_records(batch, after_schema).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    )
+    tmp = f"{staging_dir}__tmp_{epoch_id}_{uuid.uuid4().hex[:8]}"
+    try:
+        # single staging object per micro-batch = reference parity
+        decoded.coalesce(1).write.mode("overwrite").json(tmp)
+    except Exception as exc:
+        fsio.remove_tree(tmp)
+        _reraise_bad_op(exc)
+        raise
+    n = obs.get["n"]
+    dest = os.path.join(staging_dir, _parity_filename(n))
+    if n:
+        part = next(p for p in fsio.listdir(tmp) if p.startswith("part-"))
+        # the K8 file-handoff commit: one single-file move (fsio seam)
+        fsio.move(os.path.join(tmp, part), dest)
+    else:
+        fsio.atomic_write_text(dest, "")  # K4 marker
+    fsio.remove_tree(tmp)
 
 
 def run_stream_to_staging(
@@ -107,34 +139,12 @@ def run_stream_to_staging(
             .start()
         )
 
-    def stage_batch(batch: DataFrame, epoch_id: int) -> None:
-        # P2's raise-on-unknown guard rides inline in the checkpoint job:
-        # the batch is read once, and an unknown eventName fails it
-        guarded = batch.withColumn("eventName", _guarded_op(F.col("eventName")))
-        try:
-            decoded = decode_stream_records(guarded, after_schema).localCheckpoint(
-                eager=True  # micro-batch-sized; count + write share one eval
-            )
-        except Exception as exc:
-            _reraise_bad_op(exc)
-            raise
-        # filename count comes from the DataFrame, never from re-reading
-        # staged bytes through the driver
-        n = decoded.count()
-        name = _parity_filename(n)
-        if not n:
-            open(os.path.join(staging_dir, name), "w").close()  # K4 marker
-            return
-        tmp = f"{staging_dir}__tmp_{epoch_id}_{uuid.uuid4().hex[:8]}"
-        # single staging object per micro-batch = reference parity
-        decoded.coalesce(1).write.mode("overwrite").json(tmp)
-        parts = glob.glob(f"{tmp}/part-*.json") or glob.glob(f"{tmp}/part-*")
-        # the K8 file-handoff commit: one single-file move (fsio seam)
-        fsio.move(parts[0], os.path.join(staging_dir, name))
-        shutil.rmtree(tmp, ignore_errors=True)
-
     return (
-        records.writeStream.foreachBatch(stage_batch)
+        records.writeStream.foreachBatch(
+            functools.partial(
+                stage_batch, staging_dir=staging_dir, after_schema=after_schema
+            )
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -570,3 +570,34 @@ def test_fence_wait_is_bounded_by_deadline(spark, tmp_path, monkeypatch):
             with pytest.raises(ConcurrentWriteError):
                 compete()
             assert time.monotonic() - t0 >= 0.5, scope
+
+
+def test_fence_backoff_sleeps_stay_under_cap(tmp_path, monkeypatch):
+    """Each backoff sleep of a blocked fence stays within the 2 s cap,
+    jitter included, so a waiter never idles long after the holder has
+    released. Time is simulated: ``time.sleep`` records each request
+    and advances a fake ``time.monotonic`` by it, and ``random.random``
+    returns its worst case, so the whole FENCE_WAIT_SECONDS wait runs
+    at once and the sleeps are the same on every run."""
+    import random
+    import time
+
+    clock = [0.0]
+    slept: list[float] = []
+
+    def fake_sleep(s):
+        slept.append(s)
+        clock[0] += s
+
+    wh = str(tmp_path / "wh_backoff")
+    with A._fence(wh, "table"):
+        monkeypatch.setattr(time, "monotonic", lambda: clock[0])
+        monkeypatch.setattr(time, "sleep", fake_sleep)
+        monkeypatch.setattr(random, "random", lambda: 1.0)
+        with pytest.raises(ConcurrentWriteError):
+            with A._fence(wh, "table"):
+                pass
+        monkeypatch.undo()
+    assert sum(slept) == pytest.approx(A.FENCE_WAIT_SECONDS)
+    assert max(slept) == 2.0  # the cap is reached, never passed
+    assert all(s <= 2.0 for s in slept), slept

@@ -113,6 +113,86 @@ def test_unknown_stream_event_fails_staging_and_stages_nothing(spark, tmp_path):
     assert os.listdir(staging) == []
 
 
+def test_unknown_stream_event_fails_plain_sink_staging(spark, tmp_path):
+    """P2's raise guard holds on the ``parity_naming=False`` path too:
+    the plain JSON sink's query fails on an unknown eventName instead
+    of silently dropping it."""
+    cfg = EngineConfig()
+    feed = str(tmp_path / "feed")
+    t0 = make_trade(0)
+    write_stream_records_file(
+        feed, "b1.json", [("INSERT", t0, 1), ("TRUNCATE", t0, 2)]
+    )
+    q = run_stream_to_staging(
+        spark, cfg, feed, str(tmp_path / "staging"), str(tmp_path / "ck"),
+        TRADE_SCHEMA, parity_naming=False,
+    )
+    with pytest.raises(Exception, match="unexpected change-event op"):
+        q.awaitTermination(120)
+
+
+def test_poisoned_batch_leaves_no_tmp_sibling(spark, tmp_path):
+    """The staging write of a batch that fails the op guard is removed:
+    no ``{staging}__tmp_*`` directory outlives the failed query."""
+    feed = str(tmp_path / "feed")
+    staging = str(tmp_path / "staging")
+    t0 = make_trade(0)
+    write_stream_records_file(
+        feed, "b1.json", [("INSERT", t0, 1), ("TRUNCATE", t0, 2)]
+    )
+    q = run_stream_to_staging(
+        spark, EngineConfig(), feed, staging, str(tmp_path / "ck"), TRADE_SCHEMA
+    )
+    with pytest.raises(Exception, match="unexpected change-event op"):
+        q.awaitTermination(120)
+    assert glob.glob(f"{staging}__tmp_*") == []
+
+
+def test_stage_batch_runs_one_job(spark, tmp_path):
+    """Hop 1's per-batch function stages a micro-batch in one Spark job:
+    the record count for the K3 name rides the write itself. A batch
+    with no INSERT/MODIFY record costs the same one job and leaves the
+    K4 marker."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.sources.change_feed import (
+        read_dynamodb_stream,
+    )
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.streaming.pipeline import (
+        stage_batch,
+    )
+
+    from .fixtures import run_counting_jobs
+
+    staging = str(tmp_path / "staging")
+    os.makedirs(staging)
+    t0, t1, t2 = make_trade(0), make_trade(1), make_trade(2)
+    write_stream_records_file(
+        str(tmp_path / "f1"), "b.json",
+        [("INSERT", t0, 1), ("MODIFY", t1, 2), ("REMOVE", {"id": t2["id"]}, 3)],
+    )
+    write_stream_records_file(
+        str(tmp_path / "f2"), "b.json", [("REMOVE", {"id": t2["id"]}, 4)]
+    )
+    for epoch, feed, want in ((0, "f1", 2), (1, "f2", 0)):
+        batch = read_dynamodb_stream(
+            spark, str(tmp_path / feed), TRADE_SCHEMA, streaming=False
+        )
+        _, jobs = run_counting_jobs(
+            spark, lambda: stage_batch(batch, epoch, staging, TRADE_SCHEMA)
+        )
+        assert jobs == 1, (feed, jobs)
+        names = [f for f in os.listdir(staging) if f"__{want}__" in f]
+        assert len(names) == 1, os.listdir(staging)
+        if want:
+            with open(os.path.join(staging, names[0])) as f:
+                assert sorted(json.loads(x)["id"] for x in f) == sorted(
+                    [t0["id"], t1["id"]]
+                )
+        else:
+            assert names[0].endswith("__no_inserted_or_modified_records.txt")
+            assert os.path.getsize(os.path.join(staging, names[0])) == 0
+    assert glob.glob(f"{staging}__tmp_*") == []
+
+
 def test_envelope_apply_collapsed_upsert(spark, tmp_path):
     cfg = EngineConfig(apply_mode="upsert", propagate_deletes=True)
     feed = str(tmp_path / "feed")
