@@ -38,6 +38,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.plans import QUERIES
+from cdc_from_sql_and_nosql_to_data_warehouse_spark.session import driver_memory
 
 # Representative slice of SURVEY.md §2: scan+agg, joins, windows,
 # rollup/cube, set ops, as-of, event-time rollup, CDC apply modes, and
@@ -113,9 +114,8 @@ def main() -> None:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # runtime-size-based, so scale-safe (see session.py)
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-        # local mode: driver == executor; match the session factory's
-        # shipped default so 32 threads of shuffle/persist don't GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # local mode: driver == executor; the session factory's default
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -167,8 +167,10 @@ def main() -> None:
     # sf0.1) — compile time is a property of the JVM, not the engine, so
     # it belongs in warmup. The tiny corpus makes the data cost of this
     # pass negligible while compiling the same generated classes.
+    # (skipped when the timed SF IS the tiny one: the pass would only
+    # repeat the cold run below)
     warm_sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if os.path.isdir(warm_sf):
+    if os.path.isdir(warm_sf) and not os.path.samefile(warm_sf, sf_dir):
         for name in HEADLINE:
             try:
                 QUERIES[name](spark, warm_sf).write.format("noop").mode(

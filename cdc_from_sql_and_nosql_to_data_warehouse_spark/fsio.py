@@ -2,8 +2,8 @@
 
 Every piece of engine coordination state (writer locks, schema
 manifests, stats sidecars, compaction-horizon and feed-offset markers,
-the staging/old table-swap protocol) ultimately needs only FOUR
-storage primitives. The operator modules used to call ``os.*``
+the version pointer every whole-table commit flips) ultimately needs
+only FOUR storage primitives. The operator modules used to call ``os.*``
 directly at ~20 sites, welding the POSIX assumption into each; this
 module is the single seam an object-store port swaps out. Data-plane
 I/O (parquet reads/writes, file listing for scans) stays with Spark
@@ -33,14 +33,8 @@ primitive              object-store mapping
                        S3/GCS/ADLS today.
 ``remove`` / ``move``  ``DELETE``; and for ``move``: object stores
                        have NO atomic rename — single-FILE moves
-                       become copy+delete (used only in the lock
-                       adoption dance, where the create_exclusive
-                       CAS, not the rename, carries the atomicity),
-                       while the DIRECTORY swap (``_swap_into``)
-                       must become a transaction-log commit (Delta/
-                       Iceberg metadata pointer flip) rather than a
-                       physical move. ``move`` callers are annotated
-                       accordingly.
+                       become copy+delete (see ``move``), and no
+                       whole-table commit moves a directory.
 =====================  ==========================================
 
 Reference tie: the reference delegates all of this to managed services
@@ -149,9 +143,8 @@ def move(src: str, dst: str) -> None:
     dance doesn't: exactly-one-adopter comes from the rename-away of a
     uniquely-named source, which copy+delete-if-source-matches can
     emulate, and the final re-create rides ``create_exclusive``'s CAS).
-    For DIRECTORIES (the table swap) there is no equivalent at all —
-    that call site becomes a transaction-log pointer flip on a
-    lakehouse format, as its docstring notes."""
+    Whole-table commits flip a version pointer instead of moving a
+    directory."""
     os.rename(src, dst)
 
 

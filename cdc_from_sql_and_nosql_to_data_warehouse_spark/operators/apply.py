@@ -29,8 +29,8 @@ upsert of a deleted key would resurrect it unopposed.
 
 Scale: the merge is one shuffle on the key (window row_number), the same
 plan a Delta/Iceberg MERGE generates for the matched path. On plain
-parquet the rewritten table is swapped in via directory rename; on a
-real lakehouse this function body is `MERGE INTO` — semantics identical.
+parquet the rewritten table commits as a new version behind a pointer
+(below); on a real lakehouse this is `MERGE INTO` — semantics identical.
 """
 
 from __future__ import annotations
@@ -68,17 +68,13 @@ KEY_COL = "_key"
 # Sidecar marker files every table swap carries over (see _swap_into):
 # underscore-prefixed so Spark's listing never sees them as data.
 # Carrying _file_stats.json keeps "this table maintains skipping stats"
-# durable across rewrites; the carried copy is STALE (a swap renames
-# every data file, so its entries go conservatively dead — unknown
-# files are always read) until maintenance refreshes it
-# (layout.refresh_file_stats, invoked by the compaction ops).
+# durable across rewrites; the carried copy is STALE (a swap writes new
+# data files, so its entries go conservatively dead — unknown files are
+# always read) until maintenance refreshes it (layout.refresh_file_stats).
 # _agg_through_seq is sync_aggregate's change-feed offset (see
 # incremental.AGG_THROUGH_MARKER) — it must survive ANY swap of the
-# aggregate table (e.g. compact_parquet on agg_path), or a later drain
-# silently degrades to a full recompute. _table_schema.json is the
-# write-time schema manifest (see SCHEMA_MANIFEST below); _swap_into
-# re-stamps it FRESH from the written frame, so the carry here only
-# matters for swap paths that bypass _swap_into.
+# aggregate table, or a later drain degrades to a full recompute.
+# _table_schema.json is re-stamped fresh by every swap.
 _SIDECAR_MARKERS = (
     "_history_horizon",
     "_file_stats.json",
@@ -88,63 +84,47 @@ _SIDECAR_MARKERS = (
 
 # --- Version-pointer table layout: the object-store commit -----------------
 #
-# ``_swap_into`` used to replace a table by two directory renames — a
-# primitive object stores do not have (S3/GCS/ADLS renames are
-# copy+delete per key, non-atomic). The pointer layout removes the last
-# POSIX-only dependency from the engine's commit path: a swapped table's
-# root holds a ``_current`` control file naming the live version
-# directory (``v_<counter>_<hex>``), and a commit is (1) write the new
-# fileset into a fresh version dir, (2) atomically replace ``_current``
-# (one PUT on an object store — fsio.atomic_write_text), (3) garbage-
-# collect superseded versions past a grace period. Readers resolve the
-# pointer through ``table_data_dir`` — they see the old version or the
-# new one, never a mix, and never depend on a rename. This is the same
-# shape as a Delta/Iceberg metadata-pointer flip, reduced to the one
-# bit of state plain parquet needs (reference tie: the reference's
-# warehouse handoff lives entirely on S3 objects written once,
+# Every whole-table commit — ``_swap_into`` for path tables,
+# ``_commit_bucketed`` for bucketed catalog tables — uses one protocol
+# with no directory rename (object stores have none): the table root
+# holds a ``_current`` control file naming the live version directory
+# (``v_<counter>_<hex>``), and a commit is (1) write the new fileset into
+# a fresh version dir, (2) atomically replace ``_current`` (one PUT on an
+# object store — fsio.atomic_write_text), (3) garbage-collect superseded
+# versions past a grace period, all under the table fence. Readers
+# resolve the pointer through ``table_data_dir`` and see the old version
+# or the new one, never a mix: a Delta/Iceberg metadata-pointer flip,
+# reduced to the one bit of state plain parquet needs (the reference's
+# warehouse handoff likewise lives on S3 objects written once,
 # load_s3_files_from_dynamodb_stream_to_redshift_lambda/handler.py:96).
 #
-# Tables are born in the LEGACY layout (data files at the root):
-# blind appends and dynamic partition overwrites are already
-# object-store-native (new keys / per-partition commit), so only the
-# first whole-table swap upgrades a table to the pointer layout.
-# ``table_data_dir`` returns the root unchanged for legacy tables, so
-# every reader works on both layouts.
+# Tables are born in the LEGACY layout (data files at the root): blind
+# appends and dynamic partition overwrites are object-store-native
+# already, so the first whole-table commit upgrades a table. Readers
+# work on both layouts (``table_data_dir`` returns a legacy root as is).
 CURRENT_POINTER = "_current"
 _VERSION_PREFIX = "v_"
 
-# Commit LOG beside the pointer: one version name per line, appended
-# (under the table fence every swap already holds) right after each
-# pointer flip. The log is what makes a non-current version dir
-# INTERPRETABLE — without it, a superseded committed version and an
-# aborted commit's orphan staging are indistinguishable on disk, so
-# version-pinned reads could expose data that was never committed.
-# Committed set = log entries ∪ {current pointer} (a crash between
-# flip and log append loses only that version's log line; the pointer
-# itself always proves the CURRENT version committed). With
-# ``VERSION_GC_GRACE_SECONDS`` > 0 this is Delta-style ``VERSION AS
-# OF`` in miniature: superseded versions stay readable until the
-# grace-bounded GC collects them.
+# Commit LOG beside the pointer, one version name per line, rewritten
+# by every flip (``_flip_pointer``). It tells a superseded committed
+# version from an aborted commit's orphan, which look alike on disk, so
+# version-pinned reads never expose uncommitted data. Committed set =
+# log entries ∪ {current pointer}. With ``VERSION_GC_GRACE_SECONDS`` > 0
+# this is ``VERSION AS OF`` in miniature.
 VERSIONS_LOG = "_versions"
 
 # Superseded version dirs (and, after an upgrade commit, legacy root
-# files) younger than this many seconds survive the commit-time GC so
-# in-flight readers that resolved the old pointer can finish their
-# scan. Readers PIN a version at plan time (``read_warehouse`` /
-# ``read_changes`` resolve the pointer exactly once and plan against
-# that version dir), so this grace is what makes the pin SAFE: a
-# commit that lands between a reader's plan and its collect must not
-# delete the planned fileset out from under it. The default (10
-# minutes) covers any scan the swap-maintained table shapes run —
-# whole-table swaps are the small/medium-table commit path; huge
-# tables take appends/partition overwrites, which never GC — and is
-# deliberately above one maintenance cadence. The retention trade
-# (Delta's VACUUM knob, in miniature): a table swapped every T seconds
-# retains ~grace/T superseded copies, so a swap-per-micro-batch table
-# pays grace/trigger x its (small) size in storage; raise the grace
-# for longer time travel (``read_warehouse_version``), lower it — or
-# zero it, the pre-round-10 behavior — only where no reader can
-# outlive a commit.
+# files) younger than this many seconds survive the commit-time GC.
+# Readers PIN a version at plan time (they resolve the pointer once,
+# and a bucketed catalog entry names one version dir), so the grace is
+# what makes the pin safe: a commit landing between a reader's plan and
+# its collect must not delete the planned fileset. Whole-table commits
+# are the small/medium-table path (huge tables take appends/partition
+# overwrites, which never GC), and 10 minutes is above one maintenance
+# cadence. The retention trade (Delta's VACUUM knob): a table committed
+# every T seconds keeps ~grace/T superseded copies. Raise it for longer
+# time travel (``read_warehouse_version``); lower it only where no
+# reader can outlive a commit.
 VERSION_GC_GRACE_SECONDS: float = 600.0
 
 
@@ -1489,24 +1469,16 @@ def _swap_into(
     partition_by: list[str] | None = None,
     extra_files: dict[str, str] | None = None,
 ) -> None:
-    """Materialize df, then commit it as the table's next VERSION via
-    the pointer flip (parquet has no MERGE; this is the plain-parquet
-    reduction of a lakehouse transaction-log commit).
-
-    Protocol: (1) write the new fileset into a fresh
-    ``{target_path}/v_<counter>_<hex>`` directory, sidecar markers
-    included, (2) atomically replace the ``_current`` pointer
-    (``fsio.atomic_write_text`` — one conditional-free PUT on an
-    object store; readers resolving through ``table_data_dir`` see the
-    old version or the new, never a mix), (3) GC superseded versions
-    past ``VERSION_GC_GRACE_SECONDS``. No step renames a directory, so
-    the commit runs unchanged on stores with no atomic rename. A crash
-    before (2) leaves an orphan version dir the next commit's GC
-    removes — the table still serves its previous version, and the
-    replayed batch re-merges convergently; a crash after (2) only
+    """Materialize df, then commit it as the table's next VERSION (the
+    pointer protocol above; parquet has no MERGE, so this is the
+    plain-parquet reduction of a lakehouse transaction-log commit):
+    write the fileset, sidecar markers included, into a fresh version
+    dir, flip the pointer (``_flip_pointer``), GC superseded versions.
+    A crash before the flip leaves an orphan the next commit's GC
+    removes while the table serves its previous version, and the
+    replayed batch re-merges convergently; a crash after it only
     defers the GC. The first swap of a legacy (root-layout) table
-    upgrades it: the new version commits beside the legacy files,
-    which become superseded state the GC clears."""
+    upgrades it: the legacy files become superseded state."""
     src = table_data_dir(target_path)
     ver = _next_version_name(target_path)
     tmp = os.path.join(target_path, ver)
@@ -1514,12 +1486,9 @@ def _swap_into(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
-    # underscore-prefixed sidecar files (markers a table carries along,
-    # e.g. the history-compaction horizon) land in the version dir
-    # BEFORE the pointer flip so a crash in the commit window cannot
-    # separate the data from its marker; markers already on the table
-    # survive any swap (a file-size compaction must not erase the
-    # horizon)
+    # sidecar markers land in the version dir BEFORE the flip, so a
+    # crash cannot separate data from marker, and markers on the table
+    # survive any swap (a compaction must not erase the horizon)
     carried = dict(extra_files or {})
     for fname in _SIDECAR_MARKERS:
         if fname not in carried:
@@ -1527,85 +1496,56 @@ def _swap_into(
             if content is not None:
                 carried[fname] = content
     # the swap replaces the WHOLE table with df, so the schema manifest
-    # is re-stamped fresh from the written frame (a carried copy would
-    # go stale the moment a swap narrowed or evolved the schema)
+    # is re-stamped fresh from the written frame
     carried[SCHEMA_MANIFEST] = _nullable_schema(df.schema).json()
     for fname, content in carried.items():
         fsio.atomic_write_text(os.path.join(tmp, fname), content)
-    # fileset manifest (operators/fileset.py): record the version's
-    # file list IN the commit, before the pointer flip — cold reads of
-    # a served version then plan from the manifest (Spark's
-    # MetadataLogFileIndex, zero per-file storage calls) instead of
-    # recursively LISTing the version dir, and later blind appends
-    # extend it one batch entry at a time.
+    # the fileset manifest (operators/fileset.py) records the version's
+    # file list in the commit: cold reads plan from it instead of
+    # LISTing, and later blind appends extend it batch by batch
     from . import fileset
 
     fileset.write_base(tmp)
     if os.path.abspath(src) == os.path.abspath(target_path):
-        # legacy->pointer UPGRADE: the root itself was the fileset and
-        # (since manifests-from-birth, round 11) may carry a root-level
-        # _spark_metadata. Retire it BEFORE the flip: after the flip it
-        # would describe a superseded fileset while still sitting at
-        # the path raw file streams watch — Spark's file source would
-        # detect it (sourceHasMetadata) and plan the STALE file list
-        # forever, silently starving the stream of every post-upgrade
-        # append. Pre-flip removal only degrades concurrent legacy
-        # readers to the LIST walk (correct); a crash here leaves a
-        # manifest-less legacy table (correct) and the replayed swap
-        # finishes the upgrade.
+        # legacy->pointer UPGRADE: retire the root's _spark_metadata
+        # BEFORE the flip. After it the log would describe a superseded
+        # fileset at the path raw file streams watch, and Spark's file
+        # source would plan that stale list forever. A crash here leaves
+        # a manifest-less legacy table; the replayed swap finishes.
         fileset.invalidate(src)
-    fsio.atomic_write_text(
-        os.path.join(target_path, CURRENT_POINTER), ver
-    )
-    # commit log append — read-modify-write is safe here because every
-    # _swap_into caller holds the table fence; a crash between the flip
-    # above and this write only loses THIS version's log line (the
-    # pointer itself proves the current version committed, so the
-    # committed set stays sound — see VERSIONS_LOG). Entries whose
-    # fileset the grace-bounded GC already collected are PRUNED on the
-    # way: they are unreadable regardless, and an unpruned log would
-    # grow one line per swap forever — O(commits^2) total rewrite cost
-    # on a table swapped every micro-batch. The log therefore holds
-    # exactly the readable history (retained versions), which is what
-    # VERSION AS OF needs. The PRIOR pointer value is reconciled back
-    # in even when its log line is missing (a crash between a previous
-    # flip and ITS log append lost only that line): while it was
-    # current the pointer proved it committed, and pruning the rebuilt
-    # log from prior lines alone would otherwise permanently drop a
-    # genuinely committed, still-retained version from
-    # ``committed_versions`` the moment it is superseded.
-    log_path = os.path.join(target_path, VERSIONS_LOG)
-    prior_log = fsio.read_text(log_path) or ""
-    prior_lines = [
-        ln.strip() for ln in prior_log.splitlines() if ln.strip()
-    ]
-    prior_ver = os.path.basename(src) if src != target_path else None
-    if prior_ver and prior_ver not in prior_lines:
-        prior_lines.append(prior_ver)
-    keep_lines = [
-        ln
-        for ln in prior_lines
-        if ln != ver and fsio.isdir(os.path.join(target_path, ln))
-    ]
-    fsio.atomic_write_text(
-        log_path, "".join(ln + "\n" for ln in keep_lines) + ver + "\n"
-    )
+    _flip_pointer(target_path, ver, src)
     _gc_superseded(target_path, ver)
 
 
-def _recover_swap(target_path: str) -> bool:
-    """Crash recovery at the start of every apply/compact/read.
+def _flip_pointer(root: str, ver: str, prior: str) -> None:
+    """The commit point of every whole-table commit: atomically replace
+    ``_current`` with the fully written version ``ver``, then rewrite
+    the commit log (``VERSIONS_LOG``; read-modify-write is safe under
+    the table fence every caller holds). A crash between the two loses
+    only ``ver``'s log line, which the pointer itself proves. The log
+    keeps only versions whose fileset the GC has not collected — the
+    readable history ``VERSION AS OF`` needs, not one line per commit
+    forever — and takes ``prior`` (the data dir the pointer named
+    before) back in, in case an earlier crash lost its line."""
+    fsio.atomic_write_text(os.path.join(root, CURRENT_POINTER), ver)
+    log_path = os.path.join(root, VERSIONS_LOG)
+    raw = fsio.read_text(log_path) or ""
+    lines = [ln.strip() for ln in raw.splitlines() if ln.strip()]
+    if prior != root and os.path.basename(prior) not in lines:
+        lines.append(os.path.basename(prior))
+    keep = [
+        ln for ln in lines if ln != ver and fsio.isdir(os.path.join(root, ln))
+    ]
+    fsio.atomic_write_text(log_path, "".join(ln + "\n" for ln in keep + [ver]))
 
-    Pointer-layout tables need NONE: the ``_current`` pointer is
-    replaced atomically after the version dir is fully written, so
-    every crash window leaves the table serving a complete version
-    (orphan stagings are junk the next commit GCs). What remains is
-    recovery for tables last written by the PRE-POINTER protocol (two
-    directory renames): if the table directory is missing, adopt the
-    newest fully-written ``__staging_*`` sibling (its ``_SUCCESS``
-    marker proves the write committed before the old table was moved
-    aside) or, failing that, restore the newest ``__old_*``. Returns
-    True if a recovery rename happened."""
+
+def _recover_swap(target_path: str) -> bool:
+    """Crash recovery at the start of every apply/compact/read, for
+    tables last written by the PRE-POINTER protocol (two directory
+    renames; pointer tables need none): if the table directory is
+    missing, adopt the newest ``__staging_*`` sibling whose
+    ``_SUCCESS`` proves its write committed, else restore the newest
+    ``__old_*``. Returns True if a recovery rename happened."""
     import glob as _glob
 
     if fsio.read_text(os.path.join(target_path, CURRENT_POINTER)) is not None:
@@ -1615,7 +1555,7 @@ def _recover_swap(target_path: str) -> bool:
         for p in _glob.glob(f"{target_path}__old_*") + _glob.glob(
             f"{target_path}__staging_*"
         ):
-            shutil.rmtree(p, ignore_errors=True)
+            fsio.remove_tree(p)
 
     if os.path.exists(target_path):
         return False
@@ -2177,7 +2117,7 @@ def apply_changes_bucketed(
     n_buckets: int = 32,
     propagate_deletes: bool = False,
 ) -> None:
-    """Upsert one envelope batch into a BUCKETED managed table.
+    """Upsert one envelope batch into a BUCKETED warehouse table.
 
     Same latest-wins / replay-convergent semantics as ``apply_changes``
     (mode="upsert"), but the warehouse table is persisted hash-bucketed
@@ -2190,84 +2130,148 @@ def apply_changes_bucketed(
     files-per-bucket stays 1 — the small-file compaction the append
     path needs (``maintenance.compact_parquet``) never arises here.
 
-    Swap protocol: the merge is written to ``{table}__staged`` first,
-    then swapped in via DROP + catalog rename. The swap is NOT atomic:
-    between the DROP and the RENAME there is a brief window where a
-    concurrent reader sees no table, and a crash inside that window
-    leaves the warehouse table missing with the fully-committed merge
-    stranded in ``__staged``. Crash recovery is automatic: the next
-    apply (or ``recover_bucketed_table``) detects the orphaned staged
-    table and adopts it before merging. (On a lakehouse this whole
-    function is ``MERGE INTO`` over a bucket-transformed table, which
-    makes the swap transactional.) ``bucket_cols`` must be after-image
-    columns; as with every bucketed layout, the bucket count is fixed
-    at table creation.
-    """
+    Each batch is one fenced pointer commit (``_commit_bucketed``):
+    readers see the old version or the new one, concurrent applies
+    serialize, and a session without the catalog entry (a restart, a
+    ``DROP TABLE``) resumes from the committed state. ``bucket_cols``
+    must be after-image columns; a ``bucket_cols``/``n_buckets`` other
+    than the registered table's raises ValueError."""
     # inline op guard — same rationale and mechanics as apply_changes
     changes = changes.withColumn("op", F.expr(_guarded_op_sql("op")))
-    recover_bucketed_table(spark, table_name)
     incoming = changes if propagate_deletes else changes.filter(
         F.col("op") != "REMOVE"
     )
     incoming = incoming.select(
         "key", "op", "after", _canonical_seq(F.col("seq")).alias("seq")
     )
-    # one max-seq window total — see _apply_changes_locked's upsert note
-    if spark.catalog.tableExists(table_name):
-        merged = _merge_latest(incoming, _lift_stored(spark.table(table_name), key))
-    else:
-        merged = latest_per_key(incoming, "key", "seq")
-    result = _stored_form(merged, key, propagate_deletes)
 
-    from .maintenance import write_bucketed
+    def next_state(current: DataFrame | None) -> DataFrame:
+        # one max-seq window total — see _apply_changes_locked's upsert note
+        if current is None:
+            merged = latest_per_key(incoming, "key", "seq")
+        else:
+            merged = _merge_latest(incoming, _lift_stored(current, key))
+        return _stored_form(merged, key, propagate_deletes)
 
     try:
-        swap_staged_table(
-            spark,
-            table_name,
-            lambda staged: write_bucketed(
-                result, staged, bucket_cols, n_buckets=n_buckets, sort_cols=bucket_cols
-            ),
-        )
+        _commit_bucketed(spark, table_name, bucket_cols, n_buckets, next_state)
     except Exception as exc:
         _reraise_bad_op(exc)
         raise
 
 
-def swap_staged_table(spark: SparkSession, table_name: str, write_staged) -> None:
-    """The managed-table swap protocol shared by ``apply_changes_bucketed``
-    and ``maintenance.vacuum_tombstones_table``: write the next state to
-    ``{table}__staged`` (via ``write_staged(staged_name)``), then DROP +
-    RENAME it into place. The window between the DROP and the RENAME is
-    the one ``recover_bucketed_table`` repairs — keeping the sequence in
-    one place keeps that recovery contract from silently diverging
-    between call sites."""
-    staged = f"{table_name}__staged"
-    spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    write_staged(staged)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    spark.sql(f"ALTER TABLE {staged} RENAME TO {table_name}")
+def _local_path(uri: str) -> str:
+    """A catalog location URI (``file:/a%20b``) as a local path."""
+    from urllib.parse import unquote, urlparse
+
+    p = urlparse(uri)
+    return os.path.normpath(unquote(p.path) if p.scheme == "file" else uri)
 
 
-def recover_bucketed_table(spark: SparkSession, table_name: str) -> bool:
-    """Adopt an orphaned ``{table}__staged`` left by a crash inside the
-    DROP→RENAME swap window of ``apply_changes_bucketed``.
+def _commit_bucketed(
+    spark: SparkSession,
+    table_name: str,
+    bucket_cols: list[str],
+    n_buckets: int,
+    next_state,
+) -> None:
+    """The one commit of a bucketed table (``apply_changes_bucketed``,
+    ``maintenance.vacuum_tombstones_table``): a pointer-layout root at
+    the table's default catalog path, committed under its table fence.
+    Serve the committed state, compute ``next_state(current)`` (None:
+    nothing to commit), write it as a bucketed external table into a
+    fresh version dir through the scratch registration ``{t}__next``
+    (dropped right after, keeping its files), flip ``_current``,
+    re-point the catalog entry, GC superseded versions. A crash before
+    the flip leaves the old version served and an orphan the GC
+    collects; after it, a stale catalog entry the next commit
+    re-points. A replayed batch converges either way."""
+    jss = spark._jsparkSession
+    ident = jss.sessionState().sqlParser().parseTableIdentifier(table_name)
+    root = _local_path(jss.sessionState().catalog().defaultTablePath(ident).toString())
+    spec = (bucket_cols, n_buckets)
+    with _fence(root, "table"):
+        current = _serve_bucketed(spark, table_name, root, spec)
+        df = next_state(current)
+        if df is None:
+            return
+        prior, ver = table_data_dir(root), _next_version_name(root)
+        vdir = os.path.join(root, ver)
+        df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).sortBy(
+            *bucket_cols
+        ).option("path", vdir).saveAsTable(f"{table_name}__next", format="parquet")
+        spark.sql(f"DROP TABLE {table_name}__next")
+        _flip_pointer(root, ver, prior)
+        have = None if current is None else current.columns
+        _point_catalog(spark, table_name, vdir, df.schema, have, spec)
+        _gc_superseded(root, ver)
 
-    Safe by construction: a staged table is only registered in the
-    catalog once its CTAS write committed, and the warehouse table is
-    only missing if the previous apply got past its DROP — at which
-    point the staged table held the complete next state. If the
-    warehouse table still exists, an existing ``__staged`` is a stale
-    pre-swap leftover of unknown vintage and is left for the next
-    apply's ``DROP TABLE IF EXISTS`` to clear. Returns True if a
-    recovery rename happened."""
-    staged = f"{table_name}__staged"
-    if spark.catalog.tableExists(staged) and not spark.catalog.tableExists(
-        table_name
-    ):
-        spark.sql(f"ALTER TABLE {staged} RENAME TO {table_name}")
-        return True
-    return False
+
+def _serve_bucketed(spark, table_name, root, spec) -> DataFrame | None:
+    """Point this session's catalog entry at the committed state under
+    ``root`` and return that state (None: no table yet). ``_current``
+    is the durable truth and the entry only a per-session view of it:
+    a missing entry (a restart, a ``DROP TABLE``) is created, a stale
+    one (another session committed) re-pointed. A pointer-less root is
+    a managed table written before the pointer layout, served from its
+    files; a still-registered MANAGED entry is detached from them first
+    (re-pointed at an empty path, then dropped), so no later ``DROP
+    TABLE`` deletes committed versions."""
+    from pyspark.sql.types import StructType
+
+    data, have = table_data_dir(root), None
+    if spark.catalog.tableExists(table_name):
+        info = {
+            r[0]: r[1]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
+        }
+        cols = info.get("Bucket Columns", "[]").strip("[]").split(",")
+        got = ([c.strip(" `") for c in cols if c.strip()], int(info.get("Num Buckets", -1)))
+        if ([c.lower() for c in got[0]], got[1]) != ([c.lower() for c in spec[0]], spec[1]):
+            raise ValueError(
+                f"{table_name} is bucketed by {got[0]} into {got[1]} "
+                f"buckets, not by {spec[0]} into {spec[1]}"
+            )
+        if info["Type"] == "MANAGED":
+            detach = quote_literal(os.path.join(root, "_detached"))
+            spark.sql(f"ALTER TABLE {table_name} SET LOCATION {detach}")
+            spark.sql(f"DROP TABLE {table_name}")
+        elif _local_path(info["Location"]) == data:
+            return spark.table(table_name)
+        else:
+            have = spark.table(table_name).columns
+    exists = _table_exists(data)
+    if have is None and not exists:
+        return None
+    schema = spark.read.parquet(data).schema if exists else StructType()
+    _point_catalog(spark, table_name, data, schema, have, spec)
+    return spark.table(table_name)
+
+
+def _point_catalog(spark, table_name, location, schema, have, spec) -> None:
+    """Register ``table_name`` as an external bucketed table over
+    ``location`` (``have`` None), or re-point the entry whose columns
+    are ``have`` there, adding the columns ``schema`` evolved."""
+    from pyspark.sql.types import StructType
+
+    have = {c.lower() for c in have or ()}
+    added = [f for f in schema.fields if f.name.lower() not in have]
+    ddl = ""
+    if added:
+        js = _nullable_schema(StructType(added)).json()
+        ddl = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(js).toDDL()
+    where = quote_literal(location)
+    if not have:
+        # Spark refuses a bucket spec without an explicit column list
+        cols = ", ".join(quote_ident(c) for c in spec[0])
+        spark.sql(
+            f"CREATE TABLE {table_name} ({ddl}) USING parquet CLUSTERED BY "
+            f"({cols}) SORTED BY ({cols}) INTO {spec[1]} BUCKETS LOCATION {where}"
+        )
+        return
+    if added:
+        spark.sql(f"ALTER TABLE {table_name} ADD COLUMNS ({ddl})")
+    spark.sql(f"ALTER TABLE {table_name} SET LOCATION {where}")
 
 
 def _reader_view(df: DataFrame, with_seq: bool) -> DataFrame:

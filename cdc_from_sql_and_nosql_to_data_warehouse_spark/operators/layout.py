@@ -1025,7 +1025,7 @@ def read_skipping(
 def refresh_file_stats(spark: SparkSession, path: str) -> dict | None:
     """Re-collect the stats sidecar for its RECORDED columns; no-op on
     tables without one (a sidecar's presence is the opt-in). Rewrites
-    (compaction, merge swaps) rename every data file, which turns the
+    (compaction, merge swaps) write every data file anew, which turns the
     carried sidecar stale — safe (unknown files always read) but
     useless — so the compaction ops call this after their swap, the
     same cadence at which a lakehouse rewrites its stats manifests.

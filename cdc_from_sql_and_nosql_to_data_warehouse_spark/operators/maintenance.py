@@ -5,8 +5,8 @@ accumulate many small parquet files (one-per-batch staging, per-trigger
 appends); at 100 TB a scan over millions of tiny files is dominated by
 open/footer costs and task-scheduling overhead. ``compact_parquet``
 rewrites a table into ~target-sized files, preserving the data
-byte-for-byte (same swap protocol as ``operators/apply._swap_into`` —
-readers see the old or the new fileset, never a mix).
+byte-for-byte (committed by ``operators/apply._swap_into``'s pointer
+flip — readers see the old or the new fileset, never a mix).
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import col as F_col
 
+from .. import fsio
 from . import fileset
-from .apply import _swap_into, read_table_schema, table_data_dir
+from .apply import _canonical_seq_py, _swap_into, read_table_schema, table_data_dir
 
 
 @dataclass(frozen=True)
@@ -176,9 +177,8 @@ def compact_parquet(
     At cluster scale the repartition is one narrow-ish shuffle of the
     fragmented slice; run it off the hot path (the reference's
     5-minute cadence leaves 99% idle headroom). Rewrites commit via
-    dynamic partition overwrite (partitioned) or the staging-dir swap
-    (flat) — per-partition replace vs whole-table rename; neither is a
-    cross-partition atomic transaction on plain parquet.
+    dynamic partition overwrite (partitioned: a per-partition replace,
+    not a cross-partition transaction) or the pointer flip (flat).
     """
     from .apply import _partition_scoped_read, _recover_swap
 
@@ -322,7 +322,7 @@ def _optimize_zorder(
 
 
 def _refresh_stats_if_kept(spark: SparkSession, path: str) -> None:
-    """Compaction renames every rewritten file, turning a carried
+    """Compaction rewrites every file it touches, turning a carried
     skipping-stats sidecar stale (safe — unknown files always read —
     but useless). Tables that opted into stats get them re-collected at
     this maintenance cadence, the same point a lakehouse rewrites its
@@ -356,8 +356,9 @@ def expire_files(
             if suffixes and not f.endswith(suffixes):
                 continue
             p = os.path.join(dp, f)
-            if os.path.getmtime(p) < cutoff:
-                os.remove(p)
+            # a concurrent sweep may delete p after the walk listed it
+            m = fsio.mtime(p)
+            if m is not None and m < cutoff and fsio.remove(p):
                 deleted.append(p)
     return deleted
 
@@ -403,7 +404,6 @@ def vacuum_versions(spark: SparkSession, path: str) -> int:
     still retained inside the grace after the sweep (0 means fully
     clean)."""
     from .apply import CURRENT_POINTER, GC_CLOCK, VERSIONS_LOG, _gc_superseded
-    from .. import fsio
 
     cur = fsio.read_text(os.path.join(path, CURRENT_POINTER))
     if cur is None or not cur.strip():
@@ -445,8 +445,6 @@ def vacuum_uncommitted(spark: SparkSession, path: str) -> int:
     unreferenced-file sweep, grace-free here because the fence — not a
     clock — proves no writer is active (every engine append holds an
     append token, which the whole-table scope excludes)."""
-    from .. import fsio
-
     data = table_data_dir(path)
     removed = 0
     for name in fsio.listdir(data):
@@ -661,8 +659,8 @@ def vacuum_tombstones(
     with Delta's ``VACUUM`` retention or a Cassandra ``gc_grace``.
     Returns the number of tombstones dropped.
 
-    Flat tables rewrite through the crash-recoverable staging-dir swap
-    (``_swap_into`` / ``_recover_swap``). With ``partition_by`` the
+    Flat tables rewrite through ``_swap_into``'s pointer flip. With
+    ``partition_by`` the
     rewrite is PARTITION-PRUNED: only partitions actually holding dead
     tombstones are re-read and rewritten via dynamic partition
     overwrite — GC cost O(partitions with deletes), not O(table) —
@@ -751,31 +749,26 @@ def vacuum_tombstones_table(
     bucket_cols: list[str],
     n_buckets: int = 32,
 ) -> int:
-    """Tombstone GC for a BUCKETED managed warehouse table — the
-    managed-table twin of ``vacuum_tombstones`` (same caller-owned
-    replay-horizon invariant, same NULL-_seq retention rule). The
-    rewrite goes through the staged-table swap protocol of
-    ``apply_changes_bucketed`` so the bucketed (zero-Exchange-join)
-    layout survives the vacuum. Returns tombstones dropped."""
-    from .apply import DELETED_COL, recover_bucketed_table, swap_staged_table
+    """Tombstone GC for a BUCKETED warehouse table — the catalog-table
+    twin of ``vacuum_tombstones`` (same caller-owned replay-horizon
+    invariant, same NULL-_seq retention rule). The survivors commit
+    through ``apply._commit_bucketed``, the fenced pointer commit of
+    ``apply_changes_bucketed``, so the bucketed (zero-Exchange-join)
+    layout survives the vacuum and readers see the old version or the
+    new one. Returns tombstones dropped."""
+    from .apply import DELETED_COL, _commit_bucketed
 
-    recover_bucketed_table(spark, table_name)
-    df = spark.table(table_name)
-    if DELETED_COL not in df.columns:
-        return 0
     is_dead = _dead_tombstone_pred(before_seq)
-    n = df.filter(is_dead).count()
-    if n == 0:
-        return 0
-    survivors = df.filter(~is_dead)
-    swap_staged_table(
-        spark,
-        table_name,
-        lambda staged: write_bucketed(
-            survivors, staged, bucket_cols,
-            n_buckets=n_buckets, sort_cols=bucket_cols,
-        ),
-    )
+    n = 0
+
+    def survivors(current):
+        nonlocal n
+        if current is None or DELETED_COL not in current.columns:
+            return None
+        n = current.filter(is_dead).count()
+        return current.filter(~is_dead) if n else None
+
+    _commit_bucketed(spark, table_name, bucket_cols, n_buckets, survivors)
     return n
 
 
@@ -851,7 +844,7 @@ def compact_history(
             return 0
         result = folded.unionByName(recent, allowMissingColumns=True)
         horizon = max(
-            _canonical_seq_str(before_seq), read_history_horizon(path) or ""
+            _canonical_seq_py(before_seq), read_history_horizon(path) or ""
         )
         _swap_into(
             spark,
@@ -870,9 +863,7 @@ HISTORY_HORIZON_MARKER = "_history_horizon"
 def _write_history_horizon(path: str, before_seq: int | str) -> None:
     """Persist the compaction horizon (canonical form, monotone,
     atomic — a torn marker would poison every later horizon check)."""
-    from .. import fsio
-
-    new = _canonical_seq_str(before_seq)
+    new = _canonical_seq_py(before_seq)
     cur = read_history_horizon(path)
     if cur is None or new > cur:
         fsio.atomic_write_text(
@@ -882,19 +873,10 @@ def _write_history_horizon(path: str, before_seq: int | str) -> None:
 
 def read_history_horizon(path: str) -> str | None:
     """Canonical horizon seq below which time travel is unavailable."""
-    from .. import fsio
-
     raw = fsio.read_text(
         os.path.join(table_data_dir(path), HISTORY_HORIZON_MARKER)
     )
     return (raw.strip() or None) if raw is not None else None
-
-
-def _canonical_seq_str(seq: int | str) -> str:
-    """Driver-side canonical seq (40-char zero-pad, see apply)."""
-    from .apply import _canonical_seq_py
-
-    return _canonical_seq_py(seq)
 
 
 @dataclass(frozen=True)
@@ -935,6 +917,7 @@ def analyze_tables(
     CBO sees them.
     """
     from ..functions.sql_templates import quote_ident, quote_literal
+    from .apply import _local_path
 
     out: dict[str, AnalyzedTable] = {}
     def _is_partitioned(qname: str) -> bool:
@@ -945,13 +928,9 @@ def analyze_tables(
         )
 
     def _registered_location(qname: str) -> str | None:
-        for row in spark.sql(
-            f"DESCRIBE TABLE EXTENDED {qname}"
-        ).collect():
-            if row["col_name"] == "Location":
-                uri = row["data_type"]
-                return uri[len("file:"):] if uri.startswith("file:") else uri
-        return None
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {qname}").collect()
+        locs = [r["data_type"] for r in rows if r["col_name"] == "Location"]
+        return _local_path(locs[0]) if locs else None
 
     for name, path in tables.items():
         qname = quote_ident(name)

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM``, else 16g
+    clamped to half the host's physical memory. In local mode the
+    driver is the executor, and a second JVM (a bench run beside a test
+    session) must still fit on the host."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{max(1, min(16, phys_gb // 2))}g"
+
+
 def get_spark(
     app_name: str = "cdc_from_sql_and_nosql_to_data_warehouse_spark",
     master: str | None = None,
@@ -46,7 +58,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.streaming.schemaInference", "false")
     )

@@ -251,13 +251,13 @@ def run_envelope_apply(
     cadence — until someone runs maintenance by hand. Compaction is
     keyed off the checkpointed epoch id, so the cadence survives
     restarts; it preserves data byte-for-byte, so a crash between
-    apply and compact changes nothing on replay. A crash INSIDE a
-    flat-table compaction's staging swap is repaired by
-    ``operators.apply._recover_swap`` (invoked at the start of every
-    apply/compact/read) before the replayed batch merges; partitioned
-    compaction instead commits per-partition via dynamic overwrite —
-    the same (non-table-atomic) semantics as the partitioned merge
-    itself."""
+    apply and compact changes nothing on replay. Flat-table compaction
+    commits through ``_swap_into``'s pointer flip, so a crash inside it
+    leaves the previous version served and the replayed batch merges
+    against it (``_recover_swap`` only repairs tables last written by
+    the pre-pointer rename protocol); partitioned compaction instead
+    commits per-partition via dynamic overwrite — the same
+    (non-table-atomic) semantics as the partitioned merge itself."""
     key = key or cfg.document_key
     feed = read_envelope_feed(
         spark,
@@ -382,7 +382,11 @@ def run_envelope_apply_bucketed(
     ``apply_changes_bucketed`` per micro-batch, so the continuously
     maintained warehouse table keeps the zero-Exchange join property
     (see operators/apply.py). Same checkpoint/replay posture as
-    ``run_envelope_apply`` — the merge converges under replays.
+    ``run_envelope_apply`` — the merge converges under replays. Each
+    micro-batch is one fenced pointer commit of the table's files under
+    its default catalog path, so a restarted query (in a new process,
+    whose in-memory catalog has no entry for ``table_name``) resumes
+    from its checkpoint on top of the committed table.
 
     Small-file compaction is unnecessary here by construction (every
     batch rewrites the table through one bucketed write, so

@@ -9,6 +9,14 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    spark = get_spark(app_name="cdc_from_sql_and_nosql_to_data_warehouse_spark-tests")
+def spark(tmp_path_factory):
+    # a per-session warehouse: a dropped bucketed table's committed
+    # versions outlive its catalog entry, so a shared ./spark-warehouse
+    # would hand one run's leftovers to the next
+    spark = get_spark(
+        app_name="cdc_from_sql_and_nosql_to_data_warehouse_spark-tests",
+        extra_conf={
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("warehouse"))
+        },
+    )
     yield spark
