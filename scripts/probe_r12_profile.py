@@ -78,18 +78,18 @@ def profile_minhash(spark) -> None:
     def sigs():
         return shingled().select(
             "doc_id",
-            DD.minhash_signature(F.col("_sh"), 128, 42).alias("_sig"),
+            DD.minhash_signature("_sh", 128, 42).alias("_sig"),
         )
 
     timed(spark, "mh2-signature", sigs)
 
     def banded():
         s = shingled().select(
-            "doc_id", DD.minhash_signature(F.col("_sh"), 128, 42).alias("_sig")
+            "doc_id", DD.minhash_signature("_sh", 128, 42).alias("_sig")
         )
         return s.select(
             "doc_id",
-            DD._pack_low2(F.col("_sig"), 128).alias("_psig"),
+            DD._pack_low2("_sig", 128).alias("_psig"),
             F.explode(DD.lsh_bands(F.col("_sig"), bands, rows)).alias("bb"),
         ).select("doc_id", "_psig", "bb.band", "bb.bucket")
 

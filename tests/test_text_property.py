@@ -230,8 +230,8 @@ def test_packed_lane2_disagreements_match_python(spark):
     )
     packed = df.select(
         "i",
-        DD._pack_low2(F.col("siga"), 128).alias("_sig_a"),
-        DD._pack_low2(F.col("sigb"), 128).alias("_sig_b"),
+        DD._pack_low2("siga", 128).alias("_sig_a"),
+        DD._pack_low2("sigb", 128).alias("_sig_b"),
     )
     got = {
         r["i"]: r["d"]
