@@ -1,43 +1,26 @@
 """Engine configuration.
 
-Plays the role the reference's ``cdk.json`` context plays (all names,
-paths, cadences and flags in one place — reference
-``cdk.json:3-26`` and the env-var plumbing in
-``cdk_infrastructure/__init__.py:125-131,206-223,400-418``), but as a
-plain dataclass a SparkSession-based engine can consume.
+Plays the role the reference's ``cdk.json`` context plays (reference
+``cdk.json:3-26``) for the settings the CDC hops read: the document key,
+the micro-batch bound and the apply semantics. Names, paths and
+cadences are arguments of the calls that use them, not config fields.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
 class EngineConfig:
-    """All knobs for the engine in one place (reference O3 operator)."""
-
-    # --- namespaces (reference: Redshift database/schema/table 3-level naming,
-    # `load_s3_files...handler.py:73,88-89`; `start_dms...handler.py:49-51`)
-    warehouse_database: str = "warehouse"
-    sql_path_schema: str = "rds_to_redshift_database"
-    sql_path_table: str = "rds_cdc_table"
-    nosql_path_schema: str = "dynamodb_schema"
-    nosql_path_table: str = "dynamodb_cdc_table"
+    """The knobs the CDC hops read, in one place (reference O3 operator)."""
 
     # --- key column of the NoSQL document store (reference: DynamoDB
     # partition key `id: STRING`, `cdk_infrastructure/__init__.py:287-289`)
     document_key: str = "id"
 
-    # --- staging prefixes (reference `cdk.json:8-9`)
-    unprocessed_prefix: str = "unprocessed_dynamodb_streams"
-    processed_prefix: str = "processed_and_safe_to_delete"
-
-    # --- cadence (reference: EventBridge 5-minute rate rule,
-    # `cdk_infrastructure/__init__.py:492-511`; stream micro-batch bound
-    # <=100 records / <=5 s, `__init__.py:355-356`)
-    trigger_interval: str = "5 minutes"
-    stream_trigger_interval: str = "5 seconds"
+    # --- stream micro-batch bound (reference: <=100 records per Lambda
+    # invocation, `cdk_infrastructure/__init__.py:355-356`)
     max_files_per_trigger: int = 100
 
     # --- apply semantics (SURVEY §7 hard part 3: bug-compatible append
@@ -47,31 +30,6 @@ class EngineConfig:
     # hive-partition columns of the warehouse table (100 TB layout:
     # partition-pruned merges + dynamic partition overwrite); None = flat
     partition_by: list[str] | None = None
-
-    # --- reconciliation flag (reference `cdk.json:24`
-    # PRINT_RDS_AND_REDSHIFT_NUM_ROWS)
-    print_reconciliation: bool = True
-
-    # --- local roots
-    warehouse_root: str = field(
-        default_factory=lambda: os.environ.get(
-            "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"
-        )
-    )
-    checkpoint_root: str = field(
-        default_factory=lambda: os.environ.get(
-            "SPARK_GRAFT_CHECKPOINTS", "/tmp/spark_graft_checkpoints"
-        )
-    )
-
-    def qualified(self, schema: str, table: str) -> str:
-        """3-level name -> Spark catalog 2-level name ``schema.table``.
-
-        The reference's ``database.schema.table`` collapses to
-        ``database.table`` in Spark's 2-level catalog; we keep the middle
-        (schema) level because it carries the meaning.
-        """
-        return f"{schema}.{table}"
 
 
 SF_DIRS = {

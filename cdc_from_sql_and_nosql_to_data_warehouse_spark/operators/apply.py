@@ -1539,43 +1539,6 @@ def _flip_pointer(root: str, ver: str, prior: str) -> None:
     fsio.atomic_write_text(log_path, "".join(ln + "\n" for ln in keep + [ver]))
 
 
-def _recover_swap(target_path: str) -> bool:
-    """Crash recovery at the start of every apply/compact/read, for
-    tables last written by the PRE-POINTER protocol (two directory
-    renames; pointer tables need none): if the table directory is
-    missing, adopt the newest ``__staging_*`` sibling whose
-    ``_SUCCESS`` proves its write committed, else restore the newest
-    ``__old_*``. Returns True if a recovery rename happened."""
-    import glob as _glob
-
-    if fsio.read_text(os.path.join(target_path, CURRENT_POINTER)) is not None:
-        return False  # pointer layout: every crash window is consistent
-
-    def _clean_stale() -> None:
-        for p in _glob.glob(f"{target_path}__old_*") + _glob.glob(
-            f"{target_path}__staging_*"
-        ):
-            fsio.remove_tree(p)
-
-    if os.path.exists(target_path):
-        return False
-    stagings = [
-        p
-        for p in _glob.glob(f"{target_path}__staging_*")
-        if os.path.exists(os.path.join(p, "_SUCCESS"))
-    ]
-    if stagings:
-        fsio.move(max(stagings, key=os.path.getmtime), target_path)
-        _clean_stale()
-        return True
-    olds = _glob.glob(f"{target_path}__old_*")
-    if olds:
-        fsio.move(max(olds, key=os.path.getmtime), target_path)
-        _clean_stale()
-        return True
-    return False
-
-
 def _lift_stored(existing: DataFrame, key: str) -> DataFrame:
     """Stored warehouse rows back into envelope form for the merge.
 
@@ -1772,15 +1735,8 @@ def _scope_for(
         and partition_by
         and _table_exists(table_data_dir(target_path))
     ):
-        vals = [
-            tuple(r)
-            for r in changes.select(
-                *[F.col(f"after.{c}") for c in partition_by]
-            ).distinct().collect()
-        ]
-        if propagate_deletes and any(
-            v is None for t in vals for v in t
-        ):
+        vals = _batch_partition_tuples(changes, partition_by, propagate_deletes)
+        if vals is None:
             return "table", None, "unpruned"
         locked = (
             vals + [tuple([None] * len(partition_by))]
@@ -1789,6 +1745,25 @@ def _scope_for(
         )
         return "partitions", locked, vals
     return "table", None, None
+
+
+def _batch_partition_tuples(
+    changes: DataFrame, partition_by: list[str], propagate_deletes: bool
+) -> list[tuple] | None:
+    """The batch's distinct after-image partition tuples, or None when
+    a delete-propagating batch carries a null partition value: a REMOVE
+    whose after-image lacks partition values (key-only after, DynamoDB
+    REMOVE with no NewImage) cannot be routed to its stored partition,
+    so that batch must merge unpruned."""
+    vals = [
+        tuple(r)
+        for r in changes.select(
+            *[F.col(f"after.{c}") for c in partition_by]
+        ).distinct().collect()
+    ]
+    if propagate_deletes and any(v is None for t in vals for v in t):
+        return None
+    return vals
 
 
 def _adopt_at_creation(data_dir: str, created: bool) -> None:
@@ -1827,7 +1802,6 @@ def _apply_changes_locked(
     partition_by: list[str] | None,
     scope_touched: object = None,
 ) -> None:
-    _recover_swap(target_path)  # adopt a swap a previous crash left undone
     # physical location of the current fileset: the pointer-named
     # version dir after the table's first swap, the root before it.
     # Blind appends and partition overwrites land THERE; the whole-
@@ -1917,21 +1891,11 @@ def _apply_changes_locked(
             touched = scope_touched
         else:
             # direct callers without a scope probe: collect here — the
-            # batch is micro, so the distinct is O(partitions touched)
-            touched = [
-                tuple(r)
-                for r in incoming.select(
-                    *[F.col(f"after.{c}") for c in partition_by]
-                ).distinct().collect()
-            ]
-            if propagate_deletes and any(
-                v is None for vals in touched for v in vals
-            ):
-                # a REMOVE whose after-image lacks partition values
-                # (key-only after, DynamoDB REMOVE with no NewImage)
-                # cannot be routed to its stored partition. Fall back
-                # to an unpruned merge for this batch.
-                touched = None
+            # batch is micro, so the distinct is O(partitions touched);
+            # None falls back to an unpruned merge for this batch
+            touched = _batch_partition_tuples(
+                incoming, partition_by, propagate_deletes
+            )
 
     prior: list[tuple] | None = None
     if exists:
@@ -2334,7 +2298,6 @@ def read_warehouse(
     # union schema (old rows read NULL in the new column) at O(1)
     # planning cost; manifest-less tables fall back to the footer
     # union (mergeSchema) — see _read_table.
-    _recover_swap(target_path)
     # SNAPSHOT PIN: resolve the version pointer exactly ONCE per
     # logical read and plan every sub-read (schema manifest, sidecar,
     # pruned scans, horizon marker) against that version dir. Without
@@ -2451,7 +2414,6 @@ def read_changes(
     ``write_dynamodb_stream_to_s3_lambda/handler.py``) — the warehouse
     itself becomes a change source downstream consumers can tail by seq.
     """
-    _recover_swap(target_path)
     # snapshot pin — one pointer resolution per feed read, same
     # rationale as read_warehouse's pin (a commit between resolutions
     # must not hand one window a mix of two versions)
@@ -2642,7 +2604,6 @@ def follow_changes(
     while True:
         ticks += 1
         last = _read_ck()
-        _recover_swap(target_path)
         schema = read_table_schema(target_path)
         if schema is not None:
             if KEY_COL not in schema.fieldNames():

@@ -212,13 +212,11 @@ def _sync_aggregate_locked(
         SEQ_COL,
         _pruned_table_read,
         _read_table,
-        _recover_swap,
         _swap_into,
         current_max_seq,
         read_warehouse,
     )
 
-    _recover_swap(agg_path)
     import os
 
     from .. import fsio
@@ -442,14 +440,12 @@ def sync_aggregate_minmax(
         _canonical_seq,
         _fence,
         _read_table,
-        _recover_swap,
         _swap_into,
         current_max_seq,
         read_warehouse,
     )
 
     with _fence(agg_path, "table"):
-        _recover_swap(agg_path)
         import os
 
         from .. import fsio

@@ -180,9 +180,8 @@ def compact_parquet(
     dynamic partition overwrite (partitioned: a per-partition replace,
     not a cross-partition transaction) or the pointer flip (flat).
     """
-    from .apply import _partition_scoped_read, _recover_swap
+    from .apply import _partition_scoped_read
 
-    _recover_swap(path)  # adopt a swap a previous crash left undone
     data = table_data_dir(path)  # physical fileset (pointer-resolved)
 
     if zorder_by:
@@ -677,12 +676,10 @@ def vacuum_tombstones(
     from .apply import (
         DELETED_COL,
         _partition_scoped_read,
-        _recover_swap,
         _touched_partition_dirs,
         overwrite_partitions_dropping_emptied,
     )
 
-    _recover_swap(path)  # adopt a swap a previous crash left undone
     data = table_data_dir(path)
     is_dead = _dead_tombstone_pred(before_seq)
 
@@ -810,14 +807,12 @@ def compact_history(
         KEY_COL,
         SEQ_COL,
         _canonical_seq,
-        _recover_swap,
         _swap_into,
         latest_per_key,
     )
 
     from contextlib import nullcontext
 
-    _recover_swap(path)
     data = table_data_dir(path)
     # inference off for partitioned rewrites so partition dir names
     # round-trip exactly (see _no_partition_type_inference: a re-typed
@@ -1089,9 +1084,8 @@ def validate_warehouse(
     from "same count" to "the keys themselves are sound"."""
     from pyspark.sql import functions as F
 
-    from .apply import DELETED_COL, KEY_COL, SEQ_COL, _recover_swap
+    from .apply import DELETED_COL, KEY_COL, SEQ_COL
 
-    _recover_swap(path)
     fileset.repair_stranded_log(table_data_dir(path))
     df = spark.read.option("mergeSchema", "true").parquet(table_data_dir(path))
     history = KEY_COL in df.columns
@@ -1180,14 +1174,12 @@ def purge_keys(
     from .apply import (
         KEY_COL,
         _partition_scoped_read,
-        _recover_swap,
         _touched_partition_dirs,
         overwrite_partitions_dropping_emptied,
     )
 
     if not values:
         return 0
-    _recover_swap(path)
     data = table_data_dir(path)
 
     def _pred(df):

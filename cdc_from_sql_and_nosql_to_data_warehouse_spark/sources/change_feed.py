@@ -71,6 +71,24 @@ def stream_record_schema(after_schema: T.StructType) -> T.StructType:
     )
 
 
+def _read_ndjson(
+    spark: SparkSession,
+    schema: T.StructType,
+    path: str,
+    streaming: bool = True,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The engine's one NDJSON reader: ``path`` (a directory or glob)
+    under an explicit schema, batch or streaming; a streaming read takes
+    at most ``max_files_per_trigger`` new files per micro-batch."""
+    if not streaming:
+        return spark.read.schema(schema).json(path)
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)
+
+
 def read_envelope_feed(
     spark: SparkSession,
     feed_dir: str,
@@ -79,13 +97,10 @@ def read_envelope_feed(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Read an envelope-shaped NDJSON feed, batch or streaming."""
-    schema = envelope_schema(after_schema)
-    if streaming:
-        reader = spark.readStream.schema(schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.json(feed_dir)
-    return spark.read.schema(schema).json(feed_dir)
+    return _read_ndjson(
+        spark, envelope_schema(after_schema), feed_dir, streaming,
+        max_files_per_trigger,
+    )
 
 
 def read_dynamodb_stream(
@@ -96,10 +111,7 @@ def read_dynamodb_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Read raw DynamoDB-stream-shaped NDJSON records (S3 analog)."""
-    schema = stream_record_schema(after_schema)
-    if streaming:
-        reader = spark.readStream.schema(schema)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        return reader.json(feed_dir)
-    return spark.read.schema(schema).json(feed_dir)
+    return _read_ndjson(
+        spark, stream_record_schema(after_schema), feed_dir, streaming,
+        max_files_per_trigger,
+    )

@@ -48,6 +48,7 @@ from ..operators.apply import (
     read_table_schema,
     table_data_dir,
 )
+from .manager import start_query
 
 
 def _is_hive_partitioned(data_dir: str) -> bool:
@@ -504,7 +505,6 @@ def stream_sync_changes(
     key: str,
     mode: str = "upsert",
     partition_by: list[str] | None = None,
-    available_now: bool = True,
     processing_time: str | None = None,
     max_files_per_trigger: int | None = None,
     plan_from_manifest: bool | None = None,
@@ -542,10 +542,10 @@ def stream_sync_changes(
     is advisory (a stale-low marker only skips the gate), so a crash
     between apply and marker write stays convergent.
 
-    ``available_now=True`` drains everything currently in the feed and
-    stops (the batch-boundary trigger); ``processing_time`` (e.g.
-    ``"5 seconds"``) runs continuously at the reference pipeline's
-    cadence. Returns the StreamingQuery.
+    By default the query drains everything currently in the feed and
+    stops (the ``availableNow`` trigger); ``processing_time`` (e.g.
+    ``"5 seconds"``) runs it continuously at the reference pipeline's
+    cadence instead. Returns the StreamingQuery.
 
     Hive-PARTITIONED sources take the pacing-bridge path instead of the
     content stream: a partition-aware file source must pin one physical
@@ -641,24 +641,17 @@ def stream_sync_changes(
             except CompactionHorizonError:
                 _bootstrap_resync()
 
-        writer = (
+        return start_query(
             _pacing_stream(
                 spark,
                 source_path,
                 max_files_per_trigger,
                 continuous=processing_time is not None,
                 sticky_dir=os.path.join(checkpoint_path, "stream"),
-            )
-            .writeStream.foreachBatch(_tick)
-            .option(
-                "checkpointLocation", os.path.join(checkpoint_path, "stream")
-            )
+            ).writeStream.foreachBatch(_tick),
+            os.path.join(checkpoint_path, "stream"),
+            processing_time,
         )
-        if processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        elif available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     marker = os.path.join(checkpoint_path, APPLIED_MAX_MARKER)
     # Reverse-migration seam (the mirror of the bridge's marker seed):
@@ -792,22 +785,17 @@ def stream_sync_changes(
             fileset.has_log(table_data_dir(source_path)),
         ),
     )
-    writer = (
+    return start_query(
         stream_changes(
             spark,
             source_path,
             ignore_missing_files=True,
             max_files_per_trigger=max_files_per_trigger,
             plan_from_manifest=use_manifest,
-        )
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
+        ).writeStream.foreachBatch(_apply),
+        checkpoint_path,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_classified_changes(
@@ -815,7 +803,6 @@ def stream_classified_changes(
     source_path: str,
     checkpoint_path: str,
     process,
-    available_now: bool = True,
     processing_time: str | None = None,
 ):
     """EVENT-GRANULARITY classified change feed (insert/update/delete,
@@ -858,23 +845,16 @@ def stream_classified_changes(
     def _tick(_batch: DataFrame, _epoch_id: int) -> None:
         follow_changes(spark, source_path, bridge_ck, process, max_ticks=1)
 
-    writer = (
+    return start_query(
         _pacing_stream(
             spark,
             source_path,
             continuous=processing_time is not None,
             sticky_dir=os.path.join(checkpoint_path, "stream"),
-        )
-        .writeStream.foreachBatch(_tick)
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_path, "stream")
-        )
+        ).writeStream.foreachBatch(_tick),
+        os.path.join(checkpoint_path, "stream"),
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def idempotent_windows(checkpoint_path: str, process):
@@ -942,7 +922,6 @@ def stream_sync_aggregate(
     value_col: str,
     value_cast: str = "decimal(18,2)",
     minmax: bool = False,
-    available_now: bool = True,
     processing_time: str | None = None,
 ):
     """Materialized-view maintenance under Spark's streaming machinery:
@@ -971,18 +950,13 @@ def stream_sync_aggregate(
             value_cast=value_cast,
         )
 
-    writer = (
+    return start_query(
         _pacing_stream(
             spark,
             source_path,
             continuous=processing_time is not None,
             sticky_dir=checkpoint_path,
-        )
-        .writeStream.foreachBatch(_tick)
-        .option("checkpointLocation", checkpoint_path)
+        ).writeStream.foreachBatch(_tick),
+        checkpoint_path,
+        processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

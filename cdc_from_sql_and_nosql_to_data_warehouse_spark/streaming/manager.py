@@ -12,7 +12,26 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+
+def start_query(
+    writer: DataStreamWriter,
+    checkpoint: str | None,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """The one place every engine query starts: ``checkpoint`` becomes
+    the query's ``checkpointLocation`` (its offset and commit logs),
+    and the trigger is ``processingTime=processing_time`` (a continuous
+    query at that cadence) when given, else ``availableNow`` (drain
+    everything currently in the source, then stop)."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if processing_time is not None:
+        writer = writer.trigger(processingTime=processing_time)
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def find_query(spark: SparkSession, name: str) -> StreamingQuery | None:
@@ -91,16 +110,14 @@ def schedule_maintenance(
             metrics.note_maintenance_tick(path, ok=True)
 
     def _start() -> StreamingQuery:
-        writer = (
+        return start_query(
             spark.readStream.format("rate")
             .option("rowsPerSecond", "1")
             .load()
             .writeStream.foreachBatch(_tick)
-            .queryName(name)
-            .trigger(processingTime=interval)
+            .queryName(name),
+            checkpoint_path,
+            processing_time=interval,
         )
-        if checkpoint_path is not None:
-            writer = writer.option("checkpointLocation", checkpoint_path)
-        return writer.start()
 
     return ensure_started(spark, name, _start)

@@ -22,6 +22,7 @@ contract (file naming T4/T5, empty-batch markers K4, FIXTURES.md F5).
 from __future__ import annotations
 
 import functools
+import json
 import os
 import uuid
 from datetime import datetime, timezone
@@ -33,8 +34,27 @@ from pyspark.sql import types as T
 from .. import fsio
 from ..config import EngineConfig
 from ..functions.dynamodb_json import _unwrap_fields_sql  # typed tag-stripping
-from ..operators.apply import _guarded_op_sql, _reraise_bad_op, apply_changes
-from ..sources.change_feed import read_dynamodb_stream, read_envelope_feed
+from ..operators.apply import (
+    _guarded_op_sql,
+    _reraise_bad_op,
+    append_to_table,
+    apply_changes,
+    apply_changes_bucketed,
+    current_max_seq,
+    table_data_dir,
+)
+from ..operators.layout import FILE_STATS_SIDECAR, collect_file_stats
+from ..operators.maintenance import (
+    compact_history,
+    compact_parquet,
+    vacuum_tombstones_table,
+)
+from ..sources.change_feed import (
+    _read_ndjson,
+    read_dynamodb_stream,
+    read_envelope_feed,
+)
+from .manager import start_query
 
 
 def decode_stream_records(records: DataFrame, after_schema: T.StructType) -> DataFrame:
@@ -131,23 +151,18 @@ def run_stream_to_staging(
 
     if not parity_naming:
         decoded = decode_stream_records(records, after_schema)
-        return (
-            decoded.writeStream.format("json")
-            .option("path", staging_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        return start_query(
+            decoded.writeStream.format("json").option("path", staging_dir),
+            checkpoint_dir,
         )
 
-    return (
+    return start_query(
         records.writeStream.foreachBatch(
             functools.partial(
                 stage_batch, staging_dir=staging_dir, after_schema=after_schema
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
 
 
@@ -179,10 +194,11 @@ def run_staging_to_warehouse(
     (K4) are naturally excluded by the ``*.json`` glob.
     """
     key = key or cfg.document_key
-    lines = (
-        spark.readStream.schema(staging_line_schema(after_schema))
-        .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
-        .json(f"{staging_dir}/*.json")
+    lines = _read_ndjson(
+        spark,
+        staging_line_schema(after_schema),
+        f"{staging_dir}/*.json",
+        max_files_per_trigger=cfg.max_files_per_trigger,
     )
 
     def load_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -191,8 +207,6 @@ def run_staging_to_warehouse(
             # row (pointer-resolved, fileset-manifest-maintained: the
             # shared append helper extends the table's commit log when
             # the current version dir carries one)
-            from ..operators.apply import append_to_table
-
             append_to_table(
                 batch.drop("_seq", "_ts_ms"),
                 warehouse_path,
@@ -216,12 +230,7 @@ def run_staging_to_warehouse(
             partition_by=cfg.partition_by,
         )
 
-    return (
-        lines.writeStream.foreachBatch(load_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_query(lines.writeStream.foreachBatch(load_batch), checkpoint_dir)
 
 
 def run_envelope_apply(
@@ -254,10 +263,9 @@ def run_envelope_apply(
     apply and compact changes nothing on replay. Flat-table compaction
     commits through ``_swap_into``'s pointer flip, so a crash inside it
     leaves the previous version served and the replayed batch merges
-    against it (``_recover_swap`` only repairs tables last written by
-    the pre-pointer rename protocol); partitioned compaction instead
-    commits per-partition via dynamic overwrite — the same
-    (non-table-atomic) semantics as the partitioned merge itself."""
+    against it; partitioned compaction instead commits per-partition
+    via dynamic overwrite — the same (non-table-atomic) semantics as
+    the partitioned merge itself."""
     key = key or cfg.document_key
     feed = read_envelope_feed(
         spark,
@@ -283,32 +291,20 @@ def run_envelope_apply(
             # new files), the lakehouse per-commit stats stamp. Upsert
             # rewrites files, so its stats refresh stays at the
             # compaction cadence instead.
-            import os as _os
-
-            from ..operators.layout import (
-                FILE_STATS_SIDECAR,
-                collect_file_stats,
+            sidecar = fsio.read_text(
+                os.path.join(table_data_dir(warehouse_path), FILE_STATS_SIDECAR)
             )
-
-            from ..operators.apply import table_data_dir as _tdd
-
-            sidecar = _os.path.join(
-                _tdd(warehouse_path), FILE_STATS_SIDECAR
-            )
-            if _os.path.exists(sidecar):
-                import json as _json
-
-                with open(sidecar) as fh:
-                    cols = _json.load(fh)["columns"]
+            if sidecar is not None:
                 collect_file_stats(
-                    spark, warehouse_path, cols, incremental=True
+                    spark,
+                    warehouse_path,
+                    json.loads(sidecar)["columns"],
+                    incremental=True,
                 )
         if (
             compact_every_n_batches
             and (epoch_id + 1) % compact_every_n_batches == 0
         ):
-            from ..operators.maintenance import compact_parquet
-
             if cfg.apply_mode == "history":
                 # history (merge-on-read) tables accumulate one version
                 # row per change: the maintenance tick folds versions
@@ -321,18 +317,7 @@ def run_envelope_apply(
                 # sync_aggregate) that are not exactly caught up at the
                 # compaction instant still find their window instead of
                 # permanently raising on the horizon rule.
-                from pyspark.sql import functions as F
-
-                from ..operators.apply import SEQ_COL
-                from ..operators.maintenance import compact_history
-
-                from ..operators.apply import _read_table
-
-                top = (
-                    _read_table(spark, warehouse_path)
-                    .agg(F.max(SEQ_COL).alias("m"))
-                    .first()["m"]
-                )
+                top = current_max_seq(spark, warehouse_path)
                 fold_to = (
                     int(top) - int(history_retain_seqs)
                     if top is not None
@@ -357,12 +342,7 @@ def run_envelope_apply(
                 zorder_by=optimize_zorder_by,
             )
 
-    return (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_query(feed.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def run_envelope_apply_bucketed(
@@ -398,8 +378,6 @@ def run_envelope_apply_bucketed(
     owns the replay-horizon invariant, exactly as with
     ``maintenance.vacuum_tombstones``) are dropped through the
     bucketed-layout-preserving rewrite."""
-    from ..operators.apply import apply_changes_bucketed
-
     key = key or cfg.document_key
     bucket_cols = bucket_cols or [key]
     feed = read_envelope_feed(
@@ -425,8 +403,6 @@ def run_envelope_apply_bucketed(
             and vacuum_horizon_seq is not None
             and (epoch_id + 1) % vacuum_every_n_batches == 0
         ):
-            from ..operators.maintenance import vacuum_tombstones_table
-
             horizon = (
                 vacuum_horizon_seq()
                 if callable(vacuum_horizon_seq)
@@ -436,12 +412,7 @@ def run_envelope_apply_bucketed(
                 spark, table_name, horizon, bucket_cols, n_buckets=n_buckets
             )
 
-    return (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_query(feed.writeStream.foreachBatch(apply_batch), checkpoint_dir)
 
 
 def run_streaming_dedup(
@@ -496,9 +467,6 @@ def run_streaming_dedup(
     idempotence, so merging epochs out from under a live query would
     let a replayed micro-batch re-append rows the merge already holds.
     """
-    import json
-    import os
-
     from ..operators.dedup import (
         _minhash_geometry,
         _minhash_projections,
@@ -507,10 +475,11 @@ def run_streaming_dedup(
         minhash_index_meta,
     )
 
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(f"{source_dir}/*.json")
+    docs = _read_ndjson(
+        spark,
+        doc_schema,
+        f"{source_dir}/*.json",
+        max_files_per_trigger=max_files_per_trigger,
     )
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -633,12 +602,7 @@ def run_streaming_dedup(
                 os.path.join(index_path, "bigbuckets")
             )
 
-    return (
-        docs.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_query(docs.writeStream.foreachBatch(dedup_batch), checkpoint_dir)
 
 
 def run_streaming_embedding_dedup(
@@ -677,10 +641,11 @@ def run_streaming_embedding_dedup(
     from ..operators.dedup import near_dup_clusters
     from ..operators.similarity import embedding_incremental_near_dups
 
-    vecs = (
-        spark.readStream.schema(vec_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(f"{source_dir}/*.json")
+    vecs = _read_ndjson(
+        spark,
+        vec_schema,
+        f"{source_dir}/*.json",
+        max_files_per_trigger=max_files_per_trigger,
     )
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -732,9 +697,4 @@ def run_streaming_embedding_dedup(
             os.path.join(accepted_path, f"batch={epoch_id}")
         )
 
-    return (
-        vecs.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_query(vecs.writeStream.foreachBatch(dedup_batch), checkpoint_dir)

@@ -476,8 +476,7 @@ def test_continuous_sync_of_manifest_less_source(spark, tmp_path):
     )
     fileset.invalidate(table_data_dir(src))  # simulate a legacy table
     q = stream_sync_changes(
-        spark, src, dst, ck, "k", available_now=False,
-        processing_time="1 seconds",
+        spark, src, dst, ck, "k", processing_time="1 seconds",
     )
     try:
         deadline = time.time() + 60
@@ -892,7 +891,7 @@ def test_held_trigger_visible_in_listener(spark, tmp_path):
         q = stream_sync_changes(
             spark, src, dst, ck, "k",
             plan_from_manifest=True,
-            available_now=False, processing_time="1 seconds",
+            processing_time="1 seconds",
         )
         deadline = time.time() + 60
         while time.time() < deadline and metrics.total_input_rows() == 0:

@@ -504,45 +504,6 @@ def test_remove_emptying_escaped_partition_removes_its_dir(spark, tmp_path):
     ), os.listdir(tdd(wh))
 
 
-def test_recover_swap_adopts_committed_staging(spark, tmp_path):
-    """Crash inside _swap_into's rename window: the table dir is gone,
-    the new state sits in __staging_* with _SUCCESS. The next apply (or
-    read) must adopt it instead of rebuilding from one micro-batch."""
-    import shutil
-
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import _recover_swap
-
-    wh = str(tmp_path / "wh")
-    apply_changes(
-        spark,
-        _envelope(spark, [("INSERT", "a", "eu", 1.0, 1),
-                          ("INSERT", "b", "us", 2.0, 1)]),
-        wh, "id", mode="upsert",
-    )
-    # simulate: new state fully staged, old table moved aside, crash
-    shutil.copytree(wh, f"{wh}__staging_deadbeef")
-    os.rename(wh, f"{wh}__old_cafe0001")
-    assert _recover_swap(wh) is True
-    assert not os.path.exists(f"{wh}__old_cafe0001")
-    rows = {r["id"]: r["price"] for r in read_warehouse(spark, wh).collect()}
-    assert rows == {"a": 1.0, "b": 2.0}
-
-    # next apply on the recovered table merges against the FULL state
-    apply_changes(
-        spark,
-        _envelope(spark, [("MODIFY", "a", "eu", 9.0, 2)]),
-        wh, "id", mode="upsert",
-    )
-    rows = {r["id"]: r["price"] for r in read_warehouse(spark, wh).collect()}
-    assert rows == {"a": 9.0, "b": 2.0}
-
-    # with no committed staging, the old fileset is restored
-    os.rename(wh, f"{wh}__old_cafe0002")
-    assert _recover_swap(wh) is True
-    rows = {r["id"]: r["price"] for r in read_warehouse(spark, wh).collect()}
-    assert rows == {"a": 9.0, "b": 2.0}
-
-
 SHARDED = T.StructType(
     [
         T.StructField("id", T.StringType()),

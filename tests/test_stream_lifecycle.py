@@ -1,0 +1,47 @@
+"""Every engine streaming query starts in ``streaming/manager.start_query``.
+
+A static check (no Spark): parse the package and assert that the only
+``.start(...)`` and ``.trigger(...)`` calls are the ones inside
+``start_query``, so checkpoint and trigger policy stay a one-place edit.
+"""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+import cdc_from_sql_and_nosql_to_data_warehouse_spark as pkg
+
+PKG_DIR = pathlib.Path(pkg.__file__).parent
+
+
+def _calls(attr: str) -> list[tuple[str, str]]:
+    """(module path, enclosing function) of every ``<expr>.<attr>(...)``."""
+    found = []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        rel = path.relative_to(PKG_DIR).as_posix()
+
+        def visit(node: ast.AST, fn: str) -> None:
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child.name if fn == "<module>" else fn)
+                    continue
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == attr
+                ):
+                    found.append((rel, fn))
+                visit(child, fn)
+
+        visit(tree, "<module>")
+    return found
+
+
+def test_only_start_query_starts_streams():
+    assert _calls("start") == [("streaming/manager.py", "start_query")]
+
+
+def test_only_start_query_sets_triggers():
+    assert _calls("trigger") == [("streaming/manager.py", "start_query")] * 2
