@@ -595,11 +595,12 @@ def _pruned_table_read(
 ) -> DataFrame | None:
     """Sidecar-pruned, manifest-schema read: plan the scan over only
     the files whose stats (min/max ranges, blooms, hive dirs) can
-    satisfy ``predicates`` — the hot-reader twin of
-    ``layout.read_skipping``, sharing its conservative rules (unknown
-    files always read, missing stats never prune) so the result is
-    ALWAYS row-equal to the full read; callers still re-apply their
-    row filters. Returns None when the table carries neither manifest
+    satisfy ``predicates`` — the one pruned-read planner, behind
+    ``read_warehouse``, ``read_changes``, the aggregate drains and
+    ``layout.read_skipping``. Its rules are conservative (unknown files
+    always read, missing stats never prune), so the result is ALWAYS
+    row-equal to the full read; callers still re-apply their row
+    filters. Returns None when the table carries neither manifest
     nor stats sidecar (caller falls back to ``_read_table`` — pruning
     without a sidecar would list every file for nothing), or an empty
     manifest-schema frame when every file was pruned."""
@@ -790,12 +791,7 @@ def current_max_seq(spark: SparkSession, path: str) -> str | None:
                     rel for rel in on_disk if rel not in known
                 ]
                 if unknown:
-                    schema = read_table_schema(path)
-                    reader = spark.read.option("basePath", path)
-                    if schema is not None:
-                        reader = reader.schema(schema)
-                    else:
-                        reader = reader.option("mergeSchema", "true")
+                    reader = _table_reader(spark, path).option("basePath", path)
                     sub_max = (
                         reader.parquet(
                             *[os.path.join(path, r) for r in unknown]
@@ -1638,6 +1634,51 @@ def _merge_latest(incoming: DataFrame, lifted: DataFrame) -> DataFrame:
     return latest_per_key(incoming.unionByName(lifted), "key", "seq")
 
 
+def _merge_plan(
+    changes: DataFrame,
+    stored: DataFrame | None,
+    key: str,
+    propagate_deletes: bool,
+) -> DataFrame:
+    """The upsert merge, shared by ``apply_changes`` and
+    ``apply_changes_bucketed``: an envelope batch merged latest-wins
+    with the ``stored`` rows it can touch (None: nothing stored), in
+    stored row form. REMOVEs take part only when they propagate."""
+    incoming = changes if propagate_deletes else changes.filter(
+        F.col("op") != "REMOVE"
+    )
+    # Canonical arbitration representation: seq as a 40-char zero-padded
+    # string (lexicographic order == numeric order for non-negative
+    # sequence numbers up to DynamoDB's 40-digit wire max). Incoming
+    # envelope seqs may be longs (snapshot/JDBC path) or already-padded
+    # strings (stream path); STORED _seq from tables written before the
+    # padded representation may be unpadded — both get normalized here
+    # and again at lift time, so mixed-era tables arbitrate correctly
+    # instead of lexicographically comparing '5' against '00…19'.
+    #
+    # ONE max-seq window per merge (round 12, guide §2.4): the batch
+    # used to be pre-deduped by its own latest_per_key window and then
+    # merged through _merge_latest's second window — two Exchanges on
+    # the same key, with the batch's rows crossing the wire twice (raw,
+    # then deduped). Feeding the raw batch straight into the merge
+    # window shuffles every row exactly once and drops a whole
+    # Exchange+Sort stage. Identical output: the single window's
+    # max-seq winner per key is the same row the two-stage form picked
+    # (row_number over the union of ALL batch rows + the stored row ==
+    # row_number over (deduped batch + stored row) — same ordering,
+    # same arbitrary-among-equal-seq tie class as before).
+    incoming = incoming.select(
+        "key", "op", "after", _canonical_seq(F.col("seq")).alias("seq")
+    )
+    if stored is None:
+        # nothing stored to merge against: the single max-seq window
+        # runs over the batch alone
+        merged = latest_per_key(incoming, "key", "seq")
+    else:
+        merged = _merge_latest(incoming, _lift_stored(stored, key))
+    return _stored_form(merged, key, propagate_deletes)
+
+
 def apply_changes(
     spark: SparkSession,
     changes: DataFrame,
@@ -1847,33 +1888,6 @@ def _apply_changes_locked(
     if mode != "upsert":
         raise ValueError(f"unknown apply mode: {mode!r}")
 
-    incoming = changes if propagate_deletes else changes.filter(
-        F.col("op") != "REMOVE"
-    )
-    # Canonical arbitration representation: seq as a 40-char zero-padded
-    # string (lexicographic order == numeric order for non-negative
-    # sequence numbers up to DynamoDB's 40-digit wire max). Incoming
-    # envelope seqs may be longs (snapshot/JDBC path) or already-padded
-    # strings (stream path); STORED _seq from tables written before the
-    # padded representation may be unpadded — both get normalized here
-    # and again at lift time, so mixed-era tables arbitrate correctly
-    # instead of lexicographically comparing '5' against '00…19'.
-    #
-    # ONE max-seq window per merge (round 12, guide §2.4): the batch
-    # used to be pre-deduped by its own latest_per_key window and then
-    # merged through _merge_latest's second window — two Exchanges on
-    # the same key, with the batch's rows crossing the wire twice (raw,
-    # then deduped). Feeding the raw batch straight into the merge
-    # window shuffles every row exactly once and drops a whole
-    # Exchange+Sort stage. Identical output: the single window's
-    # max-seq winner per key is the same row the two-stage form picked
-    # (row_number over the union of ALL batch rows + the stored row ==
-    # row_number over (deduped batch + stored row) — same ordering,
-    # same arbitrary-among-equal-seq tie class as before).
-    incoming = incoming.select(
-        "key", "op", "after", _canonical_seq(F.col("seq")).alias("seq")
-    )
-
     exists = _table_exists(data_dir)
 
     touched: list[tuple] | None = None
@@ -1890,14 +1904,16 @@ def _apply_changes_locked(
             # merge needs
             touched = scope_touched
         else:
-            # direct callers without a scope probe: collect here — the
-            # batch is micro, so the distinct is O(partitions touched);
-            # None falls back to an unpruned merge for this batch
+            # no scope probe (the table appeared after _scope_for looked):
+            # probe here as _scope_for does — the batch is micro, so the
+            # distinct is O(partitions touched); None falls back to an
+            # unpruned merge for this batch
             touched = _batch_partition_tuples(
-                incoming, partition_by, propagate_deletes
+                changes, partition_by, propagate_deletes
             )
 
     prior: list[tuple] | None = None
+    existing: DataFrame | None = None
     if exists:
         # listing-pruned read: resolve the touched tuples to their hive
         # directories and scope the scan to them via basePath, so
@@ -1917,12 +1933,9 @@ def _apply_changes_locked(
                 touched,
                 include_all_null=propagate_deletes,
             )
-        existing: DataFrame | None
         if dirs:
             existing = _partition_scoped_read(spark, data_dir, dirs)
-        elif dirs is not None:
-            existing = None
-        else:
+        elif dirs is None:
             # after an evolving batch rewrote only its touched
             # partitions, untouched partitions still carry the older
             # column set — the manifest (or the footer-union fallback)
@@ -1957,16 +1970,7 @@ def _apply_changes_locked(
                     nullc = nullc & F.col(c).isNull()
                 pred = pred | nullc
             existing = existing.filter(pred)
-        if existing is not None:
-            merged = _merge_latest(incoming, _lift_stored(existing, key))
-        else:
-            # nothing stored to merge against: the single max-seq
-            # window runs over the batch alone
-            merged = latest_per_key(incoming, "key", "seq")
-    else:
-        merged = latest_per_key(incoming, "key", "seq")
-
-    result = _stored_form(merged, key, propagate_deletes)
+    result = _merge_plan(changes, existing, key, propagate_deletes)
 
     if partition_by and exists:
         # Candidates for emptied-partition cleanup: the touched set, or
@@ -1978,9 +1982,14 @@ def _apply_changes_locked(
             if propagate_deletes
             else None
         )
+        # dynamic overwrite replaces only matched partitions: untouched
+        # ones keep their (possibly narrower) column set, so the manifest
+        # records the UNION — old partitions read NULL in evolved columns
+        _prestamp_schema_union(spark, target_path, result.schema)
         overwrite_partitions_dropping_emptied(
             spark, result, target_path, partition_by, candidates
         )
+        _stamp_schema_union(spark, target_path, result.schema)
         return
     if partition_by:
         from . import fileset
@@ -2005,9 +2014,13 @@ def overwrite_partitions_dropping_emptied(
     remove any ``candidates`` partition the write emptied entirely —
     dynamic overwrite never writes an empty partition, so a partition
     whose every row disappeared would otherwise keep its stale files
-    and read its dropped rows back as live. Shared by the partitioned
-    merge (``apply_changes``) and the partitioned tombstone vacuum so
-    the surviving-set / stale-dir semantics cannot drift.
+    and read its dropped rows back as live. The one in-place partition
+    rewrite commit: the partitioned merge (``apply_changes``), the
+    partitioned vacuum and purge (``maintenance._delete_where``) and
+    partitioned compaction (``candidates`` None: it empties nothing)
+    all commit through it, so the manifest-invalidate / surviving-set /
+    stale-dir semantics cannot drift. It records no schema manifest:
+    only the merge can add columns, and it stamps around this call.
 
     The surviving-partition set rides an ``Observation`` on the write's
     own job, so ``df`` (a whole merge plan) executes exactly once. It
@@ -2036,7 +2049,6 @@ def overwrite_partitions_dropping_emptied(
                 F.struct(*[F.col(c).cast("string") for c in partition_by])
             ).alias("written"),
         )
-    _prestamp_schema_union(spark, target_path, df.schema)
     # dynamic overwrite rewrites matched partitions in place without
     # knowing its file delta: drop the fileset manifest FIRST (readers
     # fall back to the LIST — correct under every crash window; a stale
@@ -2049,10 +2061,6 @@ def overwrite_partitions_dropping_emptied(
         .partitionBy(*partition_by)
         .parquet(data_dir)
     )
-    # dynamic overwrite replaces only matched partitions: untouched
-    # ones keep their (possibly narrower) column set, so the manifest
-    # records the UNION — old partitions read NULL in evolved columns
-    _stamp_schema_union(spark, target_path, df.schema)
     if not candidates:
         return
     # null and '' both land in __HIVE_DEFAULT_PARTITION__
@@ -2102,23 +2110,11 @@ def apply_changes_bucketed(
     than the registered table's raises ValueError."""
     # inline op guard — same rationale and mechanics as apply_changes
     changes = changes.withColumn("op", F.expr(_guarded_op_sql("op")))
-    incoming = changes if propagate_deletes else changes.filter(
-        F.col("op") != "REMOVE"
-    )
-    incoming = incoming.select(
-        "key", "op", "after", _canonical_seq(F.col("seq")).alias("seq")
-    )
-
-    def next_state(current: DataFrame | None) -> DataFrame:
-        # one max-seq window total — see _apply_changes_locked's upsert note
-        if current is None:
-            merged = latest_per_key(incoming, "key", "seq")
-        else:
-            merged = _merge_latest(incoming, _lift_stored(current, key))
-        return _stored_form(merged, key, propagate_deletes)
-
     try:
-        _commit_bucketed(spark, table_name, bucket_cols, n_buckets, next_state)
+        _commit_bucketed(
+            spark, table_name, bucket_cols, n_buckets,
+            lambda current: _merge_plan(changes, current, key, propagate_deletes),
+        )
     except Exception as exc:
         _reraise_bad_op(exc)
         raise

@@ -34,7 +34,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .apply import table_data_dir
+from .apply import _pruned_table_read, _read_table, table_data_dir
 
 
 def zorder_value(cols: list[Column], bits: int = 16) -> Column:
@@ -971,54 +971,23 @@ def read_skipping(
     spark: SparkSession, path: str, predicates: list[tuple]
 ) -> DataFrame:
     """Predicate-pruned table read: plan the scan over only the files
-    whose min/max range can satisfy every predicate, then re-apply the
-    full predicate row-wise (file pruning is necessary, not sufficient)
-    — so the result ALWAYS equals the unpruned ``read + filter``, stats
-    or no stats. ``basePath`` keeps hive partition columns visible on
-    the file-scoped read. An empty survivor set returns an empty frame
-    on the sidecar's recorded schema without touching the table.
-
-    The sidecar's recorded schema is imposed on the scan instead of
-    ``mergeSchema``: merging unions EVERY selected file's footer in a
-    driver-side job before the scan — at 100 TB exactly the O(files)
-    planning cost skipping exists to avoid. Refresh stats after a
-    schema-evolving write (the conservative-include rule already covers
-    files newer than the sidecar)."""
-    path = table_data_dir(path)
-    keep, _total = prune_files(path, predicates)
+    whose stats can satisfy every predicate, then re-apply the full
+    predicate row-wise (file pruning is necessary, not sufficient) — so
+    the result ALWAYS equals the unpruned ``read + filter``, stats or no
+    stats. The planning is ``apply._pruned_table_read``'s, the pruned
+    read behind ``read_warehouse(predicates=...)``: the table's schema
+    manifest, else the sidecar's recorded schema plus the columns of
+    files written after the stats pass, is imposed on the scan instead
+    of a ``mergeSchema`` footer union over every selected file (at 100
+    TB exactly the O(files) planning cost skipping exists to avoid).
+    Tables with neither manifest nor sidecar take ``apply._read_table``."""
+    df = _pruned_table_read(spark, path, predicates)
+    if df is None:
+        df = _read_table(spark, path)
     cond = None
     for p in predicates:
         c = _predicate_column(p)
         cond = c if cond is None else cond & c
-
-    def _read_schema():
-        # prefer the table's write-time manifest (updated per write by
-        # the engine's apply/maintenance paths) over the schema the
-        # STATS pass recorded (refreshed only at stats cadence): after
-        # a schema-evolving append the manifest is current immediately,
-        # closing the staleness window between stats refreshes.
-        from .apply import read_table_schema
-
-        manifest = read_table_schema(path)
-        if manifest is not None:
-            return manifest
-        stats = _load_sidecar(path)
-        if stats is None:
-            return None
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(json.loads(stats["schema"]))
-
-    schema = _read_schema()
-    if not keep:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        df = spark.read.parquet(path)
-        return df.filter(F.lit(False)) if cond is None else df.filter(cond)
-    reader = spark.read.option("basePath", path)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(*[os.path.join(path, rel) for rel in keep])
     return df if cond is None else df.filter(cond)
 
 

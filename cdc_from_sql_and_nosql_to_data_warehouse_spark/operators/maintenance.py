@@ -13,15 +13,29 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import col as F_col
+from pyspark.sql import functions as F
 
 from .. import fsio
 from . import fileset
-from .apply import _canonical_seq_py, _swap_into, read_table_schema, table_data_dir
+from .apply import (
+    DELETED_COL,
+    KEY_COL,
+    SEQ_COL,
+    _canonical_seq,
+    _canonical_seq_py,
+    _partition_scoped_read,
+    _read_table,
+    _swap_into,
+    _touched_partition_dirs,
+    latest_per_key,
+    overwrite_partitions_dropping_emptied,
+    read_table_schema,
+    table_data_dir,
+)
 
 
 @dataclass(frozen=True)
@@ -94,16 +108,19 @@ def _leaf_partition_stats(
 
 @contextmanager
 def _no_partition_type_inference(spark: SparkSession):
-    """Partition values as verbatim strings for internal maintenance
-    reads/writes. A SUBSET read of partition dirs can infer a DIFFERENT
+    """Partition values as verbatim strings for the reads behind an
+    in-place partition rewrite of a table without a schema manifest (a
+    manifest imposes its recorded types, which this setting does not
+    change). A SUBSET read of partition dirs can infer a DIFFERENT
     partition-column type than the full-table read (dirs month=01..12
     infer int over some subsets), and re-rendering a re-typed value on
     write lands in a NEW directory (month=1) while the old one survives
     — duplicating every row; cross-read tuple comparisons mismatch the
     same way. With inference off the parsed dir value IS the written
     dir value, so maintenance round-trips directory names exactly.
-    Partition values live only in dir names, never in data files, so
-    the table's reader-visible schema is untouched."""
+    Partition values live only in dir names, never in data files, and
+    an in-place partition rewrite records no schema manifest, so the
+    table's reader-visible schema is untouched."""
     k = "spark.sql.sources.partitionColumnTypeInference.enabled"
     prev = spark.conf.get(k)
     spark.conf.set(k, "false")
@@ -176,12 +193,15 @@ def compact_parquet(
 
     At cluster scale the repartition is one narrow-ish shuffle of the
     fragmented slice; run it off the hot path (the reference's
-    5-minute cadence leaves 99% idle headroom). Rewrites commit via
-    dynamic partition overwrite (partitioned: a per-partition replace,
-    not a cross-partition transaction) or the pointer flip (flat).
+    5-minute cadence leaves 99% idle headroom). Reads go through the
+    table's schema manifest (``apply._read_table`` /
+    ``_partition_scoped_read``), so partition columns keep their
+    recorded types. Rewrites commit through
+    ``apply.overwrite_partitions_dropping_emptied`` (partitioned: a
+    per-partition dynamic overwrite, not a cross-partition
+    transaction, that records no schema manifest) or the pointer flip
+    (flat).
     """
-    from .apply import _partition_scoped_read
-
     data = table_data_dir(path)  # physical fileset (pointer-resolved)
 
     if zorder_by:
@@ -212,15 +232,8 @@ def compact_parquet(
             scoped = _partition_scoped_read(spark, data, frag_dirs)
             if scoped is None:
                 return table_stats(spark, path)
-            sub = scoped.repartition(*[F_col(c) for c in partition_by])
-            # in-place partitioned rewrite: manifest can't express the
-            # delta — drop it first, readers LIST until the next swap
-            fileset.invalidate(data)
-            (
-                sub.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_by)
-                .parquet(data)
+            overwrite_partitions_dropping_emptied(
+                spark, scoped.repartition(*partition_by), path, partition_by, None
             )
         _refresh_stats_if_kept(spark, path)
         return table_stats(spark, path)
@@ -231,8 +244,7 @@ def compact_parquet(
     n_out = max(1, math.ceil(before.total_bytes / target_file_bytes))
     if n_out >= before.n_files:
         return before
-    df = spark.read.option("mergeSchema", "true").parquet(data).repartition(n_out)
-    _swap_into(spark, df, path, partition_by=None)
+    _swap_into(spark, _read_table(spark, path).repartition(n_out), path)
     _refresh_stats_if_kept(spark, path)
     return table_stats(spark, path)
 
@@ -253,18 +265,14 @@ def _optimize_zorder(
     dates to day numbers first, as scripts/probe_data_skipping.py
     does)."""
     import numbers
-    from contextlib import nullcontext
-
-    from pyspark.sql import functions as F
 
     from .layout import zorder_scale, zorder_value
 
-    data = table_data_dir(path)
     guard = (
         _no_partition_type_inference(spark) if partition_by else nullcontext()
     )
     with guard:
-        df = spark.read.option("mergeSchema", "true").parquet(data)
+        df = _read_table(spark, path)
         missing = [c for c in zorder_by if c not in df.columns]
         if missing:
             raise ValueError(f"zorder_by columns not in table: {missing}")
@@ -292,21 +300,15 @@ def _optimize_zorder(
             # task holds whole partitions; the per-partition row order
             # is still the deterministic in-task sort, and partition
             # dirs bound file ranges regardless of the sampled split
-            keys = [F_col(c) for c in partition_by] + [F.col("_z")]
+            keys = [F.col(c) for c in [*partition_by, "_z"]]
             clustered = (
                 df.withColumn("_z", zorder_value(zcols, bits))
                 .repartitionByRange(n_out, *keys)
                 .sortWithinPartitions(*keys)
                 .drop("_z")
             )
-            # in-place partitioned rewrite: manifest can't express the
-            # delta — drop it first, readers LIST until the next swap
-            fileset.invalidate(data)
-            (
-                clustered.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_by)
-                .parquet(data)
+            overwrite_partitions_dropping_emptied(
+                spark, clustered, path, partition_by, None
             )
         else:
             # flat layout: deterministic explicit-boundary clustering
@@ -402,7 +404,7 @@ def vacuum_versions(spark: SparkSession, path: str) -> int:
     legacy (never-swapped) tables. Returns the number of entries
     still retained inside the grace after the sweep (0 means fully
     clean)."""
-    from .apply import CURRENT_POINTER, GC_CLOCK, VERSIONS_LOG, _gc_superseded
+    from .apply import CURRENT_POINTER, _gc_superseded
 
     cur = fsio.read_text(os.path.join(path, CURRENT_POINTER))
     if cur is None or not cur.strip():
@@ -658,68 +660,72 @@ def vacuum_tombstones(
     with Delta's ``VACUUM`` retention or a Cassandra ``gc_grace``.
     Returns the number of tombstones dropped.
 
-    Flat tables rewrite through ``_swap_into``'s pointer flip. With
-    ``partition_by`` the
-    rewrite is PARTITION-PRUNED: only partitions actually holding dead
-    tombstones are re-read and rewritten via dynamic partition
-    overwrite — GC cost O(partitions with deletes), not O(table) —
-    with partition-type inference disabled so dir names round-trip
-    exactly (see ``_no_partition_type_inference``); commit semantics
-    are dynamic overwrite's per-partition replace, the same as the
-    partitioned apply merge, not an atomic table-level swap. Partitions
-    whose every row was a dead tombstone are removed outright. Falls
-    back to the full staged rewrite when the escape-aware dir resolver
-    finds nothing to prune against.
+    The rewrite is ``_delete_where``'s: with ``partition_by`` only the
+    partitions holding dead tombstones are re-read and rewritten —
+    GC cost O(partitions with deletes), not O(table) — and partitions
+    whose every row was a dead tombstone are removed outright; flat
+    tables swap through the pointer flip. A stats sidecar is refreshed
+    after the rewrite, as compaction refreshes it.
     """
-    from pyspark.sql import functions as F
-
-    from .apply import (
-        DELETED_COL,
-        _partition_scoped_read,
-        _touched_partition_dirs,
-        overwrite_partitions_dropping_emptied,
+    is_dead = _dead_tombstone_pred(before_seq)
+    return _delete_where(
+        spark,
+        path,
+        lambda df: is_dead if DELETED_COL in df.columns else None,
+        partition_by,
     )
 
+
+def _delete_where(
+    spark: SparkSession, path: str, doomed, partition_by: list[str] | None
+) -> int:
+    """The one row-deleting rewrite behind ``vacuum_tombstones`` and
+    ``purge_keys``: drop the rows of the table read through
+    ``apply._read_table`` that ``doomed(df)`` selects (a NULL-safe
+    predicate, or None for "nothing to do") and return how many went.
+
+    One grouped pass yields both the count and the touched partitions,
+    each as its dir-name rendering (``cast("string")``, as the
+    partitioned writer renders it), so every partition type resolves
+    to its dirs. With ``partition_by`` only those dirs are re-read —
+    manifest-honoring, so a crashed append's unlogged junk is never
+    read back and committed as live rows — and rewritten through
+    ``apply.overwrite_partitions_dropping_emptied``, which also removes
+    the partitions the rewrite empties: cost O(touched partitions),
+    not O(table). Commit semantics are dynamic overwrite's
+    per-partition replace, as in the partitioned apply merge, not an
+    atomic table-level swap. Flat tables, and partitions that resolve
+    to no committed files, take the whole-table pointer swap."""
     data = table_data_dir(path)
-    is_dead = _dead_tombstone_pred(before_seq)
-
-    if partition_by:
-        with _no_partition_type_inference(spark):
-            df = spark.read.option("mergeSchema", "true").parquet(data)
-            if DELETED_COL not in df.columns:
-                return 0
-            # one pass yields both the dead count and the touched set
-            dead_groups = (
-                df.filter(is_dead)
-                .groupBy(*partition_by)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
+    parts = partition_by or []
+    guard = _no_partition_type_inference(spark) if parts else nullcontext()
+    with guard:
+        df = _read_table(spark, path)
+        pred = doomed(df)
+        if pred is None:
+            return 0
+        groups = (
+            df.filter(pred)
+            .groupBy(*[F.col(c).cast("string").alias(c) for c in parts])
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .collect()
+        )
+        n = int(sum(r["_n"] for r in groups))
+        if n == 0:
+            return 0
+        touched = [tuple(r[c] for c in parts) for r in groups]
+        dirs = _touched_partition_dirs(data, parts, touched, False) if parts else []
+        sub = _partition_scoped_read(spark, data, dirs) if dirs else None
+        if sub is not None:
+            overwrite_partitions_dropping_emptied(
+                spark, sub.filter(~pred), path, parts, touched
             )
-            n = int(sum(r["_n"] for r in dead_groups))
-            if n == 0:
-                return 0
-            touched = [tuple(r[c] for c in partition_by) for r in dead_groups]
-            dirs = _touched_partition_dirs(data, partition_by, touched, False)
-            sub = (
-                _partition_scoped_read(spark, data, dirs) if dirs else None
-            )
-            if sub is not None:
-                overwrite_partitions_dropping_emptied(
-                    spark, sub.filter(~is_dead), path, partition_by, touched
-                )
-                return n
-            _swap_into(
-                spark, df.filter(~is_dead), path, partition_by=partition_by
-            )
-            return n
-
-    df = spark.read.option("mergeSchema", "true").parquet(data)
-    if DELETED_COL not in df.columns:
-        return 0
-    n = df.filter(is_dead).count()
-    if n == 0:
-        return 0
-    _swap_into(spark, df.filter(~is_dead), path, partition_by=None)
+    if sub is None:
+        # the swap records its frame's schema: re-read a partitioned
+        # table outside the guard so it records the types readers see
+        whole = _read_table(spark, path) if parts else df
+        _swap_into(spark, whole.filter(~pred), path, partition_by=partition_by)
+    _refresh_stats_if_kept(spark, path)
     return n
 
 
@@ -729,10 +735,6 @@ def _dead_tombstone_pred(before_seq: int):
     horizon can't be proven passed), not silently dropped by a
     three-valued ~NULL filter — and the count must agree with the rows
     actually removed."""
-    from pyspark.sql import functions as F
-
-    from .apply import DELETED_COL, SEQ_COL, _canonical_seq
-
     return F.coalesce(F.col(DELETED_COL), F.lit(False)) & F.coalesce(
         _canonical_seq(F.col(SEQ_COL)) < _canonical_seq(F.lit(before_seq)),
         F.lit(False),
@@ -753,7 +755,7 @@ def vacuum_tombstones_table(
     ``apply_changes_bucketed``, so the bucketed (zero-Exchange-join)
     layout survives the vacuum and readers see the old version or the
     new one. Returns tombstones dropped."""
-    from .apply import DELETED_COL, _commit_bucketed
+    from .apply import _commit_bucketed
 
     is_dead = _dead_tombstone_pred(before_seq)
     n = 0
@@ -799,55 +801,38 @@ def compact_history(
 
     Scale: one latest-per-key window over the sub-horizon slice plus a
     rewrite — the same single-shuffle shape as the copy-on-write merge,
-    run at maintenance cadence instead of per batch.
+    run at maintenance cadence instead of per batch. The rewrite is a
+    whole-table swap, which records its frame's schema: the table is
+    read through ``apply._read_table``, so every column, partition
+    columns included, keeps the type readers see.
     """
-    from pyspark.sql import functions as F
-
-    from .apply import (
-        KEY_COL,
-        SEQ_COL,
-        _canonical_seq,
-        _swap_into,
-        latest_per_key,
-    )
-
-    from contextlib import nullcontext
-
-    data = table_data_dir(path)
-    # inference off for partitioned rewrites so partition dir names
-    # round-trip exactly (see _no_partition_type_inference: a re-typed
-    # value re-renders into a DIFFERENT directory than later appends)
-    guard = (
-        _no_partition_type_inference(spark) if partition_by else nullcontext()
-    )
-    with guard:
-        df = spark.read.option("mergeSchema", "true").parquet(data)
-        if KEY_COL not in df.columns:
-            raise ValueError(
-                "compact_history requires a history-mode table "
-                '(apply_changes(mode="history"))'
-            )
-        cut = _canonical_seq(F.lit(before_seq))
-        canon = df.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL)))
-        old = canon.filter(F.col(SEQ_COL) < cut)
-        recent = canon.filter(F.col(SEQ_COL) >= cut)
-        n_old = old.count()
-        folded = latest_per_key(old, KEY_COL, SEQ_COL)
-        n_folded = folded.count()
-        if n_old == n_folded:
-            _write_history_horizon(path, before_seq)
-            return 0
-        result = folded.unionByName(recent, allowMissingColumns=True)
-        horizon = max(
-            _canonical_seq_py(before_seq), read_history_horizon(path) or ""
+    df = _read_table(spark, path)
+    if KEY_COL not in df.columns:
+        raise ValueError(
+            "compact_history requires a history-mode table "
+            '(apply_changes(mode="history"))'
         )
-        _swap_into(
-            spark,
-            result,
-            path,
-            partition_by=partition_by,
-            extra_files={HISTORY_HORIZON_MARKER: horizon},
-        )
+    cut = _canonical_seq(F.lit(before_seq))
+    canon = df.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL)))
+    old = canon.filter(F.col(SEQ_COL) < cut)
+    recent = canon.filter(F.col(SEQ_COL) >= cut)
+    n_old = old.count()
+    folded = latest_per_key(old, KEY_COL, SEQ_COL)
+    n_folded = folded.count()
+    if n_old == n_folded:
+        _write_history_horizon(path, before_seq)
+        return 0
+    result = folded.unionByName(recent, allowMissingColumns=True)
+    horizon = max(
+        _canonical_seq_py(before_seq), read_history_horizon(path) or ""
+    )
+    _swap_into(
+        spark,
+        result,
+        path,
+        partition_by=partition_by,
+        extra_files={HISTORY_HORIZON_MARKER: horizon},
+    )
     _refresh_stats_if_kept(spark, path)
     return n_old - n_folded
 
@@ -1082,12 +1067,7 @@ def validate_warehouse(
     Reference tie: this generalizes the reference's row-count
     reconciliation (start_dms_replication_task_lambda/handler.py:89-93)
     from "same count" to "the keys themselves are sound"."""
-    from pyspark.sql import functions as F
-
-    from .apply import DELETED_COL, KEY_COL, SEQ_COL
-
-    fileset.repair_stranded_log(table_data_dir(path))
-    df = spark.read.option("mergeSchema", "true").parquet(table_data_dir(path))
+    df = _read_table(spark, path)
     history = KEY_COL in df.columns
     key_col = F.col(KEY_COL) if history else F.col(key)
     live = (
@@ -1161,28 +1141,17 @@ def purge_keys(
     every seq — that is the point, and the caller owns the compliance
     semantics (as with Delta's DELETE + VACUUM pair).
 
-    Mechanics mirror ``vacuum_tombstones``: flat tables rewrite through
-    the crash-recoverable staging swap; ``partition_by`` prunes the
-    rewrite to the partitions actually holding the keys (dynamic
-    overwrite, emptied partitions dropped) — purge cost is O(touched
-    partitions), not O(table). The skipping-stats sidecar rides the
-    swap and is refreshed where compaction would refresh it. Returns
-    the number of rows removed.
+    The rewrite is ``_delete_where``'s, as for ``vacuum_tombstones``:
+    ``partition_by`` prunes it to the partitions actually holding the
+    keys (emptied partitions dropped) — purge cost O(touched
+    partitions), not O(table); flat tables swap through the pointer
+    flip. The skipping-stats sidecar is refreshed after the rewrite.
+    Returns the number of rows removed.
     """
-    from pyspark.sql import functions as F
-
-    from .apply import (
-        KEY_COL,
-        _partition_scoped_read,
-        _touched_partition_dirs,
-        overwrite_partitions_dropping_emptied,
-    )
-
     if not values:
         return 0
-    data = table_data_dir(path)
 
-    def _pred(df):
+    def doomed(df):
         # NULL-safe: isin() on a NULL key yields NULL, and ~NULL is NULL,
         # so an un-coalesced survivor filter would silently DELETE every
         # NULL-key row (plausible on append-mode tables) — the same
@@ -1194,44 +1163,4 @@ def purge_keys(
             raw = F.col(key).isin(list(values))
         return F.coalesce(raw, F.lit(False))
 
-    if partition_by:
-        with _no_partition_type_inference(spark):
-            df = spark.read.option("mergeSchema", "true").parquet(data)
-            doomed = _pred(df)
-            groups = (
-                df.filter(doomed)
-                .groupBy(*partition_by)
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            n = int(sum(r["_n"] for r in groups))
-            if n == 0:
-                return 0
-            touched = [tuple(r[c] for c in partition_by) for r in groups]
-            dirs = _touched_partition_dirs(data, partition_by, touched, False)
-            # manifest-honoring read of the touched dirs (the same
-            # guard as vacuum_tombstones/compaction): a crashed
-            # append's unlogged junk inside a touched partition must
-            # not be read back — and thereby COMMITTED as live rows —
-            # by the purge rewrite. None (no committed files under the
-            # touched dirs, or no dirs resolved) falls back to the
-            # full staged swap of the manifest-planned frame.
-            sub = _partition_scoped_read(spark, data, dirs) if dirs else None
-            if sub is not None:
-                overwrite_partitions_dropping_emptied(
-                    spark, sub.filter(~_pred(sub)), path, partition_by, touched
-                )
-            else:
-                _swap_into(
-                    spark, df.filter(~doomed), path, partition_by=partition_by
-                )
-            _refresh_stats_if_kept(spark, path)
-            return n
-
-    df = spark.read.option("mergeSchema", "true").parquet(data)
-    n = df.filter(_pred(df)).count()
-    if n == 0:
-        return 0
-    _swap_into(spark, df.filter(~_pred(df)), path, partition_by=None)
-    _refresh_stats_if_kept(spark, path)
-    return n
+    return _delete_where(spark, path, doomed, partition_by)

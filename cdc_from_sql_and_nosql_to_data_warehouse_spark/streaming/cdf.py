@@ -901,7 +901,7 @@ def idempotent_windows(checkpoint_path: str, process):
             # from_seq guards a range the offset has moved past — the
             # feed can never re-deliver it
             try:
-                for name in os.listdir(done_dir):
+                for name in fsio.listdir(done_dir):
                     if not name.startswith("w_"):
                         continue
                     ended = name.split("_", 2)[1]

@@ -211,6 +211,30 @@ def test_stats_lifecycle_through_swap_and_compaction(spark, tmp_path):
     ]
 
 
+def test_vacuum_refreshes_kept_stats(spark, tmp_path):
+    """A tombstone vacuum rewrites the table, so it re-collects a kept
+    stats sidecar as compaction and purge do: after it the stats are
+    live and an out-of-range predicate prunes every file."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
+        apply_changes,
+    )
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
+        vacuum_tombstones,
+    )
+
+    wh = str(tmp_path / "wh")
+    rows = [("INSERT", "a", 1.0, 1), ("INSERT", "b", 2.0, 2), ("REMOVE", "b", None, 3)]
+    batch = spark.createDataFrame(
+        [(op, k, {"id": k, "price": p}, s, s) for op, k, p, s in rows],
+        "op string, key string, after struct<id: string, price: double>, "
+        "ts_ms long, seq long",
+    )
+    apply_changes(spark, batch, wh, "id", mode="upsert", propagate_deletes=True)
+    collect_file_stats(spark, wh, ["price"])
+    assert vacuum_tombstones(spark, wh, before_seq=100) == 1
+    assert prune_files(wh, [("price", ">", 1e9)])[0] == []
+
+
 def test_optimize_zorder_compaction(spark, tmp_path):
     """compact_parquet(zorder_by=...) is OPTIMIZE ZORDER BY: the rewrite
     clusters on the Morton key of the named columns so the refreshed
@@ -504,12 +528,15 @@ def test_bloom_on_nullable_int_column(spark, tmp_path):
     assert kept == []
 
 
-def test_incremental_stats_record_evolved_schema(spark, tmp_path):
+@pytest.mark.parametrize("refresh", [True, False], ids=["refresh", "no_refresh"])
+def test_incremental_stats_record_evolved_schema(spark, tmp_path, refresh):
     """collect_file_stats(incremental=True) must not carry the recorded
     schema forever: after a schema-evolving append, the sidecar schema
     unions the new files' columns so read_skipping (which imposes the
     sidecar schema instead of mergeSchema) still returns the evolved
-    column. Contract: read_skipping == unpruned read + filter, always."""
+    column. Without the refresh the appended file is unknown to the
+    sidecar, and its column must still reach the read. Contract:
+    read_skipping == unpruned read + filter, always."""
     import json
 
     path = str(tmp_path / "evolving")
@@ -523,9 +550,10 @@ def test_incremental_stats_record_evolved_schema(spark, tmp_path):
         [(3, 30.0, "NYSE"), (4, 40.0, "ARCA")],
         "id long, price double, venue string",
     ).coalesce(1).write.mode("append").parquet(tdd(path))
-    out = collect_file_stats(spark, path, ["id"], incremental=True)
-    recorded = [f["name"] for f in json.loads(out["schema"])["fields"]]
-    assert "venue" in recorded
+    if refresh:
+        out = collect_file_stats(spark, path, ["id"], incremental=True)
+        recorded = [f["name"] for f in json.loads(out["schema"])["fields"]]
+        assert "venue" in recorded
 
     got = read_skipping(spark, path, [("id", ">=", 3)])
     assert "venue" in got.columns

@@ -32,8 +32,11 @@ def test_oracle_parity(spark, name):
 
 
 def test_every_query_runs(spark):
-    """Queries without an oracle still need to execute and return a schema."""
+    """Queries without an oracle still need to execute and return a schema
+    (the oracle-backed ones run and hash-check in ``test_oracle_parity``)."""
     for name, fn in QUERIES.items():
+        if name in ORACLES:
+            continue
         df = fn(spark, SF_SMOKE)
         assert df.columns, name
         assert df.count() >= 0, name

@@ -8,7 +8,6 @@ import glob
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import apply_changes, read_warehouse
@@ -614,3 +613,46 @@ def test_warm_partitioned_upsert_job_budget(spark, tmp_path):
     )
     assert jobs <= 4, jobs
     assert [r["id"] for r in read_warehouse(spark, wh).collect()] == ["a"]
+
+
+@pytest.mark.parametrize("writer", ["engine", "plain"])
+@pytest.mark.parametrize("op", ["compact_history", "vacuum", "purge", "compact"])
+def test_maintenance_keeps_partition_column_types(spark, tmp_path, writer, op):
+    """Maintenance rewrites keep the reader-visible schema: an
+    int-partitioned history table reads ``shard`` as int before and
+    after each partitioned rewrite, whether the engine wrote it (schema
+    manifest present) or a plain ``write.partitionBy`` did (no manifest:
+    the maintenance reads see dir-name strings, and no rewrite may
+    record them as the table's types)."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import maintenance as M
+
+    wh = str(tmp_path / "wh")
+    batches = [
+        [("INSERT", "a", 1, 1), ("INSERT", "c", 2, 2)],
+        [("MODIFY", "a", 1, 3), ("REMOVE", "b", 2, 4)],
+    ]
+    for rows in batches:
+        if writer == "engine":
+            apply_changes(
+                spark, _sharded(spark, rows), wh, "id", mode="history",
+                partition_by=["shard"],
+            )
+        else:
+            spark.createDataFrame(
+                [(i, s, 1.0, i, str(seq).rjust(40, "0"), o == "REMOVE")
+                 for o, i, s, seq in rows],
+                "id string, shard int, price double, _key string, "
+                "_seq string, _deleted boolean",
+            ).write.mode("append").partitionBy("shard").parquet(wh)
+    before = read_warehouse(spark, wh).schema
+    assert before["shard"].dataType == T.IntegerType()
+    part = ["shard"]
+    if op == "compact_history":
+        assert M.compact_history(spark, wh, 100, partition_by=part) == 1
+    elif op == "vacuum":
+        assert M.vacuum_tombstones(spark, wh, 100, partition_by=part) == 1
+    elif op == "purge":
+        assert M.purge_keys(spark, wh, "id", ["a"], partition_by=part) == 2
+    else:
+        assert M.compact_parquet(spark, wh, partition_by=part).n_files == 2
+    assert read_warehouse(spark, wh).schema == before

@@ -17,6 +17,15 @@ PKG_DIR = pathlib.Path(pkg.__file__).parent
 
 def _calls(attr: str) -> list[tuple[str, str]]:
     """(module path, enclosing function) of every ``<expr>.<attr>(...)``."""
+    return _enclosing(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == attr
+    )
+
+
+def _enclosing(match) -> list[tuple[str, str]]:
+    """(module path, enclosing function) of every node ``match`` accepts."""
     found = []
     for path in sorted(PKG_DIR.rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
@@ -27,11 +36,7 @@ def _calls(attr: str) -> list[tuple[str, str]]:
                 if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     visit(child, child.name if fn == "<module>" else fn)
                     continue
-                if (
-                    isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == attr
-                ):
+                if match(child):
                     found.append((rel, fn))
                 visit(child, fn)
 
