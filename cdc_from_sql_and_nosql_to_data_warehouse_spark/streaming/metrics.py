@@ -90,6 +90,9 @@ class BatchMetric:
     # helpers below answer source-protocol questions (held manifest
     # offsets) without a second listener
     source_end_offsets: list = field(default_factory=list)
+    # Spark's per-phase wall time for this trigger (``durationMs``):
+    # latestOffset, walCommit, addBatch, commitOffsets, triggerExecution…
+    duration_ms: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -99,7 +102,7 @@ class PipelineMetrics(StreamingQueryListener):
     Attach with ``spark.streams.addListener(metrics)``; totals answer
     the reference's observability questions (how many records per
     trigger, did the batch make progress) without driver-side counts in
-    the data path.
+    the data path, and ``phase_ms`` says where the triggers' time went.
     """
 
     batches: list[BatchMetric] = field(default_factory=list)
@@ -119,6 +122,7 @@ class PipelineMetrics(StreamingQueryListener):
                 source_end_offsets=[
                     s.endOffset for s in p.sources if s.endOffset
                 ],
+                duration_ms=dict(p.durationMs),
             )
         )
 
@@ -131,6 +135,16 @@ class PipelineMetrics(StreamingQueryListener):
     def total_input_rows(self, query_name: str | None = None) -> int:
         return sum(
             b.num_input_rows
+            for b in self.batches
+            if query_name is None or b.query_name == query_name
+        )
+
+    def phase_ms(self, phase: str, query_name: str | None = None) -> int:
+        """Total ms Spark reported for one trigger phase (a
+        ``durationMs`` key such as ``walCommit``) over the collected
+        batches; a batch that did not run the phase adds 0."""
+        return sum(
+            b.duration_ms.get(phase, 0)
             for b in self.batches
             if query_name is None or b.query_name == query_name
         )

@@ -92,3 +92,44 @@ def test_streaming_metrics_listener(spark, tmp_path):
     assert metrics.total_input_rows("metrics_probe") == 10
     batch_ids = [b.batch_id for b in metrics.batches if b.query_name == "metrics_probe"]
     assert len(batch_ids) >= 2  # one per input file
+
+
+def test_listener_keeps_per_trigger_phase_times(spark, tmp_path):
+    """Spark's ``durationMs`` breakdown survives into every BatchMetric of
+    a two-hop append, so the checkpoint-log phases can be read from the
+    engine's own listener."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.config import EngineConfig
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.streaming.pipeline import (
+        run_staging_to_warehouse,
+        run_stream_to_staging,
+    )
+
+    from .fixtures import TRADE_SCHEMA, make_trade, write_stream_records_file
+
+    cfg = EngineConfig(apply_mode="append")
+    feed, staging = str(tmp_path / "feed"), str(tmp_path / "staging")
+    for b in range(2):
+        write_stream_records_file(feed, f"b{b}.json", [("INSERT", make_trade(b), b + 1)])
+
+    metrics = PipelineMetrics()
+    spark.streams.addListener(metrics)
+    try:
+        run_stream_to_staging(
+            spark, cfg, feed, staging, str(tmp_path / "ck1"), TRADE_SCHEMA
+        ).awaitTermination(120)
+        run_staging_to_warehouse(
+            spark, cfg, staging, str(tmp_path / "wh"), str(tmp_path / "ck2"), TRADE_SCHEMA
+        ).awaitTermination(120)
+        # listener events are delivered asynchronously
+        deadline = time.time() + 30
+        while time.time() < deadline and metrics.total_input_rows() < 4:
+            time.sleep(0.5)
+    finally:
+        spark.streams.removeListener(metrics)
+    assert metrics.total_input_rows() == 4  # 2 records in, 2 staged rows out
+    phases = ("latestOffset", "walCommit", "commitOffsets", "addBatch")
+    for b in metrics.batches:
+        assert all(b.duration_ms.get(p, -1) >= 0 for p in phases), b.duration_ms
+    for p in phases:
+        assert metrics.phase_ms(p) == sum(b.duration_ms[p] for b in metrics.batches)
+    assert metrics.phase_ms("triggerExecution") > 0

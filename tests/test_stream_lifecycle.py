@@ -1,8 +1,10 @@
 """Every engine streaming query starts in ``streaming/manager.start_query``.
 
 A static check (no Spark): parse the package and assert that the only
-``.start(...)`` and ``.trigger(...)`` calls are the ones inside
-``start_query``, so checkpoint and trigger policy stay a one-place edit.
+``.start(...)`` and ``.trigger(...)`` calls, the only
+``"checkpointLocation"`` option and the only mention of the
+checkpoint-manager conf are the ones inside ``start_query``, so
+checkpoint and trigger policy stay a one-place edit.
 """
 
 from __future__ import annotations
@@ -50,3 +52,26 @@ def test_only_start_query_starts_streams():
 
 def test_only_start_query_sets_triggers():
     assert _calls("trigger") == [("streaming/manager.py", "start_query")] * 2
+
+
+def _strings(pred) -> list[tuple[str, str]]:
+    """(module path, enclosing function) of every string literal
+    ``pred`` accepts."""
+    return _enclosing(
+        lambda n: isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and pred(n.value)
+    )
+
+
+def test_only_start_query_sets_checkpoint_location():
+    # .option("checkpointLocation", ...) or .options(checkpointLocation=...)
+    assert _strings(lambda s: s == "checkpointLocation") + _enclosing(
+        lambda n: isinstance(n, ast.keyword) and n.arg == "checkpointLocation"
+    ) == [("streaming/manager.py", "start_query")]
+
+
+def test_only_start_query_picks_checkpoint_manager():
+    assert _strings(lambda s: "checkpointFileManagerClass" in s) == [
+        ("streaming/manager.py", "start_query")
+    ]
