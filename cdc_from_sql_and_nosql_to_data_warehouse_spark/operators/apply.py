@@ -2128,6 +2128,15 @@ def _local_path(uri: str) -> str:
     return os.path.normpath(unquote(p.path) if p.scheme == "file" else uri)
 
 
+def _bucketed_root(spark: SparkSession, table_name: str) -> str:
+    """A bucketed table's pointer-layout root: its default catalog
+    path, ``<spark.sql.warehouse.dir>/<table>``, known with or without
+    a catalog entry."""
+    jss = spark._jsparkSession
+    ident = jss.sessionState().sqlParser().parseTableIdentifier(table_name)
+    return _local_path(jss.sessionState().catalog().defaultTablePath(ident).toString())
+
+
 def _commit_bucketed(
     spark: SparkSession,
     table_name: str,
@@ -2146,9 +2155,7 @@ def _commit_bucketed(
     the flip leaves the old version served and an orphan the GC
     collects; after it, a stale catalog entry the next commit
     re-points. A replayed batch converges either way."""
-    jss = spark._jsparkSession
-    ident = jss.sessionState().sqlParser().parseTableIdentifier(table_name)
-    root = _local_path(jss.sessionState().catalog().defaultTablePath(ident).toString())
+    root = _bucketed_root(spark, table_name)
     spec = (bucket_cols, n_buckets)
     with _fence(root, "table"):
         current = _serve_bucketed(spark, table_name, root, spec)
@@ -2630,11 +2637,19 @@ def follow_changes(
 def read_warehouse_table(
     spark: SparkSession, table_name: str, with_seq: bool = False
 ):
-    """Reader view of a bucketed managed warehouse table (tombstones
-    filtered). Reading through spark.table() directly keeps the
-    bucketed scan properties for joins; this only adds the metadata
-    filter/projection on top."""
-    return _reader_view(spark.table(table_name), with_seq)
+    """Reader view of a bucketed warehouse table (tombstones filtered).
+    Reading through spark.table() directly keeps the bucketed scan
+    properties for joins; this only adds the metadata filter/projection
+    on top. A session with no catalog entry for the table (after a
+    ``DROP TABLE``, or a new process with the in-memory catalog) reads
+    the committed state under the table's root instead, without
+    bucketing; the next apply re-registers the entry."""
+    df = (
+        spark.table(table_name)
+        if spark.catalog.tableExists(table_name)
+        else _read_table(spark, _bucketed_root(spark, table_name))
+    )
+    return _reader_view(df, with_seq)
 
 
 def sync_changes(

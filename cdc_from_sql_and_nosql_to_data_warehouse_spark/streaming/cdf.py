@@ -67,6 +67,27 @@ def _is_hive_partitioned(data_dir: str) -> bool:
         return False
 
 
+def _history_feed_schema(source_path: str):
+    """The recorded schema of the history table a stream follows. A
+    stream needs it up front (``readStream`` cannot scan for one), and
+    only a history-mode table retains the version rows a change feed
+    is derived from."""
+    schema = read_table_schema(source_path)
+    if schema is None:
+        raise ValueError(
+            "streaming over a change feed requires the table's schema "
+            "manifest (_table_schema.json); run apply.refresh_table_schema "
+            "once for tables written outside the engine"
+        )
+    if KEY_COL not in schema.fieldNames():
+        raise ValueError(
+            "streaming over a change feed requires a history-mode table "
+            '(apply_changes(mode="history")); latest-wins tables do not '
+            "retain the version history a change feed is derived from"
+        )
+    return schema
+
+
 def stream_changes(
     spark: SparkSession,
     source_path: str,
@@ -132,19 +153,7 @@ def stream_changes(
     feeds through ``stream_sync_changes`` / ``follow_changes`` /
     ``stream_classified_changes``, which are layout-proof; only pin a
     partitioned content stream to a feed you will never compact."""
-    schema = read_table_schema(source_path)
-    if schema is None:
-        raise ValueError(
-            "stream_changes requires the table's schema manifest "
-            "(_table_schema.json); run apply.refresh_table_schema once "
-            "for tables written outside the engine"
-        )
-    if KEY_COL not in schema.fieldNames():
-        raise ValueError(
-            "stream_changes requires a history-mode table "
-            '(apply_changes(mode="history")); latest-wins tables do not '
-            "retain the version history a change feed is derived from"
-        )
+    schema = _history_feed_schema(source_path)
     # ignore_missing_files: a compaction swap can delete listed-but-
     # unread files under a CONTINUOUS (processingTime) stream mid-
     # trigger; without it the in-flight batch dies on
@@ -321,18 +330,7 @@ def _pacing_stream(
     raw glob re-expands)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    schema = read_table_schema(source_path)
-    if schema is None:
-        raise ValueError(
-            "streaming over a change feed requires the table's schema "
-            "manifest (_table_schema.json); run apply.refresh_table_schema "
-            "once for tables written outside the engine"
-        )
-    if KEY_COL not in schema.fieldNames():
-        raise ValueError(
-            "streaming over a change feed requires a history-mode table "
-            '(apply_changes(mode="history"))'
-        )
+    schema = _history_feed_schema(source_path)
     from . import manifest_source
 
     # manifest/walk change-detector pacer vs raw recursive listing:
@@ -347,9 +345,7 @@ def _pacing_stream(
     # no manifest (current-version walk fallback), so the policy's
     # has_log input is pinned True.
     def _default() -> bool:
-        return continuous or manifest_source.planning_default(
-            source_path, False, True
-        )
+        return manifest_source.planning_default(source_path, continuous, True)
 
     if sticky_dir is not None:
         use_pacer = _sticky_source_kind(

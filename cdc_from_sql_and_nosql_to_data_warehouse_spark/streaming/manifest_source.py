@@ -76,14 +76,23 @@ offsets/partitions/schema, executor workers for ``read`` — whose
 that imported this package via a path hack (the driver contract does
 exactly that) would register classes those processes cannot import:
 the streaming source runner in particular receives NO python-includes
-path (verified empirically — ``addPyFile`` reaches executor workers
-but not the runner). So this module (a) imports NOTHING from the
-package — the few helpers it needs are SELF-CONTAINED TWINS of
-``operators.apply`` / ``operators.fileset`` functions, each pinned
-against its original by ``tests/test_manifest_source.py`` so they
-cannot drift — and (b) registers itself with cloudpickle's
-``register_pickle_by_value``, so every class and helper ships INSIDE
-the pickle and no worker ever imports the package.
+path (``addPyFile`` reaches executor workers but not the runner). So
+``_ensure_registered`` registers four modules with cloudpickle's
+``register_pickle_by_value`` — this one, ``fsio``,
+``operators.fileset`` and ``operators.apply`` — and every class and
+helper ships INSIDE the pickle: the sources plan with the batch
+plane's own pointer, schema and fileset-log readers, and no worker
+ever imports the package (pinned by
+``tests/test_manifest_source.py::test_sources_unpickle_in_isolated_interpreter``).
+The helpers are imported BY NAME: a by-value function carries only
+the globals it uses, while a by-value module reference would carry
+its whole namespace (``fileset._FILESET_CACHE`` included).
+
+Known limit: a by-value module ships its attributes as they are at
+pickle time. A tracer that rebinds ``fsio`` functions to wrappers
+closing over itself (``cdcbench/tracing.py``) makes a manifest-planned
+stream started while it is installed fail to pickle; start such
+streams with the tracer uninstalled.
 
 Reference tie: the reference's stream relay never lists either — the
 managed iterator hands it each change exactly once
@@ -93,9 +102,7 @@ from commit metadata is the self-hosted equivalent.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
@@ -104,6 +111,21 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StringType, StructField, StructType
+
+from .. import fsio
+from ..operators.apply import (
+    _is_version_name,
+    read_table_schema,
+    table_data_dir,
+)
+from ..operators.fileset import (
+    _batch_files,
+    _batch_id,
+    _replay_order,
+    _resolved_entries,
+    log_epoch,
+    walk_data_files,
+)
 
 # partition-count FLOOR for one micro-batch's file delta cap: a
 # steady-state trigger is a handful of files (one task each); a full
@@ -122,149 +144,6 @@ _MAX_PARTITIONS = 32
 RETAINED_DIRS_THRESHOLD = 16
 
 
-# --- self-contained twins (see module doc; drift-pinned by tests) ----------
-
-_CURRENT_POINTER = "_current"  # twin of apply.CURRENT_POINTER
-_SCHEMA_MANIFEST = "_table_schema.json"  # twin of apply.SCHEMA_MANIFEST
-_LOG_DIR = "_spark_metadata"  # twin of fileset.LOG_DIR
-_LOG_VERSION = "v1"  # twin of fileset._LOG_VERSION
-_VERSION_RE = re.compile(r"v_\d{10}_[0-9a-f]{8}\Z")  # apply._VERSION_NAME_RE
-
-
-def _read_text(path: str) -> str | None:
-    try:
-        with open(path) as f:
-            return f.read()
-    except FileNotFoundError:
-        return None
-
-
-def _data_dir(root: str) -> str:
-    """Twin of ``apply.table_data_dir``: the version dir named by the
-    ``_current`` pointer, or the root itself for legacy tables
-    (missing/empty pointer)."""
-    raw = _read_text(os.path.join(root, _CURRENT_POINTER))
-    if raw is None or not raw.strip():
-        return root
-    return os.path.join(root, raw.strip())
-
-
-def _schema_of(root: str) -> StructType | None:
-    """Twin of ``apply.read_table_schema``."""
-    raw = _read_text(os.path.join(_data_dir(root), _SCHEMA_MANIFEST))
-    if raw is None:
-        return None
-    return StructType.fromJson(json.loads(raw))
-
-
-_EPOCH_FILE = ".epoch"  # twin of fileset._EPOCH_FILE
-
-
-def _log_epoch(data_dir: str) -> str:
-    """Twin of ``fileset.log_epoch``: the log incarnation's identity.
-    Batch ids are only comparable within one incarnation (an
-    invalidate + re-adopt or a relocated-log repair restarts ids over
-    a DIFFERENT base), so offsets carry the epoch and a mismatch is
-    treated like a version change — full gated re-delivery instead of
-    a silently wrong delta. '' for pre-epoch logs (both sides of a
-    comparison then read '', preserving their old behavior)."""
-    return (
-        _read_text(os.path.join(data_dir, _LOG_DIR, _EPOCH_FILE)) or ""
-    ).strip()
-
-
-_POISON = ".invalidated"  # twin of fileset._POISON
-
-
-def _batch_files(data_dir: str) -> list[str]:
-    """Twin of ``fileset._batch_files`` (including the portable
-    invalidate's poison sentinel: a poisoned log is no log, and a
-    plain FILE squatting the log name is an empty listing — the
-    object-store LIST mapping ``fsio.listdir`` applies — not a query-
-    killing NotADirectoryError)."""
-    try:
-        names = os.listdir(os.path.join(data_dir, _LOG_DIR))
-    except (FileNotFoundError, NotADirectoryError):
-        return []
-    if _POISON in names:
-        return []
-    out = []
-    for name in names:
-        base = name[: -len(".compact")] if name.endswith(".compact") else name
-        if base.isdigit():
-            out.append(name)
-    return out
-
-
-def _batch_id(name: str) -> int:
-    return int(name[: -len(".compact")] if name.endswith(".compact") else name)
-
-
-def _entry_lines(data_dir: str, name: str) -> list[dict]:
-    """Twin of ``fileset._entry_lines``."""
-    raw = _read_text(os.path.join(data_dir, _LOG_DIR, name))
-    if raw is None:
-        return []
-    lines = raw.splitlines()
-    if not lines or lines[0].strip() != _LOG_VERSION:
-        raise ValueError(
-            f"unrecognized fileset-log version in {name!r} under "
-            f"{os.path.join(data_dir, _LOG_DIR)!r}"
-        )
-    return [json.loads(ln) for ln in lines[1:] if ln.strip()]
-
-
-def _replay_order(names: list[str]) -> list[str]:
-    """Twin of ``fileset._replay_order``: latest compact, then later
-    plain batches ascending."""
-    compacts = [n for n in names if n.endswith(".compact")]
-    start = max((_batch_id(n) for n in compacts), default=-1)
-    return [n for n in compacts if _batch_id(n) == start] + sorted(
-        (
-            n
-            for n in names
-            if not n.endswith(".compact") and _batch_id(n) > start
-        ),
-        key=_batch_id,
-    )
-
-
-def _resolved_rels(data_dir: str, batch_names: list[str]) -> set | None:
-    """Twin of ``fileset._resolved_entries`` reduced to relpaths (the
-    streaming planner needs no sizes): None on foreign URIs."""
-    prefixes = {
-        "file://" + os.path.abspath(data_dir) + os.sep,
-        "file://" + os.path.realpath(data_dir) + os.sep,
-    }
-    out: set = set()
-    for name in batch_names:
-        for entry in _entry_lines(data_dir, name):
-            p = entry.get("path", "")
-            rel = next(
-                (p[len(pre):] for pre in prefixes if p.startswith(pre)),
-                None,
-            )
-            if rel is None:
-                return None
-            if entry.get("action") == "delete":
-                out.discard(rel)  # not emitted by this engine
-            else:
-                out.add(rel)
-    return out
-
-
-def _walk_data_files(root: str) -> list[str]:
-    """Twin of ``fileset.walk_data_files``."""
-    out: list[str] = []
-    root = os.path.abspath(root)
-    for cur, dirs, names in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                out.append(os.path.relpath(os.path.join(cur, n), root))
-    return sorted(out)
-
-
 # --- policy -----------------------------------------------------------------
 
 
@@ -280,7 +159,7 @@ def planning_default(
     if continuous:
         return True
     n = sum(
-        1 for name in os.listdir(source_path) if _VERSION_RE.match(name)
+        1 for name in fsio.listdir(source_path) if _is_version_name(name)
     )
     return n > RETAINED_DIRS_THRESHOLD
 
@@ -293,11 +172,11 @@ def _feed_state(root: str) -> tuple[str, str, int, str]:
     log epoch). One pointer read + one log-dir listing + one small
     read — the per-trigger planning cost, independent of data-file
     count and retained-version count."""
-    data = _data_dir(root)
+    data = table_data_dir(root)
     ver = os.path.relpath(os.path.abspath(data), os.path.abspath(root))
     names = _batch_files(data)
     tip = max((_batch_id(n) for n in names), default=-1)
-    return data, ver, tip, _log_epoch(data) if tip >= 0 else ""
+    return data, ver, tip, log_epoch(data) if tip >= 0 else ""
 
 
 class _FeedPartition(InputPartition):
@@ -392,10 +271,10 @@ class _ManifestFeedReader(DataSourceStreamReader):
         names = [n for n in _batch_files(data) if _batch_id(n) <= tip]
         if not names:
             return None
-        rels = _resolved_rels(data, _replay_order(names))
-        if rels is None:
+        resolved = _resolved_entries(data, _replay_order(names))
+        if resolved is None:
             return None
-        out = frozenset(rels)
+        out = frozenset(resolved)
         if len(self._cache) > 4:
             self._cache.clear()
         self._cache[key] = out
@@ -419,8 +298,8 @@ class _ManifestFeedReader(DataSourceStreamReader):
             return None
         if {_batch_id(n) for n in window} != set(range(lo + 1, hi + 1)):
             return None  # a window batch vanished: resolve fully
-        rels = _resolved_rels(data, sorted(window, key=_batch_id))
-        return frozenset(rels) if rels is not None else None
+        resolved = _resolved_entries(data, sorted(window, key=_batch_id))
+        return frozenset(resolved) if resolved is not None else None
 
     def partitions(self, start: dict, end: dict):
         self._seed_last(end, start)
@@ -569,7 +448,7 @@ class ChangeFeedDataSource(DataSource):
         return "cdc_manifest_feed"
 
     def schema(self) -> StructType:
-        schema = _schema_of(self.options["path"])
+        schema = read_table_schema(self.options["path"])
         if schema is None:
             raise ValueError(
                 "cdc_manifest_feed requires the table's schema manifest "
@@ -619,7 +498,7 @@ class _PacerReader(DataSourceStreamReader):
             # no manifest (legacy layout): digest the current version's
             # data-file walk — one dir's walk, never the retained
             # superseded versions the old recursive glob re-listed
-            key = f"walk:{ver}:" + "\n".join(_walk_data_files(data))
+            key = f"walk:{ver}:" + "\n".join(walk_data_files(data))
         return {"k": hashlib.md5(key.encode()).hexdigest()}
 
     def partitions(self, start: dict, end: dict):
@@ -648,18 +527,22 @@ class FeedPacerDataSource(DataSource):
 
 
 def _ensure_registered(spark: SparkSession) -> None:
-    """Idempotent per-session registration of both sources. The module
-    is registered with cloudpickle BY VALUE first, so the pickled
-    DataSource classes carry this module's code into every worker
-    process (driver-side source runner included) — no worker ever
-    imports the package; see the module doc's SELF-CONTAINMENT note."""
+    """Idempotent per-session registration of both sources. This module
+    and the three it plans through are registered with cloudpickle BY
+    VALUE first, so the pickled DataSource classes carry their code
+    into every worker process (driver-side source runner included) —
+    no worker ever imports the package; see the module doc's
+    SELF-CONTAINMENT note."""
     if getattr(spark, "_cdc_manifest_sources_registered", False):
         return
     import sys
 
     from pyspark import cloudpickle
 
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    from ..operators import apply, fileset
+
+    for module in (sys.modules[__name__], fsio, fileset, apply):
+        cloudpickle.register_pickle_by_value(module)
     spark.dataSource.register(ChangeFeedDataSource)
     spark.dataSource.register(FeedPacerDataSource)
     spark._cdc_manifest_sources_registered = True

@@ -57,12 +57,17 @@ NEW = {i: i * 10 for i in range(25)} | {i: i * 100 for i in range(25, 75)}
 
 def test_bucketed_apply_resumes_after_catalog_loss(spark):
     """DROP TABLE is what a new process with the in-memory catalog
-    sees: the next apply re-registers the committed state and merges on
-    top of it instead of starting a fresh table."""
+    sees: reads serve the committed state from the table's root, and
+    the next apply re-registers it and merges on top of it instead of
+    starting a fresh table."""
     tbl = "bc_restart"
     _apply(spark, tbl, B1)
     spark.sql(f"DROP TABLE {tbl}")
     assert not spark.catalog.tableExists(tbl)
+    # the committed state stays readable without a catalog entry
+    assert {
+        r["id"]: r["v"] for r in A.read_warehouse_table(spark, tbl).collect()
+    } == OLD
     _apply(spark, tbl, B2)
     assert _rows(spark, tbl) == NEW
     _assert_bucketed(spark, tbl, 4)

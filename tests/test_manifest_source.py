@@ -330,18 +330,39 @@ def test_upgrade_retires_root_manifest(spark, tmp_path):
     assert fileset.has_log(d)
 
 
-def test_self_contained_twins_cannot_drift(spark, tmp_path):
-    """manifest_source runs in worker processes that cannot import the
-    package (module doc's SELF-CONTAINMENT note), so it carries twins
-    of the few apply/fileset helpers it needs. This pin runs every twin
-    against its original on a real table; any drift fails here before
-    it can diverge stream planning from batch planning."""
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
-        read_table_schema,
-    )
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.maintenance import (
-        compact_history,
-    )
+_ISOLATED_DRIVE = """
+import importlib.util, pickle, sys
+assert importlib.util.find_spec(sys.argv[2]) is None  # package unreachable
+with open(sys.argv[1], "rb") as f:
+    feed_cls, pacer_cls, src = pickle.load(f)
+feed = feed_cls({"path": src})
+reader = feed.streamReader(feed.schema())
+end = reader.latestOffset()
+rows = sum(
+    batch.num_rows
+    for part in reader.partitions(reader.initialOffset(), end)
+    for batch in reader.read(part)
+)
+pacer = pacer_cls({"path": src}).streamReader(None)
+print(rows, end["b"], bool(pacer.latestOffset()["k"]))
+"""
+
+
+def test_sources_unpickle_in_isolated_interpreter(spark, tmp_path):
+    """The Python source runner and executor workers cannot import the
+    package (manifest_source module doc's SELF-CONTAINMENT note), so
+    the pickled sources must carry every helper they plan through. The
+    pickle is driven in an isolated interpreter (``-I``, unrelated
+    cwd) where the package is not importable: schema, offsets,
+    partitions and read of the content source, and the pacer's
+    offset."""
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    import cdc_from_sql_and_nosql_to_data_warehouse_spark as pkg
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.streaming import (
         manifest_source as ms,
     )
@@ -349,40 +370,25 @@ def test_self_contained_twins_cannot_drift(spark, tmp_path):
     src = str(tmp_path / "src")
     apply_changes(
         spark,
-        _env(spark, [("a", "INSERT", 1, 1), ("a", "MODIFY", 2, 2),
-                     ("b", "INSERT", 3, 3)]),
+        _env(spark, [("a", "INSERT", 1, 1), ("b", "INSERT", 2, 2)]),
         src, "k", mode="history",
     )
-    # legacy layout first, then the pointer layout after a swap
-    for _ in range(2):
-        d = table_data_dir(src)
-        assert ms._data_dir(src) == d
-        assert ms._schema_of(src) == read_table_schema(src)
-        assert sorted(ms._batch_files(d)) == sorted(fileset._batch_files(d))
-        names = fileset._batch_files(d)
-        assert ms._replay_order(names) == fileset._replay_order(names)
-        resolved = fileset._resolved_entries(d, fileset._replay_order(names))
-        assert ms._resolved_rels(d, ms._replay_order(names)) == set(resolved)
-        assert ms._walk_data_files(d) == fileset.walk_data_files(d)
-        assert fileset.read_fileset(d) == sorted(
-            ms._resolved_rels(d, ms._replay_order(names))
+    ms._ensure_registered(spark)
+    blob = tmp_path / "sources.pkl"
+    blob.write_bytes(
+        cloudpickle.dumps(
+            (ms.ChangeFeedDataSource, ms.FeedPacerDataSource, src),
+            protocol=pickle.HIGHEST_PROTOCOL,
         )
-        compact_history(spark, src, before_seq=3)
-    # constants themselves
-    assert ms._CURRENT_POINTER == A.CURRENT_POINTER
-    assert ms._SCHEMA_MANIFEST == A.SCHEMA_MANIFEST
-    assert ms._LOG_DIR == fileset.LOG_DIR
-    assert ms._VERSION_RE.pattern == A._VERSION_NAME_RE.pattern
-    assert ms._EPOCH_FILE == fileset._EPOCH_FILE
-    assert ms._POISON == fileset._POISON
-    d = table_data_dir(src)
-    assert ms._log_epoch(d) == fileset.log_epoch(d) != ""
-    # poison behavior must agree too: a poisoned log is no log to both
-    poison = os.path.join(d, fileset.LOG_DIR, fileset._POISON)
-    with open(poison, "w"):
-        pass
-    assert ms._batch_files(d) == fileset._batch_files(d) == []
-    os.remove(poison)
+    )
+    cwd = tmp_path / "elsewhere"
+    cwd.mkdir()
+    out = subprocess.run(
+        [sys.executable, "-I", "-c", _ISOLATED_DRIVE, str(blob), pkg.__name__],
+        cwd=cwd, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["2", "0", "True"]
 
 
 def test_log_epoch_guards_rebased_offsets(spark, tmp_path):
@@ -909,25 +915,6 @@ def test_held_trigger_visible_in_listener(spark, tmp_path):
     assert sorted(
         (r["k"], r["v"]) for r in read_warehouse(spark, dst).collect()
     ) == [("a", 1.0)]
-
-
-def test_twin_batch_files_tolerates_file_squat(tmp_path):
-    """Review finding (round 12): a plain FILE squatting the
-    _spark_metadata name must read as 'no log' in the streaming twin
-    exactly as it does in fileset._batch_files (via fsio.listdir's
-    object-store LIST mapping) — a NotADirectoryError here would kill
-    a continuous manifest-planned stream on a state the batch plane
-    treats as benign."""
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.streaming import (
-        manifest_source as ms,
-    )
-
-    d = str(tmp_path / "t")
-    os.makedirs(d)
-    with open(os.path.join(d, ms._LOG_DIR), "w") as f:
-        f.write("junk")
-    assert ms._batch_files(d) == []
-    assert fileset._batch_files(d) == []  # twin parity
 
 
 def test_stream_converges_under_aggressive_pruning(spark, tmp_path):

@@ -4,7 +4,9 @@ A static check (no Spark): parse the package and assert that the only
 ``.start(...)`` and ``.trigger(...)`` calls, the only
 ``"checkpointLocation"`` option and the only mention of the
 checkpoint-manager conf are the ones inside ``start_query``, so
-checkpoint and trigger policy stay a one-place edit.
+checkpoint and trigger policy stay a one-place edit. The manifest-planned
+streaming sources get the same kind of check: they open no file and list
+no directory themselves.
 """
 
 from __future__ import annotations
@@ -75,3 +77,16 @@ def test_only_start_query_picks_checkpoint_manager():
     assert _strings(lambda s: "checkpointFileManagerClass" in s) == [
         ("streaming/manager.py", "start_query")
     ]
+
+
+def test_manifest_sources_touch_storage_only_through_the_package():
+    # control reads go through fsio and the batch plane's readers;
+    # parquet reads (pyarrow) are the data plane and stay allowed
+    tree = ast.parse((PKG_DIR / "streaming/manifest_source.py").read_text())
+    raw = [
+        ast.unparse(n.func)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and ast.unparse(n.func) in ("open", "os.listdir", "os.walk", "os.scandir")
+    ]
+    assert raw == []
