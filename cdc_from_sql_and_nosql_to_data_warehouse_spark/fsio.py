@@ -1,15 +1,16 @@
-"""The coordination layer's filesystem primitives — in ONE place.
+"""The engine's storage primitives — in ONE place.
 
 Every piece of engine coordination state (writer locks, schema
 manifests, stats sidecars, compaction-horizon and feed-offset markers,
-the version pointer every whole-table commit flips) ultimately needs
-only FOUR storage primitives. The operator modules used to call ``os.*``
-directly at ~20 sites, welding the POSIX assumption into each; this
-module is the single seam an object-store port swaps out. Data-plane
-I/O (parquet reads/writes, file listing for scans) stays with Spark
-and ``os.walk`` — those already ride Hadoop filesystem connectors on a
-real cluster; THIS seam is for the engine's own control files, which
-Spark never touches.
+the version pointer every whole-table commit flips) needs only a few
+storage primitives, and so does the table layer's own answer to "which
+files does this table hold" (``operators/fileset.committed_files``).
+The table layer calls these instead of ``os.*``, so the POSIX
+assumption lives in this one module, the seam an object-store port
+swaps out. Parquet reads and writes stay with Spark, which already
+rides Hadoop filesystem connectors on a real cluster; the table
+layer's own listings, directory probes and control-file writes go
+through here.
 
 The primitives and their object-store equivalents:
 
@@ -35,6 +36,13 @@ primitive              object-store mapping
                        have NO atomic rename — single-FILE moves
                        become copy+delete (see ``move``), and no
                        whole-table commit moves a directory.
+``walk``               one recursive LIST (``prefix=root/``, no
+                       delimiter), grouped by key prefix into the
+                       same (dir, subdirs, names) triples.
+``size``               the object's Content-Length, from the same
+                       LIST that named it.
+``rmdir``              nothing to do: a prefix with no keys under it
+                       does not exist.
 =====================  ==========================================
 
 Reference tie: the reference delegates all of this to managed services
@@ -156,8 +164,8 @@ def listdir(path: str) -> list[str]:
     orphans under a table root, sidecar shards) are all shallow and
     small, so a single page suffices in practice and pagination is the
     provider SDK's problem, not a semantic one. Data-plane listing
-    (parquet scans) stays with Spark's Hadoop connectors — this is for
-    the engine's own control namespace only. A plain FILE squatting
+    (parquet scans) stays with Spark's Hadoop connectors; recursive
+    enumeration is ``walk``. A plain FILE squatting
     ``path`` is an empty listing, not an error — on a store, an object
     at key ``path`` and keys under ``path/`` are unrelated namespaces,
     so the LIST page is simply empty; POSIX's NotADirectoryError is a
@@ -222,11 +230,38 @@ def isdir(path: str) -> bool:
     """True when ``path`` exists as a directory. Object-store mapping:
     LIST with ``prefix=path/`` and ``max-keys=1`` (directories are
     prefixes — a non-empty prefix IS the directory existing).
-    Coordination-plane existence checks (commit-log pruning, version
-    availability for ``VERSION AS OF``) route here so an object-store
-    port swaps one seam; data-plane walks stay with Spark/os.walk as
-    the module doc says."""
+    Existence checks (commit-log pruning, version availability for
+    ``VERSION AS OF``, orphan detection) route here so an object-store
+    port swaps one seam."""
     return os.path.isdir(path)
+
+
+def walk(root: str):
+    """Top-down ``(dir, subdirs, names)`` triples under ``root``, like
+    ``os.walk``: nothing for a missing root, and a caller that prunes
+    ``subdirs`` in place is never handed the pruned subtrees. Lazy, so
+    a caller that stops early (an existence probe) lists no further."""
+    return os.walk(root)
+
+
+def size(path: str) -> int | None:
+    """Byte size of a file, or None when it does not exist (like
+    ``mtime``)."""
+    try:
+        return os.path.getsize(path)
+    except OSError:
+        return None
+
+
+def rmdir(path: str) -> bool:
+    """Remove an EMPTY directory; False when it is not empty, is gone,
+    or cannot be removed. Callers treat a leftover dir as residue a
+    later sweep collects."""
+    try:
+        os.rmdir(path)
+        return True
+    except OSError:
+        return False
 
 
 def mtime(path: str) -> float | None:

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import re
 import shutil
 import uuid
 
@@ -47,6 +46,8 @@ from pyspark.sql import functions as F
 from .. import fsio
 from ..functions.sql_templates import quote_ident, quote_literal
 from ..sources.change_feed import VALID_OPS
+from . import fileset
+from .fileset import _is_version_name
 
 SEQ_COL = "_seq"
 # Tombstone marker for propagate_deletes mode: a winning REMOVE stores a
@@ -143,20 +144,6 @@ def table_data_dir(path: str) -> str:
     return os.path.join(path, name)
 
 
-_VERSION_NAME_RE = re.compile(r"v_\d{10}_[0-9a-f]{8}\Z")
-
-
-def _is_version_name(name: str) -> bool:
-    """True for names ``_swap_into`` stages version dirs under
-    (``v_<10 digits>_<8 hex>``). The pattern is disjoint from
-    everything else a table dir legitimately contains: hive partition
-    dirs carry ``=``, Spark's data files carry extensions, and control
-    files are ``_``-prefixed — so a version-named entry is always the
-    engine's own (a committed version, a superseded one awaiting GC,
-    or an aborted commit's orphan)."""
-    return _VERSION_NAME_RE.match(name) is not None
-
-
 def _legacy_orphan_versions(root: str) -> list[str]:
     """Version-named entries under a POINTER-LESS root — always the
     staging of an ABORTED commit (the pointer write is what makes a
@@ -175,7 +162,7 @@ def _legacy_orphan_versions(root: str) -> list[str]:
     return [
         os.path.join(root, e)
         for e in fsio.listdir(root)
-        if _is_version_name(e) and os.path.isdir(os.path.join(root, e))
+        if _is_version_name(e) and fsio.isdir(os.path.join(root, e))
     ]
 
 
@@ -208,19 +195,12 @@ def _data_read_paths(path: str) -> tuple[str, list[str] | None]:
         return d, None  # pointer layout: version dirs are always clean
     junk = False
     keep: list[str] = []
-    try:
-        with os.scandir(d) as it:
-            for e in it:
-                if _is_version_name(e.name) and e.is_dir(
-                    follow_symlinks=False
-                ):
-                    junk = True
-                    continue
-                if e.name.startswith(("_", ".")):
-                    continue
-                keep.append(e.path)
-    except FileNotFoundError:
-        return d, None
+    for name in fsio.listdir(d):
+        p = os.path.join(d, name)
+        if _is_version_name(name) and fsio.isdir(p):
+            junk = True
+        elif not name.startswith(("_", ".")):
+            keep.append(p)
     if not junk:
         return d, None
     return d, keep
@@ -253,7 +233,7 @@ def table_versions(path: str) -> list[dict]:
         {
             "name": name,
             "current": name == cur,
-            "available": os.path.isdir(os.path.join(path, name)),
+            "available": fsio.isdir(os.path.join(path, name)),
         }
         for name in committed_versions(path)
     ]
@@ -282,7 +262,7 @@ def read_warehouse_version(
             f"readable (see {VERSIONS_LOG})"
         )
     vdir = os.path.join(path, version)
-    if not os.path.isdir(vdir):
+    if not fsio.isdir(vdir):
         raise FileNotFoundError(
             f"version {version!r} of {path!r} was garbage-collected; "
             "raise VERSION_GC_GRACE_SECONDS to retain superseded "
@@ -367,7 +347,7 @@ def _gc_superseded(root: str, keep: str) -> int:
             new_clock[entry] = superseded_at
             continue
         p = os.path.join(root, entry)
-        if os.path.isdir(p):
+        if fsio.isdir(p):
             fsio.remove_tree(p)
             _drop_path_caches(p)
         else:
@@ -382,8 +362,6 @@ def _drop_path_caches(data_dir: str) -> None:
     without this, every swap would strand one parsed-sidecar copy in
     the process-lifetime caches."""
     _SEQ_CANONICAL_CACHE.pop(data_dir, None)
-    from . import fileset
-
     fileset._FILESET_CACHE.pop(data_dir, None)
     try:
         from .layout import _SIDECAR_CACHE
@@ -577,8 +555,6 @@ def _read_table(spark: SparkSession, path: str) -> DataFrame:
     if paths is None:
         # a crash-stranded EMPTY _spark_metadata dir would make Spark
         # plan zero files over live data; repair it before the read
-        from . import fileset
-
         fileset.repair_stranded_log(d)
         return reader.parquet(d)
     if not paths:
@@ -755,7 +731,7 @@ def current_max_seq(spark: SparkSession, path: str) -> str | None:
     recorded _seq bound is already canonical (engine-written history
     tables always are); anything else falls back to the scan, which
     canonicalizes row-wise."""
-    from .layout import _dec_stat, _list_data_files, _load_sidecar
+    from .layout import _dec_stat, _load_sidecar
 
     path = table_data_dir(path)
     stats = _load_sidecar(path)
@@ -770,7 +746,7 @@ def current_max_seq(spark: SparkSession, path: str) -> str | None:
             # follow/sync checkpoints permanently skip a later lower-seq
             # backfill. Only entries whose file still exists vote; the
             # listing is already needed for the `unknown` set below.
-            on_disk = _list_data_files(path)
+            on_disk = fileset.committed_files(path)
             on_disk_set = set(on_disk)
             for rel, entry in known.items():
                 if rel not in on_disk_set:
@@ -1237,11 +1213,7 @@ def _touched_partition_dirs(
 
     def walk(cur: str, depth: int, prefix: tuple) -> None:
         col = partition_by[depth]
-        try:
-            entries = os.listdir(cur)
-        except FileNotFoundError:
-            return
-        for ename in entries:
+        for ename in fsio.listdir(cur):
             if not ename.startswith(col + "="):
                 continue
             raw = ename[len(col) + 1 :]
@@ -1276,25 +1248,7 @@ def _table_exists(path: str) -> bool:
     either, matching Spark's listing: an in-flight ``_temporary`` task
     dir or a crashed ``_staged_append_*`` holds uncommitted files, not
     a table."""
-    if not os.path.exists(path):
-        return False
-    stack = [path]
-    while stack:
-        cur = stack.pop()
-        try:
-            with os.scandir(cur) as it:
-                for entry in it:
-                    if entry.name.startswith(("_", ".")):
-                        continue
-                    if entry.is_dir(follow_symlinks=False):
-                        if _is_version_name(entry.name):
-                            continue
-                        stack.append(entry.path)
-                    elif entry.name.endswith(".parquet"):
-                        return True
-        except FileNotFoundError:
-            continue
-    return False
+    return any(fileset.iter_data_files(path))
 
 
 def _canonical_seq(seq) -> F.Column:
@@ -1386,8 +1340,6 @@ def append_to_table(
     soundness claims depend on every engine append holding a token."""
     import uuid as _uuid
 
-    from . import fileset
-
     if not scoped:
         with _fence(target_path, "append"):
             append_to_table(df, target_path, partition_by, scoped=True)
@@ -1431,8 +1383,6 @@ def _partition_scoped_read(
     The table's schema manifest is imposed when it carries one
     (``_table_reader``, as ``_read_table`` does): no footer-merge job
     per rewrite, and partition columns keep their written types."""
-    from . import fileset
-
     reader = _table_reader(spark, data_dir).option("basePath", data_dir)
     logged = fileset.read_fileset(data_dir)
     if logged is None:
@@ -1499,8 +1449,6 @@ def _swap_into(
     # the fileset manifest (operators/fileset.py) records the version's
     # file list in the commit: cold reads plan from it instead of
     # LISTing, and later blind appends extend it batch by batch
-    from . import fileset
-
     fileset.write_base(tmp)
     if os.path.abspath(src) == os.path.abspath(target_path):
         # legacy->pointer UPGRADE: retire the root's _spark_metadata
@@ -1824,8 +1772,6 @@ def _adopt_at_creation(data_dir: str, created: bool) -> None:
     path (``created`` False) and on an effectively empty creation
     (zero data files: an all-REMOVE first append-mode batch must keep
     reading as "no table yet", not as an empty committed fileset)."""
-    from . import fileset
-
     if not created or fileset.has_log(data_dir):
         return
     rels = fileset.walk_data_files(data_dir)
@@ -1992,8 +1938,6 @@ def _apply_changes_locked(
         _stamp_schema_union(spark, target_path, result.schema)
         return
     if partition_by:
-        from . import fileset
-
         fileset.invalidate(data_dir)  # whole-dir overwrite below
         result.write.mode("overwrite").partitionBy(*partition_by).parquet(data_dir)
         _write_table_schema(target_path, result.schema)
@@ -2037,8 +1981,6 @@ def overwrite_partitions_dropping_emptied(
     MERGE on plain parquet (a lakehouse table format makes it
     transactional)."""
     from pyspark.sql import Observation
-
-    from . import fileset
 
     data_dir = table_data_dir(target_path)
     obs = Observation()

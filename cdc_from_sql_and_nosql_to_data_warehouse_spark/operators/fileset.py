@@ -57,6 +57,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from collections.abc import Callable, Iterator
 
 from .. import fsio
 
@@ -156,19 +158,73 @@ def is_data_file(name: str) -> bool:
     return name.endswith(".parquet") and not name.startswith(("_", "."))
 
 
-def walk_data_files(root: str) -> list[str]:
-    """Relative paths of every data file under ``root``, skipping
-    hidden (``_``/``.``-prefixed) directories the way Spark's listing
-    does — a staged append or ``_temporary`` task dir must never be
-    mistaken for committed data."""
-    out: list[str] = []
+_VERSION_NAME_RE = re.compile(r"v_\d{10}_[0-9a-f]{8}\Z")
+
+
+def _is_version_name(name: str) -> bool:
+    """True for names ``apply._swap_into`` stages version dirs under
+    (``v_<10 digits>_<8 hex>``). The pattern is disjoint from
+    everything else a table dir legitimately contains: hive partition
+    dirs carry ``=``, Spark's data files carry extensions, and control
+    files are ``_``-prefixed — so a version-named entry is always the
+    engine's own (a committed version, a superseded one awaiting GC,
+    or an aborted commit's orphan)."""
+    return _VERSION_NAME_RE.match(name) is not None
+
+
+def iter_data_files(
+    root: str, descend: Callable[[str], bool] | None = None
+) -> Iterator[str]:
+    """Lazily yield the relative path of every data file on disk under
+    ``root``. Skips the dirs Spark's listing skips (``_``/``.``-prefixed:
+    a staged append or ``_temporary`` task dir is never committed data)
+    and version-named dirs (under a pointer-less root those are an
+    aborted commit's staging, and a resolved version dir never nests
+    one). ``descend(name)`` False prunes a subtree unlisted. Stopping
+    early stops the listing: ``any(iter_data_files(d))`` returns at the
+    first file."""
     root = os.path.abspath(root)
-    for cur, dirs, names in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+    for cur, dirs, names in fsio.walk(root):
+        dirs[:] = [
+            d
+            for d in dirs
+            if not d.startswith(("_", "."))
+            and not _is_version_name(d)
+            and (descend is None or descend(d))
+        ]
         for n in names:
             if is_data_file(n):
-                out.append(os.path.relpath(os.path.join(cur, n), root))
-    return sorted(out)
+                yield os.path.relpath(os.path.join(cur, n), root)
+
+
+def walk_data_files(root: str) -> list[str]:
+    """The PHYSICAL fileset: every data file on disk under ``root``
+    (``iter_data_files``), sorted — logged or not. For the callers
+    that need what is on disk rather than what is committed: recording
+    a fresh manifest base, moving a staged append, diffing disk against
+    the manifest for junk, fingerprinting a log-less dir."""
+    return sorted(iter_data_files(root))
+
+
+def committed_files(
+    data_dir: str, descend: Callable[[str], bool] | None = None
+) -> list[str]:
+    """The files a reader of ``data_dir`` plans over, sorted relative
+    paths: the fileset log's when the dir carries one (unlogged junk is
+    invisible, exactly as to Spark's own manifest-planned scan), else
+    the walk of ``iter_data_files``. The ONE manifest-or-walk choice in
+    the package. ``descend(name)`` False drops every file under a dir
+    component of that name on both branches (hive partition pruning;
+    the walk never lists the pruned subtrees)."""
+    logged = read_fileset(data_dir)
+    if logged is None:
+        return sorted(iter_data_files(data_dir, descend))
+    return [
+        rel
+        for rel in logged
+        if descend is None
+        or all(descend(c) for c in rel.split(os.sep)[:-1])
+    ]
 
 
 def _is_batch_name(name: str) -> bool:
@@ -770,10 +826,7 @@ def _poison_invalidate(log_dir: str) -> None:
         return  # sustained publish churn: leave the sentinel standing
     fsio.remove(os.path.join(log_dir, _EPOCH_FILE))
     fsio.remove(os.path.join(log_dir, _POISON))
-    try:
-        os.rmdir(log_dir)
-    except OSError:
-        pass  # tmp residue in flight: swept by vacuum/repair later
+    fsio.rmdir(log_dir)  # False: tmp residue, swept by vacuum/repair later
 
 
 def foreign_log_rels(data_dir: str) -> list[str] | None:
@@ -844,7 +897,7 @@ def repair_stranded_log(data_dir: str) -> bool:
     empties a read; the permanently-bricked alternative is strictly
     worse. Returns True when the stranded dir was removed."""
     d = _log_dir(data_dir)
-    if not os.path.isdir(d):
+    if not fsio.isdir(d):
         return False
     names = fsio.listdir(d)
     if any(_is_batch_name(n) for n in names):
@@ -873,8 +926,5 @@ def repair_stranded_log(data_dir: str) -> bool:
         fsio.remove(os.path.join(d, _EPOCH_FILE))
     if _POISON in fresh:
         fsio.remove(os.path.join(d, _POISON))
-    try:
-        os.rmdir(d)
-        return True
-    except OSError:
-        return False  # not empty after all (writer in flight) / racing
+    # False: not empty after all (writer in flight) / racing
+    return fsio.rmdir(d)

@@ -34,6 +34,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fileset
 from .apply import _pruned_table_read, _read_table, table_data_dir
 
 
@@ -404,9 +405,9 @@ def _dump_sidecar(path: str, payload: dict) -> None:
         try:
             for name in fsio.listdir(shard_dir):
                 fsio.remove(os.path.join(shard_dir, name))
-            os.rmdir(shard_dir)
         except OSError:
             pass
+        fsio.rmdir(shard_dir)
         return
 
     prior = _load_sidecar(path)
@@ -583,7 +584,7 @@ def collect_file_stats(
         prior = None
 
     if prior is not None:
-        on_disk = set(_list_data_files(path))
+        on_disk = set(fileset.committed_files(path))
         kept = {
             rel: st for rel, st in prior["files"].items() if rel in on_disk
         }
@@ -671,7 +672,7 @@ def _collect_sharded_incremental(
     then runs the full pass, which owns conflict reconciliation)."""
     view: _ShardedFiles = prior["files"]
     by_comp_disk: dict[str, list[str]] = {}
-    for rel in _list_data_files(path):
+    for rel in fileset.committed_files(path):
         by_comp_disk.setdefault(_shard_component(rel), []).append(rel)
 
     index: dict[str, dict] = {}
@@ -832,80 +833,19 @@ def _dir_passes(col: str, sval, preds: list[tuple]) -> bool:
     return True
 
 
-def _list_data_files(path: str, preds: list[tuple] | None = None) -> list[str]:
-    """Every .parquet data file under the table root, relative paths.
-    With ``preds``, hive partition subtrees whose 'col=value' can never
-    satisfy a predicate on that column are skipped WITHOUT being walked
-    — on an object store the listing itself is O(matching partitions),
-    the same lever ``apply._touched_partition_dirs`` gives the merge.
-    Non-hive dirs and unparseable values always descend — EXCEPT
-    version-named dirs (``apply._is_version_name``): under a
-    pointer-less root those are an aborted commit's staging, and
-    walking into one would feed uncommitted rows into pruned reads and
-    advance the feed-tip probe past seqs that were never committed.
-    Hidden (``_``/``.``-prefixed) dirs are skipped like Spark's own
-    listing skips them (a crashed append's staging dir must not leak
-    uncommitted files into pruned reads).
-
-    When the directory carries a fileset manifest
-    (``operators/fileset.py``), the committed fileset comes from the
-    manifest — O(retained log batches) small reads, ZERO storage calls
-    per data file — and stays consistent with what Spark's own
-    manifest-planned scan of the dir reads: on-disk files absent from
-    the manifest (crashed append attempts) are invisible to both. The
-    walk below is the legacy/no-manifest fallback."""
-    from .apply import _is_version_name
-    from . import fileset
-
-    path = table_data_dir(path)
-    logged = fileset.read_fileset(path)
-    if logged is not None:
-        if not preds:
-            return list(logged)
-        keep = []
-        for rel in logged:
-            ok = True
-            for comp in rel.split(os.sep)[:-1]:
-                hv = _hive_dir_value(comp)
-                if hv is not None and not _dir_passes(hv[0], hv[1], preds):
-                    ok = False
-                    break
-            if ok:
-                keep.append(rel)
-        return keep
-    out = []
-    for cur, dirs, names in os.walk(path):
-        dirs[:] = [
-            d
-            for d in dirs
-            if not _is_version_name(d) and not d.startswith(("_", "."))
-        ]
-        if preds:
-            kept_dirs = []
-            for d in dirs:
-                hv = _hive_dir_value(d)
-                if hv is not None and not _dir_passes(hv[0], hv[1], preds):
-                    continue
-                kept_dirs.append(d)
-            dirs[:] = kept_dirs  # in-place: os.walk honors the pruning
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith((".", "_")):
-                out.append(
-                    os.path.relpath(os.path.join(cur, n), os.path.abspath(path))
-                )
-    return out
-
-
 def prune_files(path: str, predicates: list[tuple]) -> tuple[list[str], int]:
     """Resolve the AND of ``predicates`` — tuples ``(col, op, value)``,
     ``(col, "between", lo, hi)``, or ``(col, "in", values)`` — against
-    the stats sidecar. Returns (files to read, data files LISTED):
-    hive partition subtrees a predicate on their column excludes are
-    skipped before listing (so they appear in neither count — the
-    listing itself is O(matching partitions)), and files the sidecar
-    has never seen (written after the last stats pass) are always
-    included: skipping must stay an optimization, not a correctness
-    bet."""
+    the stats sidecar. Returns (files to read, committed files
+    considered). The candidates are ``fileset.committed_files``: the
+    manifest's files when the table carries one, so on-disk files a
+    crashed append never logged stay invisible here as they are to
+    Spark's scan. Hive partition subtrees a predicate on their column
+    excludes are dropped before listing (so they appear in neither
+    count, and the fallback walk never lists them); non-hive dirs and
+    unparseable values are kept. Files the sidecar has never seen
+    (written after the last stats pass) are always included: skipping
+    must stay an optimization, not a correctness bet."""
     path = table_data_dir(path)
     preds = [
         (p[0], "in", [_coerce_bound(v) for v in p[2]])
@@ -913,7 +853,12 @@ def prune_files(path: str, predicates: list[tuple]) -> tuple[list[str], int]:
         else (p[0], p[1], *[_coerce_bound(v) for v in p[2:]])
         for p in predicates
     ]
-    all_files = _list_data_files(path, preds)
+
+    def descend(name: str) -> bool:
+        hv = _hive_dir_value(name)
+        return hv is None or _dir_passes(hv[0], hv[1], preds)
+
+    all_files = fileset.committed_files(path, descend)
     stats = _load_sidecar(path)
     if stats is None:
         return all_files, len(all_files)

@@ -46,64 +46,32 @@ class TableStats:
 
 
 def table_stats(spark: SparkSession, path: str) -> TableStats:
-    """File-level stats driving the compaction decision (driver-side
-    listing — the same information a catalog/manifest would hold).
-    Hidden path segments ('.'/'_' prefixes: staging dirs, markers) are
-    invisible, mirroring Spark's own listing rules. The row count sums
-    parquet footers (``_planned_rows``) — no Spark job."""
-    path = table_data_dir(path)
-    fileset.repair_stranded_log(path)  # never hand Spark a stranded log
-    files = fileset.walk_data_files(path)
-    total = sum(os.path.getsize(os.path.join(path, f)) for f in files)
-    return TableStats(len(files), total, _planned_rows(path, files))
+    """File count, bytes and rows of the files a reader of the table
+    plans over (``fileset.committed_files``: the manifest's files, or
+    the hidden-dir-skipping walk when there is none), driving the
+    compaction decision. The row count sums parquet footers — no Spark
+    job."""
+    data = table_data_dir(path)
+    fileset.repair_stranded_log(data)  # never hand Spark a stranded log
+    return _stats_of(data, _file_sizes(data, fileset.committed_files(data)))
 
 
-def _planned_rows(path: str, walked: list[str] | None = None) -> int:
-    """The row count a Spark scan of data dir ``path`` returns, read
-    from parquet footer metadata on the driver: summed over the fileset
-    log's files when the dir carries one (Spark plans from the log, so
-    unlogged junk is not counted), else over the hidden-dir-skipping
-    walk (``walked`` when the caller already has it)."""
+def _file_sizes(data: str, files: list[str]) -> dict[str, int]:
+    """{relative path: byte size} of ``files`` under data dir ``data``
+    (0 for a file that vanished since it was listed)."""
+    return {f: fsio.size(os.path.join(data, f)) or 0 for f in files}
+
+
+def _stats_of(data: str, sizes: dict[str, int]) -> TableStats:
+    """TableStats of the files ``sizes`` names, with row counts read
+    from their parquet footers on the driver."""
     import pyarrow.parquet as pq
 
-    files = fileset.read_fileset(path)
-    if files is None:
-        files = fileset.walk_data_files(path) if walked is None else walked
-    return sum(pq.read_metadata(os.path.join(path, f)).num_rows for f in files)
-
-
-def _leaf_partition_stats(
-    path: str, depth: int
-) -> tuple[list[tuple[str, int, int]], int, int]:
-    """ONE hidden-dir-skipping walk of a hive tree -> per-leaf-dir
-    (dir, n_files, n_bytes) plus table totals. Mirrors Spark's listing
-    rules: segments starting with '.' or '_' are invisible (a crashed
-    dynamic overwrite's ``.spark-staging-*`` must never be mistaken for
-    a partition), and only ``col=value`` segments descend."""
-    path = table_data_dir(path)
-    leaves: list[tuple[str, int, int]] = []
-    total_files = 0
-    total_bytes = 0
-    base_depth = path.rstrip("/").count("/")
-    for dp, dns, fs in os.walk(path):
-        dns[:] = [
-            d for d in dns if not d.startswith((".", "_")) and "=" in d
-        ]
-        if dp.rstrip("/").count("/") - base_depth != depth:
-            continue
-        dns[:] = []  # leaf partition dir: don't descend further
-        data = [
-            os.path.join(dp, f)
-            for f in fs
-            if f.endswith(".parquet") or f.startswith("part-")
-        ]
-        if not data:
-            continue
-        b = sum(map(os.path.getsize, data))
-        leaves.append((dp, len(data), b))
-        total_files += len(data)
-        total_bytes += b
-    return leaves, total_files, total_bytes
+    return TableStats(
+        len(sizes),
+        sum(sizes.values()),
+        sum(pq.read_metadata(os.path.join(data, f)).num_rows for f in sizes),
+    )
 
 
 @contextmanager
@@ -210,21 +178,27 @@ def compact_parquet(
         )
 
     if partition_by:
-        # ONE walk yields both the compaction gate and the per-dir
-        # fragmentation decision: a dir is fragmented when it holds
-        # more files than ceil(bytes/target). No full-table row count
-        # on the decision path.
-        leaves, n_files, total_bytes = _leaf_partition_stats(
-            path, len(partition_by)
-        )
+        # ONE committed-set listing yields both the compaction gate and
+        # the per-dir fragmentation decision: a leaf partition dir
+        # (``depth`` levels of ``col=value``) is fragmented when it
+        # holds more files than ceil(bytes/target). Unlogged junk is
+        # not in the committed set, so it never fires the gate.
+        sizes = _file_sizes(data, fileset.committed_files(data))
+        depth = len(partition_by)
+        leaves: dict[str, list[int]] = {}
+        for rel, size in sizes.items():
+            parts = rel.split(os.sep)
+            if len(parts) == depth + 1 and all("=" in c for c in parts[:-1]):
+                leaf = os.path.join(data, *parts[:-1])
+                leaves.setdefault(leaf, []).append(size)
         frag_dirs = [
             dp
-            for dp, nf, b in leaves
-            if nf >= min_files_to_compact
-            and nf > max(1, math.ceil(b / target_file_bytes))
+            for dp, b in leaves.items()
+            if len(b) >= min_files_to_compact
+            and len(b) > max(1, math.ceil(sum(b) / target_file_bytes))
         ]
-        if n_files < min_files_to_compact or not frag_dirs:
-            return TableStats(n_files, total_bytes, _planned_rows(data))
+        if len(sizes) < min_files_to_compact or not frag_dirs:
+            return _stats_of(data, sizes)
         with _no_partition_type_inference(spark):
             # manifest-honoring read of the fragmented dirs: a crashed
             # append's unlogged junk must not be read back into the
@@ -352,7 +326,7 @@ def expire_files(
 
     cutoff = (time.time() if now is None else now) - max_age_seconds
     deleted: list[str] = []
-    for dp, _, fs in os.walk(path):
+    for dp, _, fs in fsio.walk(path):
         for f in fs:
             if suffixes and not f.endswith(suffixes):
                 continue
@@ -612,12 +586,13 @@ def run_maintenance(
                 expire_files(sp, cfg.expire_staging_after_seconds)
             )
     compacted = False
-    # the fragmentation gate costs one file-count walk (no count-star,
-    # no footer reads) and ONLY runs when configured — an idle tick on
-    # an ungated table must not pay O(files) to fill a report field
+    # the fragmentation gate costs one committed-set listing (no
+    # count-star, no footer reads) and ONLY runs when configured — an
+    # idle tick on an ungated table must not pay O(files) to fill a
+    # report field
     n_files: int | None = None
     if cfg.compact_when_files_exceed is not None:
-        n_files = len(fileset.walk_data_files(table_data_dir(path)))
+        n_files = len(fileset.committed_files(table_data_dir(path)))
     if (
         cfg.compact_when_files_exceed is not None
         and n_files > cfg.compact_when_files_exceed

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsio
 from ..operators.apply import (
     DELETED_COL,
     KEY_COL,
@@ -57,14 +58,10 @@ def _is_hive_partitioned(data_dir: str) -> bool:
     uniformly)."""
     import os
 
-    try:
-        with os.scandir(data_dir) as it:
-            return any(
-                e.is_dir(follow_symlinks=False) and "=" in e.name
-                for e in it
-            )
-    except FileNotFoundError:
-        return False
+    return any(
+        "=" in name and fsio.isdir(os.path.join(data_dir, name))
+        for name in fsio.listdir(data_dir)
+    )
 
 
 def _history_feed_schema(source_path: str):
@@ -272,8 +269,6 @@ def _sticky_source_kind(
     one bad flag would wedge an empty checkpoint behind the very
     error the pin exists to prevent."""
     import os
-
-    from .. import fsio
 
     marker = os.path.join(ck_dir, marker_name)
     raw = fsio.read_text(marker)
@@ -558,7 +553,6 @@ def stream_sync_changes(
     batch work."""
     import os
 
-    from .. import fsio
     from ..operators.apply import sync_changes
 
     if _is_hive_partitioned(table_data_dir(source_path)):
@@ -733,7 +727,7 @@ def stream_sync_changes(
             applied is not None
             and batch_max <= applied
             and mode in ("upsert", "history")
-            and os.path.isdir(table_data_dir(target_path))
+            and fsio.isdir(table_data_dir(target_path))
         ):
             # materialized once: the emptiness probe and the apply
             # below must not each re-run the batch-vs-replica join
@@ -879,8 +873,6 @@ def idempotent_windows(checkpoint_path: str, process):
     past it), so the state is a handful of small files, not a log.
     """
     import os
-
-    from .. import fsio
 
     done_dir = os.path.join(checkpoint_path, "_windows_done")
 

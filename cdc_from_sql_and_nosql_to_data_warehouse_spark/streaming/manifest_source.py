@@ -113,14 +113,11 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import fsio
-from ..operators.apply import (
-    _is_version_name,
-    read_table_schema,
-    table_data_dir,
-)
+from ..operators.apply import read_table_schema, table_data_dir
 from ..operators.fileset import (
     _batch_files,
     _batch_id,
+    _is_version_name,
     _replay_order,
     _resolved_entries,
     log_epoch,

@@ -147,7 +147,7 @@ def run_stream_to_staging(
         streaming=True,
         max_files_per_trigger=cfg.max_files_per_trigger,
     )
-    os.makedirs(staging_dir, exist_ok=True)
+    fsio.makedirs(staging_dir)
 
     if not parity_naming:
         decoded = decode_stream_records(records, after_schema)

@@ -29,9 +29,10 @@ from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
     read_warehouse,
     table_data_dir,
 )
-from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.layout import (
-    _list_data_files,
-)
+
+
+def _committed(path):
+    return fileset.committed_files(table_data_dir(path))
 
 
 def _env(spark, rows, parts=1):
@@ -130,7 +131,7 @@ def test_swap_records_manifest_and_read_plans_from_it(spark, tmp_path):
 
     # plant an unlogged orphan: a byte-copy of a committed file under a
     # fresh name (valid parquet, would read fine if listed)
-    committed = _list_data_files(wh)
+    committed = _committed(wh)
     src = os.path.join(d, committed[0])
     orphan = os.path.join(d, "part-orphan-deadbeef.c000.parquet")
     shutil.copyfile(src, orphan)
@@ -139,7 +140,7 @@ def test_swap_records_manifest_and_read_plans_from_it(spark, tmp_path):
         "1",
         "2",
     ]
-    assert _list_data_files(wh) == committed  # lister = manifest
+    assert _committed(wh) == committed  # lister = manifest
     assert current_max_seq(spark, wh) == A._canonical_seq_py(2)
 
 
@@ -175,7 +176,7 @@ def test_history_appends_extend_manifest(spark, tmp_path):
     got = sorted(int(r["k"]) for r in read_warehouse(spark, wh).collect())
     assert got == [1, 2] + list(range(10, 22))
     # the manifest IS the lister's source and matches the walk
-    logged = sorted(_list_data_files(wh))
+    logged = sorted(_committed(wh))
     walked = sorted(fileset.walk_data_files(d))
     assert logged == walked
     # the change feed window over appended rows classifies normally
@@ -211,7 +212,7 @@ def test_partitioned_fold_manifest_and_vacuum_invalidation(spark, tmp_path):
     compact_history(spark, wh, before_seq=4, partition_by=["p"])
     d = table_data_dir(wh)
     assert d != wh and fileset.has_log(d)
-    assert any(os.sep in rel for rel in _list_data_files(wh))  # hive rels
+    assert any(os.sep in rel for rel in _committed(wh))  # hive rels
 
     n = vacuum_tombstones(spark, wh, before_seq=100, partition_by=["p"])
     assert n == 1  # a's folded tombstone vacuumed
@@ -240,7 +241,7 @@ def test_bronze_append_after_flat_compaction(spark, tmp_path):
     assert d != bronze and fileset.has_log(d)
     append_to_bronze(df.repartition(4), bronze)
     assert spark.read.parquet(d).count() == 24 * 4
-    assert sorted(_list_data_files(bronze)) == sorted(
+    assert sorted(_committed(bronze)) == sorted(
         fileset.walk_data_files(d)
     )
 
@@ -368,7 +369,7 @@ def test_partitioned_compaction_never_commits_unlogged_junk(spark, tmp_path):
     assert fileset.has_log(d)
 
     # crashed append: a duplicate file moved into place, never logged
-    committed = [r for r in _list_data_files(wh) if r.startswith("p=x")]
+    committed = [r for r in _committed(wh) if r.startswith("p=x")]
     src = os.path.join(d, committed[0])
     junk = os.path.join(
         d, "p=x", "part-junk-cafebabe.c000.snappy.parquet"
@@ -391,6 +392,65 @@ def test_partitioned_compaction_never_commits_unlogged_junk(spark, tmp_path):
         (r["k"], r["v"]) for r in read_warehouse(spark, wh).collect()
     )
     assert got == [("a", 1.5), ("b", 2.0)]
+
+
+def test_table_stats_and_compaction_gate_agree_with_committed_files(
+    spark, tmp_path, monkeypatch
+):
+    """``table_stats`` counts files, bytes and footer rows over
+    ``fileset.committed_files``, and the partitioned compaction gate
+    groups that same set — on two pyarrow-built tables where a raw walk
+    of the directory disagrees: a legacy root beside an aborted
+    commit's orphan version dir, and a manifest table holding three
+    unlogged junk files in ``p=1``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import (
+        maintenance as M,
+    )
+
+    def put(path, n_rows):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(pa.table({"v": list(range(n_rows))}), path)
+
+    legacy = str(tmp_path / "legacy")
+    put(os.path.join(legacy, "part-00000.parquet"), 2)
+    put(os.path.join(legacy, "v_0000000001_deadbeef", "part-00000.parquet"), 3)
+
+    logged = str(tmp_path / "logged")
+    put(os.path.join(logged, "p=0", "part-00000.parquet"), 2)
+    put(os.path.join(logged, "p=1", "part-00000.parquet"), 2)
+    fileset.write_base(logged)
+    for i in range(3):
+        shutil.copyfile(
+            os.path.join(logged, "p=1", "part-00000.parquet"),
+            os.path.join(logged, "p=1", f"part-junk-{i}.parquet"),
+        )
+
+    for path, n_files, n_rows in ((legacy, 1, 2), (logged, 2, 4)):
+        stats = M.table_stats(spark, path)
+        assert (stats.n_files, stats.n_rows) == (n_files, n_rows)
+        full = [os.path.join(path, f) for f in fileset.committed_files(path)]
+        assert stats == M.TableStats(
+            len(full),
+            sum(map(os.path.getsize, full)),
+            sum(pq.read_metadata(f).num_rows for f in full),
+        )
+
+    # p=1 holds ONE committed file: not fragmented, nothing rewritten
+    rewritten = []
+    monkeypatch.setattr(
+        M,
+        "_partition_scoped_read",
+        lambda _spark, _data, dirs: rewritten.append(dirs),
+    )
+    got = M.compact_parquet(
+        spark, logged, partition_by=["p"], min_files_to_compact=2,
+        target_file_bytes=1 << 30,
+    )
+    assert rewritten == []
+    assert got == M.table_stats(spark, logged)
 
 
 def test_purge_keys_never_commits_unlogged_junk(spark, tmp_path):
@@ -428,7 +488,7 @@ def test_purge_keys_never_commits_unlogged_junk(spark, tmp_path):
 
     # crashed append: a duplicate of a p=x file moved into place but
     # never logged — holds keys "a" and "b" under their original seqs
-    committed = [r for r in _list_data_files(wh) if r.startswith("p=x")]
+    committed = [r for r in _committed(wh) if r.startswith("p=x")]
     src = os.path.join(d, committed[0])
     junk = os.path.join(d, "p=x", "part-junk-0badf00d.c000.snappy.parquet")
     shutil.copyfile(src, junk)
@@ -531,7 +591,7 @@ def test_adopt_fileset_manifest_on_append_only_table(spark, tmp_path):
     # engine appends keep extending the manifest
     append_to_bronze(df.repartition(2), log_tbl)
     assert spark.read.parquet(log_tbl).count() == 72
-    assert sorted(_list_data_files(log_tbl)) == sorted(
+    assert sorted(_committed(log_tbl)) == sorted(
         fileset.walk_data_files(log_tbl)
     )
 

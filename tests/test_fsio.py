@@ -131,3 +131,21 @@ def test_listdir_file_squat_is_empty_page(tmp_path):
     with open(p, "w") as f:
         f.write("junk")
     assert fsio.listdir(p) == []
+
+
+def test_walk_size_rmdir_tolerate_missing_paths(tmp_path):
+    d = str(tmp_path / "t")
+    os.makedirs(os.path.join(d, "p=1", "skip"))
+    with open(os.path.join(d, "p=1", "a.parquet"), "wb") as f:
+        f.write(b"xyz")
+    seen = []
+    for cur, dirs, names in fsio.walk(d):
+        dirs[:] = [n for n in dirs if n != "skip"]  # pruned in place
+        seen.append((os.path.relpath(cur, d), sorted(names)))
+    assert seen == [(".", []), ("p=1", ["a.parquet"])]
+    assert list(fsio.walk(str(tmp_path / "missing"))) == []
+    assert fsio.size(os.path.join(d, "p=1", "a.parquet")) == 3
+    assert fsio.size(os.path.join(d, "gone.parquet")) is None
+    assert not fsio.rmdir(os.path.join(d, "p=1"))  # not empty
+    assert fsio.rmdir(os.path.join(d, "p=1", "skip"))
+    assert not fsio.rmdir(os.path.join(d, "p=1", "skip"))  # already gone

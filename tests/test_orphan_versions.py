@@ -15,7 +15,7 @@ its first version dir inside a root that legacy readers scan directly
   seqs that were never committed).
 
 Readers route AROUND orphans (``_data_read_paths`` /
-``_list_data_files``); writers PURGE them under their mutation scope,
+``fileset.committed_files``); writers PURGE them under their mutation scope,
 where the two-phase lock check proves no commit can be mid-staging.
 """
 
@@ -167,8 +167,8 @@ def test_orphan_never_advances_feed_tip(spark, tmp_path):
     make follow/sync checkpoints permanently skip the real events
     delivered later. Covers both the sidecar fast path's listing and
     the full-scan fallback."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import fileset
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.layout import (
-        _list_data_files,
         collect_file_stats,
     )
 
@@ -193,7 +193,7 @@ def test_orphan_never_advances_feed_tip(spark, tmp_path):
     assert current_max_seq(spark, wh) == tip_before  # full-scan path
     assert all(
         not f.startswith(os.path.basename(orphan))
-        for f in _list_data_files(wh)
+        for f in fileset.committed_files(A.table_data_dir(wh))
     )
     collect_file_stats(spark, wh, ["id"])
     assert current_max_seq(spark, wh) == tip_before  # sidecar path

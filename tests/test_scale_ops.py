@@ -44,10 +44,11 @@ def test_compaction_noop_when_compact(spark, tmp_path):
 @pytest.mark.parametrize("logged", [False, True], ids=["unlogged", "logged"])
 def test_noop_partitioned_compaction_launches_no_job(spark, tmp_path, logged):
     """The no-op partitioned compaction (and ``table_stats``) take the
-    row count from parquet footers over the file set Spark would plan:
-    the fileset log's files when the table carries one (an unlogged
-    junk file is not counted), else the listing. The stats equal the
-    count-star ones and no Spark job runs."""
+    file count, bytes and footer row count over the file set Spark
+    would plan: the fileset log's files when the table carries one (an
+    unlogged junk file is counted in none of the three), else the
+    listing. The stats equal the count-star ones and no Spark job
+    runs."""
     import glob
     import shutil
 
@@ -62,11 +63,11 @@ def test_noop_partitioned_compaction_launches_no_job(spark, tmp_path, logged):
     spark.range(300).withColumn("p", F.col("id") % 3).write.partitionBy(
         "p"
     ).parquet(tdd(path))
+    files = glob.glob(f"{tdd(path)}/p=*/*.parquet")
     if logged:
         assert adopt_fileset_manifest(spark, path) > 0
         src = sorted(glob.glob(f"{tdd(path)}/p=0/*.parquet"))[0]
         shutil.copy(src, os.path.join(tdd(path), "p=0", "part-junk.parquet"))
-    files = glob.glob(f"{tdd(path)}/p=*/*.parquet")
     want = TableStats(
         len(files),
         sum(map(os.path.getsize, files)),

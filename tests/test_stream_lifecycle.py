@@ -4,9 +4,10 @@ A static check (no Spark): parse the package and assert that the only
 ``.start(...)`` and ``.trigger(...)`` calls, the only
 ``"checkpointLocation"`` option and the only mention of the
 checkpoint-manager conf are the ones inside ``start_query``, so
-checkpoint and trigger policy stay a one-place edit. The manifest-planned
-streaming sources get the same kind of check: they open no file and list
-no directory themselves.
+checkpoint and trigger policy stay a one-place edit. The table layer gets
+the same kind of check: it lists, probes and removes storage only through
+``fsio``, and the manifest-planned streaming sources open no file
+themselves.
 """
 
 from __future__ import annotations
@@ -79,14 +80,55 @@ def test_only_start_query_picks_checkpoint_manager():
     ]
 
 
+# Table-layer modules that list, probe and remove storage only through
+# ``fsio``, and the raw calls that would bypass it.
+_TABLE_LAYER = (
+    "operators/apply.py",
+    "operators/fileset.py",
+    "operators/layout.py",
+    "operators/maintenance.py",
+    "streaming/cdf.py",
+    "streaming/manifest_source.py",
+    "streaming/pipeline.py",
+)
+_RAW_STORAGE = (
+    "os.walk",
+    "os.scandir",
+    "os.listdir",
+    "os.rmdir",
+    "os.makedirs",
+    "os.path.isdir",
+    "shutil.rmtree",
+)
+# (module, enclosing function, call) -> why it stays outside fsio
+_RAW_STORAGE_EXEMPT = {
+    (
+        "operators/apply.py",
+        "overwrite_partitions_dropping_emptied",
+        "shutil.rmtree",
+    ): "a partition dir emptied by the rewrite must be deleted or the "
+    "rewrite must fail loudly; fsio.remove_tree ignores errors",
+}
+
+
 def test_manifest_sources_touch_storage_only_through_the_package():
-    # control reads go through fsio and the batch plane's readers;
-    # parquet reads (pyarrow) are the data plane and stay allowed
+    raw = {
+        (rel, fn, name)
+        for name in _RAW_STORAGE
+        for rel, fn in _enclosing(
+            lambda n, name=name: isinstance(n, ast.Call)
+            and ast.unparse(n.func) == name
+        )
+        if rel in _TABLE_LAYER
+    }
+    assert raw == set(_RAW_STORAGE_EXEMPT)
+    # the manifest sources' control reads go through fsio and the batch
+    # plane's readers; parquet reads (pyarrow) are the data plane and
+    # stay allowed
     tree = ast.parse((PKG_DIR / "streaming/manifest_source.py").read_text())
-    raw = [
-        ast.unparse(n.func)
+    opens = [
+        n
         for n in ast.walk(tree)
-        if isinstance(n, ast.Call)
-        and ast.unparse(n.func) in ("open", "os.listdir", "os.walk", "os.scandir")
+        if isinstance(n, ast.Call) and ast.unparse(n.func) == "open"
     ]
-    assert raw == []
+    assert opens == []
