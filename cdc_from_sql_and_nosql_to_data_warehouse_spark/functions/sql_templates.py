@@ -34,9 +34,12 @@ Escaping contract (Spark SQL lexer rules):
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import math
 import re
 from collections.abc import Iterable, Sequence
+
+from pyspark.sql import types as T
 
 _IDENT_FORBIDDEN = re.compile(r"[\x00-\x1f\x7f]")
 
@@ -79,6 +82,11 @@ def quote_literal(value: object) -> str:
         # a bare decimal literal parses as DECIMAL, silently rounding
         # any fraction that needs more than 38 significant digits
         return repr(value) + "D"
+    if isinstance(value, decimal.Decimal):
+        if not value.is_finite():
+            raise ValueError(f"no SQL literal for a non-finite decimal: {value}")
+        # the BD suffix keeps the exact digits as a DECIMAL literal
+        return f"{value:f}BD"
     if isinstance(value, _dt.datetime):
         return f"TIMESTAMP '{value.isoformat(sep=' ')}'"
     if isinstance(value, _dt.date):
@@ -89,6 +97,24 @@ def quote_literal(value: object) -> str:
         escaped = value.replace("\\", "\\\\").replace("'", "\\'")
         return f"'{escaped}'"
     raise TypeError(f"no SQL literal rendering for {type(value).__name__}")
+
+
+def sql_type(dt: T.DataType) -> str:
+    """Render a Spark type as SQL type text (a ``CAST`` target). Struct
+    field names are backtick-quoted at every depth, so a field named
+    ``a`b`` or ``x.y`` survives the round trip; leaf types use Spark's
+    own ``simpleString``. Nested fields render nullable: a cast target
+    never needs to narrow nullability."""
+    if isinstance(dt, T.StructType):
+        fields = ", ".join(
+            f"{quote_ident(f.name)}: {sql_type(f.dataType)}" for f in dt.fields
+        )
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def render_sql(

@@ -36,15 +36,17 @@ parquet the rewritten table commits as a new version behind a pointer
 from __future__ import annotations
 
 import contextlib
+import datetime
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import fsio
-from ..functions.sql_templates import quote_ident, quote_literal
+from ..functions.sql_templates import quote_ident, quote_literal, sql_type
 from ..sources.change_feed import VALID_OPS
 from . import fileset
 from .fileset import _is_version_name
@@ -773,7 +775,7 @@ def current_max_seq(spark: SparkSession, path: str) -> str | None:
                             *[os.path.join(path, r) for r in unknown]
                         )
                         .agg(
-                            F.max(_canonical_seq(F.col(SEQ_COL))).alias("m")
+                            F.max(_canonical_seq(SEQ_COL)).alias("m")
                         )
                         .first()["m"]
                     )
@@ -783,7 +785,7 @@ def current_max_seq(spark: SparkSession, path: str) -> str | None:
                         best = sub_max
                 return best
     df = _read_table(spark, path)
-    return df.agg(F.max(_canonical_seq(F.col(SEQ_COL))).alias("m")).first()[
+    return df.agg(F.max(_canonical_seq(SEQ_COL)).alias("m")).first()[
         "m"
     ]
 
@@ -1146,8 +1148,6 @@ def _hive_partition_value_str(v):
     stringification we are not certain matches Spark's — the caller
     must then fall back to the full-table listing. None means the
     __HIVE_DEFAULT_PARTITION__ directory."""
-    import datetime
-
     if v is None:
         return None
     if isinstance(v, bool):
@@ -1251,18 +1251,25 @@ def _table_exists(path: str) -> bool:
     return any(fileset.iter_data_files(path))
 
 
-def _canonical_seq(seq) -> F.Column:
-    """Sequence values in max-seq arbitration form: a 40-char
-    zero-padded string (lexicographic == numeric for the non-negative
-    integers every source emits; 40 digits is DynamoDB's wire max).
-    Idempotent on already-padded values; normalizes longs and unpadded
-    strings from tables written before this representation."""
-    return F.lpad(seq.cast("string"), 40, "0")
+def _canonical_seq_sql(seq_sql: str) -> str:
+    """Sequence values in max-seq arbitration form, as SQL text over
+    the (quoted) expression ``seq_sql``: a 40-char zero-padded string
+    (lexicographic == numeric for the non-negative integers every
+    source emits; 40 digits is DynamoDB's wire max). Idempotent on
+    already-padded values; normalizes longs and unpadded strings from
+    tables written before this representation."""
+    return f"lpad(CAST({seq_sql} AS STRING), 40, '0')"
+
+
+def _canonical_seq(col: str) -> F.Column:
+    """``_canonical_seq_sql`` of the column named ``col``."""
+    return F.expr(_canonical_seq_sql(quote_ident(col)))
 
 
 def _canonical_seq_py(seq) -> str:
-    """Driver-side twin of ``_canonical_seq`` (40-char zero-pad)."""
-    return str(seq).rjust(40, "0")
+    """Driver-side twin of ``_canonical_seq_sql`` for an int or string
+    value: ``lpad`` zero-pads to 40 and cuts a longer value to 40."""
+    return str(seq).rjust(40, "0")[:40]
 
 
 _BAD_OP_MARKER = "unexpected change-event op"
@@ -1402,10 +1409,11 @@ def _partition_scoped_read(
 
 def latest_per_key(df: DataFrame, key: str, seq_col: str = "seq") -> DataFrame:
     """K2/R8 core: max-seq row per key (deterministic latest-wins)."""
-    w = W.partitionBy(key).orderBy(F.desc(seq_col))
-    return df.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    ).drop("_rn")
+    rn = (
+        f"row_number() OVER (PARTITION BY {quote_ident(key)} "
+        f"ORDER BY {quote_ident(seq_col)} DESC) AS _rn"
+    )
+    return df.selectExpr("*", rn).filter("_rn = 1").drop("_rn")
 
 
 def _swap_into(
@@ -1483,6 +1491,13 @@ def _flip_pointer(root: str, ver: str, prior: str) -> None:
     fsio.atomic_write_text(log_path, "".join(ln + "\n" for ln in keep + [ver]))
 
 
+def _named_struct_sql(fields: list[tuple[str, str]]) -> str:
+    """``named_struct`` SQL text of (field name, value SQL) pairs."""
+    return "named_struct({})".format(
+        ", ".join(f"{quote_literal(n)}, {v}" for n, v in fields)
+    )
+
+
 def _lift_stored(existing: DataFrame, key: str) -> DataFrame:
     """Stored warehouse rows back into envelope form for the merge.
 
@@ -1492,19 +1507,18 @@ def _lift_stored(existing: DataFrame, key: str) -> DataFrame:
     tombstone representation have no marker column — every row lifts
     live."""
     meta = {SEQ_COL, DELETED_COL}
-    after_cols = [c for c in existing.columns if c not in meta]
+    after = [(c, quote_ident(c)) for c in existing.columns if c not in meta]
+    op = "'MODIFY'"
     if DELETED_COL in existing.columns:
         op = (
-            F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), "REMOVE")
-            .otherwise("MODIFY")
+            f"CASE WHEN coalesce({quote_ident(DELETED_COL)}, FALSE) "
+            "THEN 'REMOVE' ELSE 'MODIFY' END"
         )
-    else:
-        op = F.lit("MODIFY")
-    return existing.select(
-        F.col(key).cast("string").alias("key"),
-        op.alias("op"),
-        F.struct(*[F.col(c) for c in after_cols]).alias("after"),
-        _canonical_seq(F.col(SEQ_COL)).alias("seq"),
+    return existing.selectExpr(
+        f"CAST({quote_ident(key)} AS STRING) AS key",
+        f"{op} AS op",
+        f"{_named_struct_sql(after)} AS after",
+        f"{_canonical_seq_sql(quote_ident(SEQ_COL))} AS seq",
     )
 
 
@@ -1517,32 +1531,62 @@ def _stored_form(
     they persist as tombstones: the key field is materialized into the
     after-image (a key-only REMOVE has a null image) so future merges
     can arbitrate, and the row carries DELETED_COL = true."""
+    seq = f"seq AS {quote_ident(SEQ_COL)}"
     if not propagate_deletes:
-        return merged.filter(F.col("op") != "REMOVE").select(
-            "after.*", F.col("seq").alias(SEQ_COL)
+        return merged.filter("op <> 'REMOVE'").selectExpr("after.*", seq)
+    fields = []
+    for f in merged.schema["after"].dataType.fields:
+        v = f"after.{quote_ident(f.name)}"
+        if f.name == key:
+            v = f"coalesce({v}, CAST(key AS {sql_type(f.dataType)}))"
+        fields.append((f.name, v))
+    deleted = quote_ident(DELETED_COL)
+    return merged.selectExpr(
+        f"{_named_struct_sql(fields)} AS after",
+        seq,
+        f"op = 'REMOVE' AS {deleted}",
+    ).selectExpr("after.*", quote_ident(SEQ_COL), deleted)
+
+
+def _struct_names(t) -> frozenset:
+    """The field names of a type at every struct depth (order aside:
+    ``unionByName`` matches struct fields by name)."""
+    if not isinstance(t, T.StructType):
+        return frozenset()
+    return frozenset((f.name, _struct_names(f.dataType)) for f in t.fields)
+
+
+def _widened(stored, incoming):
+    """``stored`` with the struct fields only ``incoming`` has appended,
+    at every depth; on overlap the stored type wins."""
+    if not (isinstance(stored, T.StructType) and isinstance(incoming, T.StructType)):
+        return stored
+    inc = {f.name: f.dataType for f in incoming.fields}
+    out = T.StructType()
+    for f in stored.fields:
+        out.add(f.name, _widened(f.dataType, inc.pop(f.name, f.dataType)))
+    for name, t in inc.items():
+        out.add(name, t)
+    return out
+
+
+def _conform_sql(expr: str, have, want) -> str:
+    """SQL text of ``expr`` (typed ``have``) as type ``want``: structs
+    are rebuilt field by field (a missing field reads as a typed NULL, a
+    NULL struct stays NULL), any other type is CAST."""
+    if not (isinstance(have, T.StructType) and isinstance(want, T.StructType)):
+        return f"CAST({expr} AS {sql_type(want)})"
+    got = {f.name: f.dataType for f in have.fields}
+    fields = [
+        (
+            f.name,
+            _conform_sql(f"{expr}.{quote_ident(f.name)}", got[f.name], f.dataType)
+            if f.name in got
+            else f"CAST(NULL AS {sql_type(f.dataType)})",
         )
-    key_type = merged.schema["after"].dataType[key].dataType
-    after_fields = [f.name for f in merged.schema["after"].dataType.fields]
-    merged = merged.withColumn(
-        "after",
-        F.struct(
-            *[
-                (
-                    F.coalesce(
-                        F.col(f"after.{c}"), F.col("key").cast(key_type)
-                    )
-                    if c == key
-                    else F.col(f"after.{c}")
-                ).alias(c)
-                for c in after_fields
-            ]
-        ),
-    )
-    return merged.select(
-        "after.*",
-        F.col("seq").alias(SEQ_COL),
-        (F.col("op") == "REMOVE").alias(DELETED_COL),
-    )
+        for f in want.fields
+    ]
+    return f"IF({expr} IS NULL, NULL, {_named_struct_sql(fields)})"
 
 
 def _merge_latest(incoming: DataFrame, lifted: DataFrame) -> DataFrame:
@@ -1550,35 +1594,23 @@ def _merge_latest(incoming: DataFrame, lifted: DataFrame) -> DataFrame:
     rows, with schema evolution.
 
     Schema evolution (K6 parity: the reference's all-varchar DDL
-    absorbs drift; typed tables must evolve instead): align both
-    after-image structs on the union of their fields — stored column
-    order first, new envelope columns appended — with typed nulls for
+    absorbs drift; typed tables must evolve instead): when the two
+    after-image structs differ in their field names at any depth, both
+    are aligned on the union of their fields — stored field order and
+    type first, new envelope fields appended — with typed nulls for
     whichever side lacks a field. Old rows read NULL in new columns; an
     upsert whose image drops a column nulls it for that key.
     """
-    inc_t = {f.name: f.dataType for f in incoming.schema["after"].dataType.fields}
-    sto_t = {f.name: f.dataType for f in lifted.schema["after"].dataType.fields}
-    if set(inc_t) != set(sto_t):
-        all_fields = list(dict.fromkeys([*sto_t, *inc_t]))
-        types = {**inc_t, **sto_t}  # stored type wins on overlap
-
-        def _align(df: DataFrame, have: dict) -> DataFrame:
-            return df.withColumn(
-                "after",
-                F.struct(
-                    *[
-                        (
-                            F.col(f"after.{c}").cast(types[c])
-                            if c in have
-                            else F.lit(None).cast(types[c])
-                        ).alias(c)
-                        for c in all_fields
-                    ]
-                ),
+    inc_t = incoming.schema["after"].dataType
+    sto_t = lifted.schema["after"].dataType
+    if _struct_names(inc_t) != _struct_names(sto_t):
+        want = _widened(sto_t, inc_t)
+        incoming, lifted = (
+            df.selectExpr(
+                "key", "op", f"{_conform_sql('after', t, want)} AS after", "seq"
             )
-
-        incoming = _align(incoming, inc_t)
-        lifted = _align(lifted, sto_t)
+            for df, t in ((incoming, inc_t), (lifted, sto_t))
+        )
     return latest_per_key(incoming.unionByName(lifted), "key", "seq")
 
 
@@ -1591,10 +1623,13 @@ def _merge_plan(
     """The upsert merge, shared by ``apply_changes`` and
     ``apply_changes_bucketed``: an envelope batch merged latest-wins
     with the ``stored`` rows it can touch (None: nothing stored), in
-    stored row form. REMOVEs take part only when they propagate."""
-    incoming = changes if propagate_deletes else changes.filter(
-        F.col("op") != "REMOVE"
-    )
+    stored row form. REMOVEs take part only when they propagate.
+
+    Every projection is Spark SQL text the JVM parses once: built
+    column by column through the Python Column API, each ``F.col`` /
+    ``alias`` / ``cast`` was its own Py4J round trip, about 47 per
+    after-image column per apply."""
+    incoming = changes if propagate_deletes else changes.filter("op <> 'REMOVE'")
     # Canonical arbitration representation: seq as a 40-char zero-padded
     # string (lexicographic order == numeric order for non-negative
     # sequence numbers up to DynamoDB's 40-digit wire max). Incoming
@@ -1615,8 +1650,8 @@ def _merge_plan(
     # (row_number over the union of ALL batch rows + the stored row ==
     # row_number over (deduped batch + stored row) — same ordering,
     # same arbitrary-among-equal-seq tie class as before).
-    incoming = incoming.select(
-        "key", "op", "after", _canonical_seq(F.col("seq")).alias("seq")
+    incoming = incoming.selectExpr(
+        "key", "op", "after", f"{_canonical_seq_sql('seq')} AS seq"
     )
     if stored is None:
         # nothing stored to merge against: the single max-seq window
@@ -1736,6 +1771,15 @@ def _scope_for(
     return "table", None, None
 
 
+def _collected_literal(value) -> str:
+    """SQL literal of a value ``collect()`` returned. A timestamp is
+    rendered from the epoch micros PySpark converted it from (as
+    ``F.lit`` does), not re-read in the session time zone."""
+    if isinstance(value, datetime.datetime):
+        return f"timestamp_micros({T.TimestampType().toInternal(value)})"
+    return quote_literal(value)
+
+
 def _batch_partition_tuples(
     changes: DataFrame, partition_by: list[str], propagate_deletes: bool
 ) -> list[tuple] | None:
@@ -1746,8 +1790,8 @@ def _batch_partition_tuples(
     so that batch must merge unpruned."""
     vals = [
         tuple(r)
-        for r in changes.select(
-            *[F.col(f"after.{c}") for c in partition_by]
+        for r in changes.selectExpr(
+            *[f"after.{quote_ident(c)}" for c in partition_by]
         ).distinct().collect()
     ]
     if propagate_deletes and any(v is None for t in vals for v in t):
@@ -1821,7 +1865,7 @@ def _apply_changes_locked(
         rows = changes.select(
             "after.*",
             F.col("key").cast("string").alias(KEY_COL),
-            _canonical_seq(F.col("seq")).alias(SEQ_COL),
+            _canonical_seq("seq").alias(SEQ_COL),
             (F.col("op") == "REMOVE").alias(DELETED_COL),
         )
         created = not _table_exists(data_dir)
@@ -1892,7 +1936,9 @@ def _apply_changes_locked(
             # ones the merge empties can still be dropped after the write
             prior = [
                 tuple(r)
-                for r in existing.select(*partition_by).distinct().collect()
+                for r in existing.selectExpr(
+                    *[quote_ident(c) for c in partition_by]
+                ).distinct().collect()
             ]
         if touched is not None and existing is not None:
             # partition-pruned read: only files of touched partitions.
@@ -1900,22 +1946,22 @@ def _apply_changes_locked(
             # matches the stored __HIVE_DEFAULT_PARTITION__ rows — a
             # plain == would evaluate to NULL, silently exclude the
             # key's stored row from the merge, and duplicate the key.
-            pred = F.lit(False)
-            for vals in touched:
-                clause = F.lit(True)
-                for c, v in zip(partition_by, vals):
-                    clause = clause & F.col(c).eqNullSafe(F.lit(v))
-                pred = pred | clause
+            cols = [quote_ident(c) for c in partition_by]
+            terms = [
+                " AND ".join(
+                    f"{c} <=> {_collected_literal(v)}" for c, v in zip(cols, vals)
+                )
+                for vals in touched
+            ]
             if propagate_deletes:
                 # tombstones of key-only REMOVEs carry null partition
                 # values and live in the __HIVE_DEFAULT_PARTITION__
                 # directories — every pruned merge must read them or a
                 # late older upsert would resurrect a deleted key
-                nullc = F.lit(True)
-                for c in partition_by:
-                    nullc = nullc & F.col(c).isNull()
-                pred = pred | nullc
-            existing = existing.filter(pred)
+                terms.append(" AND ".join(f"{c} IS NULL" for c in cols))
+            existing = existing.filter(
+                " OR ".join(f"({t})" for t in terms) or "FALSE"
+            )
     result = _merge_plan(changes, existing, key, propagate_deletes)
 
     if partition_by and exists:
@@ -1985,11 +2031,11 @@ def overwrite_partitions_dropping_emptied(
     data_dir = table_data_dir(target_path)
     obs = Observation()
     if candidates:
+        dir_values = ", ".join(
+            f"CAST({quote_ident(c)} AS STRING)" for c in partition_by
+        )
         df = df.observe(
-            obs,
-            F.collect_set(
-                F.struct(*[F.col(c).cast("string") for c in partition_by])
-            ).alias("written"),
+            obs, F.expr(f"collect_set(struct({dir_values})) AS written")
         )
     # dynamic overwrite rewrites matched partitions in place without
     # knowing its file delta: drop the fileset manifest FIRST (readers
@@ -2111,7 +2157,7 @@ def _commit_bucketed(
         ).option("path", vdir).saveAsTable(f"{table_name}__next", format="parquet")
         spark.sql(f"DROP TABLE {table_name}__next")
         _flip_pointer(root, ver, prior)
-        have = None if current is None else current.columns
+        have = None if current is None else current.schema
         _point_catalog(spark, table_name, vdir, df.schema, have, spec)
         _gc_superseded(root, ver)
 
@@ -2148,7 +2194,7 @@ def _serve_bucketed(spark, table_name, root, spec) -> DataFrame | None:
         elif _local_path(info["Location"]) == data:
             return spark.table(table_name)
         else:
-            have = spark.table(table_name).columns
+            have = spark.table(table_name).schema
     exists = _table_exists(data)
     if have is None and not exists:
         return None
@@ -2159,18 +2205,28 @@ def _serve_bucketed(spark, table_name, root, spec) -> DataFrame | None:
 
 def _point_catalog(spark, table_name, location, schema, have, spec) -> None:
     """Register ``table_name`` as an external bucketed table over
-    ``location`` (``have`` None), or re-point the entry whose columns
-    are ``have`` there, adding the columns ``schema`` evolved."""
+    ``location`` (``have`` None), or re-point the entry whose schema is
+    ``have`` there, adding the columns ``schema`` evolved. A struct
+    column that gained fields cannot be altered in place on this
+    catalog, so the entry is then registered afresh (an external
+    table's DROP keeps its files)."""
     from pyspark.sql.types import StructType
 
-    have = {c.lower() for c in have or ()}
-    added = [f for f in schema.fields if f.name.lower() not in have]
+    old = {f.name.lower(): f.dataType for f in have or ()}
+    if any(
+        _struct_names(f.dataType) != _struct_names(old[f.name.lower()])
+        for f in schema.fields
+        if f.name.lower() in old
+    ):
+        spark.sql(f"DROP TABLE {table_name}")
+        old = {}
+    added = [f for f in schema.fields if f.name.lower() not in old]
     ddl = ""
     if added:
         js = _nullable_schema(StructType(added)).json()
         ddl = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(js).toDDL()
     where = quote_literal(location)
-    if not have:
+    if not old:
         # Spark refuses a bucket spec without an explicit column list
         cols = ", ".join(quote_ident(c) for c in spec[0])
         spark.sql(
@@ -2276,11 +2332,11 @@ def read_warehouse(
             if pruned is not None:
                 df = pruned
             df = df.filter(
-                _canonical_seq(F.col(SEQ_COL))
-                <= _canonical_seq(F.lit(as_of_seq))
+                _canonical_seq(SEQ_COL)
+                <= F.lit(_canonical_seq_py(as_of_seq))
             )
         latest = latest_per_key(
-            df.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL))),
+            df.withColumn(SEQ_COL, _canonical_seq(SEQ_COL)),
             KEY_COL,
             SEQ_COL,
         ).drop(KEY_COL)
@@ -2391,7 +2447,7 @@ def read_changes(
             "were folded by compact_history, so changes in that range "
             "can no longer be reconstructed"
         )
-    df = df.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL)))
+    df = df.withColumn(SEQ_COL, _canonical_seq(SEQ_COL))
     restrict = from_seq is not None
     if restrict:
         # selectivity gate: the touched-key restriction costs one
@@ -2441,16 +2497,16 @@ def read_changes(
         # broadcast probe when the touched set is micro-batch-sized.
         scoped = _seq_scoped_read(spark, target_path, ">", from_seq)
         base = (
-            scoped.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL)))
+            scoped.withColumn(SEQ_COL, _canonical_seq(SEQ_COL))
             if scoped is not None
             else df
         )
         in_window = base.filter(
-            F.col(SEQ_COL) > _canonical_seq(F.lit(from_seq))
+            F.col(SEQ_COL) > F.lit(_canonical_seq_py(from_seq))
         )
         if to_seq is not None:
             in_window = in_window.filter(
-                F.col(SEQ_COL) <= _canonical_seq(F.lit(to_seq))
+                F.col(SEQ_COL) <= F.lit(_canonical_seq_py(to_seq))
             )
         # eqNullSafe: NULL-key version rows form their own lag group
         # and must keep emitting changes — a plain equality semi-join
@@ -2495,11 +2551,11 @@ def read_changes(
     )
     if from_seq is not None:
         out = out.filter(
-            F.col(SEQ_COL) > _canonical_seq(F.lit(from_seq))
+            F.col(SEQ_COL) > F.lit(_canonical_seq_py(from_seq))
         )
     if to_seq is not None:
         out = out.filter(
-            F.col(SEQ_COL) <= _canonical_seq(F.lit(to_seq))
+            F.col(SEQ_COL) <= F.lit(_canonical_seq_py(to_seq))
         )
     return out
 

@@ -282,7 +282,7 @@ def _sync_aggregate_locked(
 
             scoped = _seq_scoped_read(spark, source_path, ">", through)
             versions = (scoped if scoped is not None else src).withColumn(
-                SEQ_COL, _canonical_seq(F.col(SEQ_COL))
+                SEQ_COL, _canonical_seq(SEQ_COL)
             )
             in_range = versions.filter(
                 (F.col(SEQ_COL) > F.lit(through))
@@ -314,7 +314,7 @@ def _sync_aggregate_locked(
                 if pre_scoped is not None:
                     pre_src = pre_scoped
                 pre = pre_src.withColumn(
-                    SEQ_COL, _canonical_seq(F.col(SEQ_COL))
+                    SEQ_COL, _canonical_seq(SEQ_COL)
                 ).filter(
                     (F.col(SEQ_COL) <= F.lit(through))
                     & F.col(KEY_COL).isin(touched_vals)
@@ -324,7 +324,7 @@ def _sync_aggregate_locked(
                     "_ivm_touched"
                 )
                 pre = src.withColumn(
-                    SEQ_COL, _canonical_seq(F.col(SEQ_COL))
+                    SEQ_COL, _canonical_seq(SEQ_COL)
                 ).filter(F.col(SEQ_COL) <= F.lit(through)).alias(
                     "_ivm_log"
                 ).join(
@@ -499,7 +499,7 @@ def sync_aggregate_minmax(
                 scoped = _seq_scoped_read(spark, source_path, ">", through)
                 versions_new = (
                     scoped if scoped is not None else src
-                ).withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL)))
+                ).withColumn(SEQ_COL, _canonical_seq(SEQ_COL))
                 in_range = versions_new.filter(
                     (F.col(SEQ_COL) > F.lit(through))
                     & (F.col(SEQ_COL) <= F.lit(cur))
@@ -519,7 +519,7 @@ def sync_aggregate_minmax(
                     pruned = _pruned_table_read(spark, source_path, preds)
                     base = pruned if pruned is not None else src
                     return base.withColumn(
-                        SEQ_COL, _canonical_seq(F.col(SEQ_COL))
+                        SEQ_COL, _canonical_seq(SEQ_COL)
                     ).filter(
                         (F.col(SEQ_COL) <= F.lit(bound))
                         & F.col(KEY_COL).isin(keys)
@@ -534,7 +534,7 @@ def sync_aggregate_minmax(
                     if not _av_memo:
                         _av_memo.append(
                             src.withColumn(
-                                SEQ_COL, _canonical_seq(F.col(SEQ_COL))
+                                SEQ_COL, _canonical_seq(SEQ_COL)
                             ).filter(F.col(SEQ_COL) <= F.lit(cur))
                         )
                     return _av_memo[0]
@@ -633,7 +633,7 @@ def sync_aggregate_minmax(
                     )
                     disc_base = disc if disc is not None else src
                     cand_src = disc_base.withColumn(
-                        SEQ_COL, _canonical_seq(F.col(SEQ_COL))
+                        SEQ_COL, _canonical_seq(SEQ_COL)
                     ).filter(
                         F.col(group_col).isin(group_vals)
                         & (F.col(SEQ_COL) <= F.lit(cur))

@@ -8,7 +8,7 @@ on ``a``; interleaving the bits of both columns (a Z-/Morton curve) and
 range-partitioning on the interleaved value keeps files tight in BOTH
 dimensions, so either predicate skips most files.
 
-``zorder_value`` is pure integer arithmetic (literal shifts, no UDF, no
+``zorder_sql`` is pure integer arithmetic (literal shifts, no UDF, no
 shuffle) — it rides the scan inside whole-stage codegen.
 ``zorder_repartition`` is the write-side job: one range shuffle on the
 z-value, files sorted within partitions so min/max stats are tight.
@@ -34,41 +34,49 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sql_templates import quote_ident
 from . import fileset
 from .apply import _pruned_table_read, _read_table, table_data_dir
 
 
-def zorder_value(cols: list[Column], bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of each column (non-negative
-    longs — bucket or rank-normalize first) into one Morton key.
+def zorder_sql(
+    col_names: list[str], bits: int = 16, quote=quote_ident
+) -> str:
+    """Interleave the low ``bits`` bits of each named column (non-
+    negative longs — bucket or rank-normalize first) into one Morton
+    key, as SQL text.
 
     Bit j of column i lands at position j * n_cols + i, built from
     literal shift amounts so the whole expression is a flat codegen
-    integer tree. n_cols * bits must stay <= 63.
+    integer tree. n_cols * bits must stay <= 63. ``quote`` renders each
+    name for the target dialect (Spark's backticks by default), so an
+    external engine can verify the clustering key from the same text.
     """
-    n = len(cols)
+    n = len(col_names)
     if n * bits > 63:
         raise ValueError(f"{n} cols x {bits} bits exceeds a long")
-    z = None
-    for i, c in enumerate(cols):
-        for j in range(bits):
-            piece = F.shiftleft(
-                F.shiftrightunsigned(c, j).bitwiseAND(F.lit(1)), j * n + i
-            )
-            z = piece if z is None else z.bitwiseOR(piece)
-    return z
-
-
-def zorder_sql(col_names: list[str], bits: int = 16) -> str:
-    """The exact SQL twin of ``zorder_value`` (generated from the same
-    loop) — lets an external engine verify the clustering key."""
-    n = len(col_names)
     terms = [
-        f"((({c} >> {j}) & 1) << {j * n + i})"
+        f"((({quote(c)} >> {j}) & 1) << {j * n + i})"
         for i, c in enumerate(col_names)
         for j in range(bits)
     ]
     return " | ".join(terms)
+
+
+def zorder_value(col_names: list[str], bits: int = 16) -> Column:
+    """``zorder_sql`` as a Column: one expression the JVM parses once."""
+    return F.expr(zorder_sql(col_names, bits))
+
+
+def with_zorder(df: DataFrame, cols: list[Column], bits: int = 16) -> DataFrame:
+    """``df`` plus its Morton key ``_z`` over ``cols`` (each projected
+    into a named input column first, dropped again after)."""
+    names = [f"_zin{i}" for i in range(len(cols))]
+    return (
+        df.withColumns(dict(zip(names, cols)))
+        .withColumn("_z", zorder_value(names, bits))
+        .drop(*names)
+    )
 
 
 # tag lists memoized per partition count: one tiny probe job per
@@ -170,8 +178,7 @@ def zorder_repartition(
     sample collect over the key column — maintenance-cadence work,
     where reproducible clustering quality is worth a scan.
     """
-    z = zorder_value(cols, bits).alias("_z")
-    zdf = df.withColumn("_z", z)
+    zdf = with_zorder(df, cols, bits)
     if n_partitions <= 1:
         return zdf.coalesce(1).sortWithinPartitions("_z").drop("_z")
     bounds = _deterministic_quantiles(zdf, n_partitions)

@@ -240,7 +240,7 @@ def _optimize_zorder(
     does)."""
     import numbers
 
-    from .layout import zorder_scale, zorder_value
+    from .layout import with_zorder, zorder_scale
 
     guard = (
         _no_partition_type_inference(spark) if partition_by else nullcontext()
@@ -276,7 +276,7 @@ def _optimize_zorder(
             # dirs bound file ranges regardless of the sampled split
             keys = [F.col(c) for c in [*partition_by, "_z"]]
             clustered = (
-                df.withColumn("_z", zorder_value(zcols, bits))
+                with_zorder(df, zcols, bits)
                 .repartitionByRange(n_out, *keys)
                 .sortWithinPartitions(*keys)
                 .drop("_z")
@@ -711,7 +711,7 @@ def _dead_tombstone_pred(before_seq: int):
     three-valued ~NULL filter — and the count must agree with the rows
     actually removed."""
     return F.coalesce(F.col(DELETED_COL), F.lit(False)) & F.coalesce(
-        _canonical_seq(F.col(SEQ_COL)) < _canonical_seq(F.lit(before_seq)),
+        _canonical_seq(SEQ_COL) < F.lit(_canonical_seq_py(before_seq)),
         F.lit(False),
     )
 
@@ -787,8 +787,8 @@ def compact_history(
             "compact_history requires a history-mode table "
             '(apply_changes(mode="history"))'
         )
-    cut = _canonical_seq(F.lit(before_seq))
-    canon = df.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL)))
+    cut = F.lit(_canonical_seq_py(before_seq))
+    canon = df.withColumn(SEQ_COL, _canonical_seq(SEQ_COL))
     old = canon.filter(F.col(SEQ_COL) < cut)
     recent = canon.filter(F.col(SEQ_COL) >= cut)
     n_old = old.count()

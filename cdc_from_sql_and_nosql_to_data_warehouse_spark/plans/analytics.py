@@ -1902,8 +1902,8 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Z-order clustering key: per-cell row counts over the Morton
 # interleave of two bucketed dimensions. Proves the layout operator's
-# clustering key byte-for-byte against an independent engine (the SQL
-# twin is generated from the same loop — operators/layout.py). The
+# clustering key byte-for-byte against an independent engine (both
+# run the same ``zorder_sql`` text — operators/layout.py). The
 # write-side job (zorder_repartition: range shuffle on this key +
 # within-partition sort) and its pruning benefit are pinned by
 # tests/test_scale_ops.py.
@@ -1911,7 +1911,7 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_zorder_query():
     from ..operators.layout import zorder_sql, zorder_value
 
-    sql_z = zorder_sql(["xb", "yb"], bits=6)
+    sql_z = zorder_sql(["xb", "yb"], bits=6, quote=lambda c: f'"{c}"')
 
     @register_query(
         "layout_zorder_cells",
@@ -1932,7 +1932,7 @@ def _register_zorder_query():
         )
         return (
             li.select(
-                zorder_value([F.col("xb"), F.col("yb")], bits=6).alias("zval")
+                zorder_value(["xb", "yb"], bits=6).alias("zval")
             )
             .groupBy("zval")
             .agg(F.count("*").alias("n_rows"))

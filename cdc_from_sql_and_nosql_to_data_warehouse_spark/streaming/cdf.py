@@ -395,7 +395,7 @@ def envelope_from_versions(versions: DataFrame) -> DataFrame:
         .otherwise("MODIFY")
         .alias("op"),
         F.struct(*[F.col(c) for c in after_cols]).alias("after"),
-        _canonical_seq(F.col(SEQ_COL)).alias("seq"),
+        _canonical_seq(SEQ_COL).alias("seq"),
     )
 
 
@@ -429,11 +429,11 @@ def _replica_applied_state(
     if mode == "history":
         return tgt.select(
             F.col(KEY_COL).alias("_cdft_k"),
-            _canonical_seq(F.col(SEQ_COL)).alias("_cdft_s"),
+            _canonical_seq(SEQ_COL).alias("_cdft_s"),
         )
     return tgt.groupBy(
         F.col(key).cast("string").alias("_cdft_k")
-    ).agg(F.max(_canonical_seq(F.col(SEQ_COL))).alias("_cdft_s"))
+    ).agg(F.max(_canonical_seq(SEQ_COL)).alias("_cdft_s"))
 
 
 def _filter_unapplied(
@@ -448,7 +448,7 @@ def _filter_unapplied(
     seq)`` anti-join drops only version rows the replica already
     retains. Null-safe on the key (a NULL key is a legitimate
     latest-wins group)."""
-    b = batch.withColumn(SEQ_COL, _canonical_seq(F.col(SEQ_COL))).alias(
+    b = batch.withColumn(SEQ_COL, _canonical_seq(SEQ_COL)).alias(
         "_cdfb"
     )
     if mode == "history":
@@ -601,7 +601,7 @@ def stream_sync_changes(
             if cur is None:
                 return
             versions = _read_table(spark, source_path).filter(
-                _canonical_seq(F.col(SEQ_COL)) <= F.lit(cur)
+                _canonical_seq(SEQ_COL) <= F.lit(cur)
             )
             if mode in ("upsert", "history") and _table_exists(
                 table_data_dir(target_path)
@@ -702,7 +702,7 @@ def stream_sync_changes(
 
             obs = Observation()
             observed = batch.observe(
-                obs, F.max(_canonical_seq(F.col(SEQ_COL))).alias("m")
+                obs, F.max(_canonical_seq(SEQ_COL)).alias("m")
             )
             apply_changes(
                 spark,
@@ -718,7 +718,7 @@ def stream_sync_changes(
                 _write_marker(batch_max)
             return
         batch_max = batch.agg(
-            F.max(_canonical_seq(F.col(SEQ_COL))).alias("m")
+            F.max(_canonical_seq(SEQ_COL)).alias("m")
         ).first()["m"]
         if batch_max is None:
             return  # empty trigger

@@ -146,7 +146,7 @@ def main() -> None:
             # driver-side sidecar max.
             tip_scan = _steady(
                 lambda: _read_table(spark, path)
-                .agg(F.max(_canonical_seq(F.col(_SEQ))).alias("m"))
+                .agg(F.max(_canonical_seq(_SEQ)).alias("m"))
                 .first()
             )
             tip_sidecar = _steady(lambda: current_max_seq(spark, path))

@@ -165,3 +165,24 @@ def run_counting_jobs(spark, fn):
         sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def run_counting_py4j(spark, fn):
+    """(fn(), the number of Py4J round trips made while fn ran): every
+    ``send_command`` on the session's gateway client — a driver-cost
+    counter that, unlike wall time, does not move with host noise."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+    return out, calls
