@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 from pyspark.sql import types as T
@@ -168,16 +169,24 @@ def run_counting_jobs(spark, fn):
 
 
 def run_counting_py4j(spark, fn):
-    """(fn(), the number of Py4J round trips made while fn ran): every
-    ``send_command`` on the session's gateway client — a driver-cost
-    counter that, unlike wall time, does not move with host noise."""
+    """(fn(), the number of Py4J round trips fn made): every
+    ``send_command`` the calling thread sends on the session's gateway
+    client — a driver-cost counter that, unlike wall time, does not move
+    with host noise.
+
+    Commands from other threads are not counted: py4j's finalizer worker
+    releases freed Java proxies on its own thread whenever it drains its
+    queue, so counting them would add, at random, releases of garbage
+    that earlier code left behind."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     calls = 0
 
     def counting(*args, **kwargs):
         nonlocal calls
-        calls += 1
+        if threading.get_ident() == caller:
+            calls += 1
         return send(*args, **kwargs)
 
     client.send_command = counting

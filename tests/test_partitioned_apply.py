@@ -669,7 +669,7 @@ def test_warm_partitioned_upsert_py4j_budget(spark, tmp_path):
     """The merge projections, pruning predicate and partition
     observation are rendered as SQL text the JVM parses once, so one
     warm partitioned upsert stays within a fixed Py4J round-trip budget
-    (it made 898 when each projection was built column by column)."""
+    (it made 798 when each projection was built column by column)."""
     trips = _warm_upsert_py4j(spark, str(tmp_path / "wh"), 3)
     assert trips <= 300, trips
 
@@ -677,7 +677,7 @@ def test_warm_partitioned_upsert_py4j_budget(spark, tmp_path):
 def test_partitioned_upsert_py4j_flat_in_width(spark, tmp_path):
     """Widening the after-image adds no per-column Py4J calls: a
     30-column apply costs under 100 round trips more than a 3-column
-    one (column-by-column projections cost about 47 per column)."""
+    one (column-by-column projections cost about 39 per column)."""
     narrow = _warm_upsert_py4j(spark, str(tmp_path / "narrow"), 3)
     wide = _warm_upsert_py4j(spark, str(tmp_path / "wide"), 30)
     assert wide - narrow < 100, (narrow, wide)
