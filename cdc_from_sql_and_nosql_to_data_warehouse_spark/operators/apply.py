@@ -363,7 +363,6 @@ def _drop_path_caches(data_dir: str) -> None:
     """Evict per-version memo entries for a deleted version dir —
     without this, every swap would strand one parsed-sidecar copy in
     the process-lifetime caches."""
-    _SEQ_CANONICAL_CACHE.pop(data_dir, None)
     fileset._FILESET_CACHE.pop(data_dir, None)
     try:
         from .layout import _SIDECAR_CACHE
@@ -427,10 +426,12 @@ def _write_table_schema(path: str, schema) -> None:
 def _stamp_schema_union(spark: SparkSession, path: str, new_schema) -> None:
     """Union a just-written frame's fields into the table's schema
     manifest — the write-time twin of what mergeSchema derives per
-    read. Recorded order first, new fields appended (matching
-    _merge_latest's evolution order). A same-name TYPE conflict removes
-    the manifest: readers then fall back to mergeSchema, which is the
-    component that owns cross-footer type reconciliation.
+    read — by ``_schema_union``: recorded order first, new fields
+    appended at every struct depth (matching _merge_latest's evolution
+    order), so a struct column that gains a nested field widens in
+    place. Only a leaf TYPE conflict removes the manifest: readers then
+    fall back to mergeSchema, which is the component that owns
+    cross-footer type reconciliation.
 
     FIRST stamp on a table that has no manifest derives the union from
     the table's own footers (one mergeSchema pass) instead of trusting
@@ -454,8 +455,6 @@ def _stamp_schema_union(spark: SparkSession, path: str, new_schema) -> None:
 
 
 def _stamp_schema_union_locked(spark: SparkSession, path: str, new_schema) -> None:
-    from pyspark.sql.types import StructType
-
     path = table_data_dir(path)
     existing = read_table_schema(path)
     if existing is None:
@@ -466,29 +465,20 @@ def _stamp_schema_union_locked(spark: SparkSession, path: str, new_schema) -> No
         # which owns surfacing that conflict), matching the
         # conflict-removes-manifest policy below.
         try:
-            derived = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(path)
-                .schema
-            )
+            derived = _footer_schema(spark, path)
         except Exception:
             return
         batch = {f.name: f for f in new_schema.fields}
         fields = [batch.get(f.name, f) for f in derived.fields]
         have = {f.name for f in fields}
         fields += [f for f in new_schema.fields if f.name not in have]
-        _write_table_schema(path, StructType(fields))
+        _write_table_schema(path, T.StructType(fields))
         return
-    have = {f.name: f.dataType for f in existing.fields}
-    for f in new_schema.fields:
-        if f.name in have and f.dataType != have[f.name]:
-            fsio.remove(os.path.join(path, SCHEMA_MANIFEST))
-            return
-    added = [f for f in new_schema.fields if f.name not in have]
-    if added:
-        _write_table_schema(
-            path, StructType(list(existing.fields) + added)
-        )
+    union = _schema_union(existing, new_schema)
+    if union is None:
+        fsio.remove(os.path.join(path, SCHEMA_MANIFEST))
+    elif union != existing:
+        _write_table_schema(path, union)
 
 
 def _prestamp_schema_union(spark: SparkSession, path: str, new_schema) -> None:
@@ -519,17 +509,13 @@ def refresh_table_schema(spark: SparkSession, path: str):
     append would otherwise be invisible to manifest-imposed hot reads.
     Engine-managed tables never need this."""
     d, paths = _data_read_paths(path)
-    reader = spark.read.option("mergeSchema", "true")
-    if paths is None:
-        schema = reader.parquet(d).schema
-    elif paths:
-        schema = reader.option("basePath", d).parquet(*paths).schema
-    else:
+    if paths == []:
         raise FileNotFoundError(
             f"table {path!r} holds only aborted-commit staging "
             "(no committed data): the crashed first commit's batch "
             "must be replayed"
         )
+    schema = _footer_schema(spark, d, paths)
     _write_table_schema(d, schema)
     return schema
 
@@ -541,6 +527,39 @@ def _table_reader(spark: SparkSession, path: str):
     if schema is None:
         return spark.read.option("mergeSchema", "true")
     return spark.read.schema(schema)
+
+
+def _footer_schema(spark: SparkSession, data_dir: str, paths=None):
+    """The footer-merged (mergeSchema) schema of exactly ``paths`` under
+    ``data_dir`` (hive partition columns named through ``basePath``), or
+    of every file in ``data_dir`` when ``paths`` is None. One driver-side
+    footer job: callers ask only for files no recorded schema covers."""
+    reader = spark.read.option("mergeSchema", "true")
+    if paths is None:
+        return reader.parquet(data_dir).schema
+    return reader.option("basePath", data_dir).parquet(*paths).schema
+
+
+def _schema_union(recorded, new):
+    """``recorded`` with the fields only ``new`` has appended, at every
+    struct depth — recorded order first, as ``_widened`` orders a merge —
+    or None on a leaf type conflict (a same-name field whose non-struct
+    types differ). A field either side may leave null stays nullable.
+    The one rule the schema manifest and the stats sidecar both evolve
+    by."""
+    if not (isinstance(recorded, T.StructType) and isinstance(new, T.StructType)):
+        return recorded if recorded == new else None
+    inc = {f.name: f for f in new.fields}
+    fields = []
+    for f in recorded.fields:
+        g = inc.pop(f.name, None)
+        if g is not None:
+            t = _schema_union(f.dataType, g.dataType)
+            if t is None:
+                return None
+            f = T.StructField(f.name, t, f.nullable or g.nullable, f.metadata)
+        fields.append(f)
+    return T.StructType(fields + list(inc.values()))
 
 
 def _read_table(spark: SparkSession, path: str) -> DataFrame:
@@ -596,75 +615,49 @@ def _pruned_table_read(
         # than the sidecar are conservatively kept either way.
         import json
 
-        from pyspark.sql.types import StructType
-
         try:
-            sidecar_schema = StructType.fromJson(
-                json.loads(stats["schema"])
-            )
+            sidecar_schema = T.StructType.fromJson(json.loads(stats["schema"]))
             schema = sidecar_schema
         except (KeyError, ValueError, TypeError):
             schema = None
     if schema is None and stats is None:
         return None
     keep, _total = prune_files(path, predicates)
-    if sidecar_schema is not None and keep:
+    unknown = []
+    if sidecar_schema is not None:
+        unknown = [r for r in keep if r not in stats["files"]]
+    if unknown:
         # the sidecar schema predates files written after the stats
         # pass; footer-merge ONLY those unknown kept files (O(new
         # files)) and union their fields in, so an evolving append
         # between stats refreshes stays visible. A type conflict falls
-        # back to the caller's mergeSchema path.
-        known = stats["files"]
-        unknown = [rel for rel in keep if rel not in known]
-        if unknown:
-            from pyspark.sql.types import StructType
-
-            try:
-                newer = (
-                    spark.read.option("mergeSchema", "true")
-                    .option("basePath", path)
-                    .parquet(*[os.path.join(path, r) for r in unknown])
-                    .schema
-                )
-            except Exception:
-                return None
-            have = {f.name: f.dataType for f in schema.fields}
-            for f in newer.fields:
-                if f.name in have and f.dataType != have[f.name]:
-                    return None
-            added = [f for f in newer.fields if f.name not in have]
-            if added:
-                schema = StructType(list(schema.fields) + added)
+        # back to the caller's unpruned read.
+        try:
+            schema = _schema_union(
+                schema,
+                _footer_schema(spark, path, [os.path.join(path, r) for r in unknown]),
+            )
+        except Exception:
+            return None
+        if schema is None:
+            return None
+    keep = [os.path.join(path, rel) for rel in keep]
     if schema is None:
         if not keep:
             # cannot synthesize an empty frame without a schema; the
             # junk-aware reader keeps this working on a legacy root a
             # crashed upgrade polluted
             return _read_table(spark, path).filter(F.lit(False))
-        return (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
-            .parquet(*[os.path.join(path, rel) for rel in keep])
-        )
-    if not keep:
+        reader = _table_reader(spark, path)
+    elif not keep:
         return spark.createDataFrame([], schema)
-    return (
-        spark.read.schema(schema)
-        .option("basePath", path)
-        .parquet(*[os.path.join(path, rel) for rel in keep])
-    )
+    else:
+        reader = spark.read.schema(schema)
+    return reader.option("basePath", path).parquet(*keep)
 
 
 def _is_canonical_seq_str(v) -> bool:
     return isinstance(v, str) and len(v) == 40 and v.isdigit()
-
-
-# path -> (sidecar (mtime_ns, size), verdict): the canonicality walk
-# iterates every sidecar entry, and one hot read_changes tick consults
-# it several times — memoized per sidecar VERSION, the same freshness
-# key the sidecar parse cache uses (_dump_sidecar replaces the file,
-# so the key changes whenever the content can).
-_SEQ_CANONICAL_CACHE: dict = {}
 
 
 def _seq_stats_canonical(path: str) -> bool:
@@ -677,36 +670,11 @@ def _seq_stats_canonical(path: str) -> bool:
     lexicographically-incomparable forms and silently drop files, so
     seq-bound pruning must be skipped entirely for them. True also
     when the sidecar does not track _seq (prune_files is then
-    conservative by itself)."""
-    from .layout import FILE_STATS_SIDECAR, _load_sidecar
+    conservative by itself). The verdict is memoized with the sidecar
+    parse."""
+    from .layout import _seq_verdict
 
-    path = table_data_dir(path)
-    try:
-        st = os.stat(os.path.join(path, FILE_STATS_SIDECAR))
-        key = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    if key is not None:
-        hit = _SEQ_CANONICAL_CACHE.get(path)
-        if hit is not None and hit[0] == key:
-            return hit[1]
-
-    def _walk() -> bool:
-        stats = _load_sidecar(path)
-        if stats is None or SEQ_COL not in stats.get("columns", []):
-            return True
-        for entry in stats["files"].values():
-            if SEQ_COL not in entry:
-                continue
-            for bound in entry[SEQ_COL]:
-                if bound is not None and not _is_canonical_seq_str(bound):
-                    return False
-        return True
-
-    verdict = _walk()
-    if key is not None:
-        _SEQ_CANONICAL_CACHE[path] = (key, verdict)
-    return verdict
+    return _seq_verdict(path)
 
 
 def _seq_scoped_read(

@@ -374,12 +374,14 @@ def _entry_for(data_dir: str, rel: str) -> dict:
     (statted now — one fresh local call per BATCH file, never per
     table file; compaction carries prior entries instead)."""
     full = os.path.join(os.path.abspath(data_dir), rel)
-    st = os.stat(full)
+    size, mtime = fsio.size(full), fsio.mtime(full)
+    if size is None or mtime is None:
+        raise FileNotFoundError(full)
     return {
         "path": "file://" + full,
-        "size": st.st_size,
+        "size": size,
         "isDir": False,
-        "modificationTime": int(st.st_mtime * 1000),
+        "modificationTime": int(mtime * 1000),
         "blockReplication": 1,
         "blockSize": 33554432,
         "action": "add",

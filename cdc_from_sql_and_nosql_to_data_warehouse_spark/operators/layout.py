@@ -33,10 +33,20 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .. import fsio
 from ..functions.sql_templates import quote_ident
 from . import fileset
-from .apply import _pruned_table_read, _read_table, table_data_dir
+from .apply import (
+    SEQ_COL,
+    _footer_schema,
+    _is_canonical_seq_str,
+    _pruned_table_read,
+    _read_table,
+    _schema_union,
+    table_data_dir,
+)
 
 
 def zorder_sql(
@@ -227,23 +237,25 @@ def zorder_scale(c: Column, lo, hi, bits: int = 16) -> Column:
 FILE_STATS_SIDECAR = "_file_stats.json"
 _STATS_VERSION = 1
 
-# Sharded sidecar (format version 2): one monolithic JSON is O(table
-# files) of driver parse per cold read and a FULL rewrite per stats
-# accretion — at 100 TB (~100k files) that is tens of MB of driver
-# work on every maintenance tick, and unbounded under small-file
-# pressure. A table whose files span more than one top-level partition
-# directory shards the per-file entries by that FIRST path component
-# into ``_file_stats.d/<sha1(dir)>.json``; the manifest keeps the
-# table-level metadata (columns/schema/bloom config) plus a shard
-# index carrying each shard's dir, entry count, and a FILESET HASH of
-# its sorted file names. Parquet data files are immutable and
-# uniquely named, so an unchanged fileset hash proves a shard's
-# entries are current — accretion then neither parses nor rewrites
-# it, and ``prune_files`` loads only the shards whose partition
-# subtrees survive the directory walk (lazy ``_ShardedFiles`` view;
-# every existing consumer keeps plain-dict semantics). This is the
-# same decomposition a lakehouse manifest-list makes: one small index
-# naming per-partition manifests, stats read per matching manifest.
+# Sidecar formats. Per-file entries are keyed by the file's path
+# relative to the table dir and grouped by ``_shard_component``, its
+# first path component (the top-level partition dir; '' for root-level
+# files). A table whose files sit in at most one component keeps the
+# format-1 sidecar: one JSON of columns, schema, bloom config and every
+# entry. More than one component takes format 2, because one monolithic
+# JSON is O(table files) of driver parse per cold read and of rewrite
+# per accretion — tens of MB at ~100k files. ``_file_stats.json`` is
+# then a small index (columns/schema/bloom plus, per shard, its
+# component, entry count and a FILESET HASH of its file names), and the
+# entries live in ``_file_stats.d/<sha1(component)>.json``. Parquet data
+# files are immutable and uniquely named, so a shard whose hash matches
+# the component's committed files is current: accretion carries it
+# without parsing or rewriting it, and ``prune_files`` loads only the
+# shards whose partition subtrees survive the directory walk (the lazy
+# ``_ShardedFiles`` view keeps plain-mapping semantics for every
+# consumer). This is the decomposition a lakehouse manifest-list makes:
+# one small index naming per-partition manifests. ``_dump_sidecar`` is
+# the one writer of both formats.
 STATS_SHARD_DIR = "_file_stats.d"
 _STATS_VERSION_SHARDED = 2
 
@@ -291,10 +303,9 @@ class _ShardedFiles:
             self._loaded[comp] = {}
             return self._loaded[comp]
         try:
-            with open(os.path.join(self._dir, entry[0])) as f:
-                doc = json.load(f)
-            files = doc.get("files", {})
-        except (OSError, json.JSONDecodeError, ValueError):
+            raw = fsio.read_text(os.path.join(self._dir, entry[0]))
+            files = json.loads(raw).get("files", {})
+        except (OSError, TypeError, ValueError):
             # a carried-through-swap manifest references shards the
             # swap did not copy: conservative empty (stats advisory)
             files = {}
@@ -311,7 +322,7 @@ class _ShardedFiles:
         return self._load(_shard_component(rel)).get(rel, default)
 
     def __len__(self) -> int:
-        return sum(n for _f, n in self._by_comp.values())
+        return sum(n for _f, n, _fh in self._by_comp.values())
 
     def __bool__(self) -> bool:
         return len(self) > 0
@@ -335,12 +346,12 @@ class _ShardedFiles:
         return self._all().items()
 
 
-# (path -> ((mtime_ns, size), parsed dict)) — one hot read_changes tick
-# consults the sidecar several times (canonicality guard, selectivity
-# gate, two pruned reads); _dump_sidecar replaces the file atomically
-# (new inode, new mtime), so (mtime_ns, size) is a sound freshness key
-# and the multi-MB json.loads runs once per sidecar version, not per
-# consultation.
+# path -> [(mtime, size), parsed dict, _seq canonicality verdict or
+# None]. One hot read_changes tick consults the sidecar several times
+# (canonicality guard, selectivity gate, two pruned reads);
+# _dump_sidecar replaces the file atomically (new inode, new mtime), so
+# (mtime, size) is a sound freshness key, and the multi-MB json.loads
+# and the verdict's walk over every entry run once per sidecar version.
 _SIDECAR_CACHE: dict = {}
 
 
@@ -353,19 +364,16 @@ def _load_sidecar(path: str) -> dict | None:
     occur. Parses are memoized per (mtime, size)."""
     path = table_data_dir(path)
     sidecar = os.path.join(path, FILE_STATS_SIDECAR)
-    try:
-        st = os.stat(sidecar)
-    except OSError:
+    key = (fsio.mtime(sidecar), fsio.size(sidecar))
+    if None in key:
         _SIDECAR_CACHE.pop(path, None)
         return None
-    key = (st.st_mtime_ns, st.st_size)
     hit = _SIDECAR_CACHE.get(path)
     if hit is not None and hit[0] == key:
         return hit[1]
     try:
-        with open(sidecar) as f:
-            parsed = json.load(f)
-    except (json.JSONDecodeError, OSError):
+        parsed = json.loads(fsio.read_text(sidecar))
+    except (OSError, TypeError, ValueError):
         return None
     if "shards" in parsed and "files" not in parsed:
         # sharded manifest: per-file entries come through the lazy
@@ -376,96 +384,85 @@ def _load_sidecar(path: str) -> dict | None:
         parsed["files"] = _ShardedFiles(
             os.path.join(path, STATS_SHARD_DIR), parsed["shards"]
         )
-    _SIDECAR_CACHE[path] = (key, parsed)
+    _SIDECAR_CACHE[path] = [key, parsed, None]
     return parsed
 
 
-def _dump_sidecar(path: str, payload: dict) -> None:
-    """Persist the stats sidecar, sharding the per-file entries by
-    top-level partition dir whenever they span more than one (see the
-    STATS_SHARD_DIR comment). Shards whose content is unchanged vs the
-    prior sidecar are NOT rewritten — an accretion that touched one
-    partition rewrites one shard plus the small manifest. Every write
-    is atomic (fsio seam), and the manifest is always replaced LAST so
-    its (mtime, size) freshness key covers every shard it names."""
-    from .. import fsio
-
+def _seq_verdict(path: str) -> bool:
+    """``apply._seq_stats_canonical``'s verdict, memoized with the
+    sidecar parse it walks."""
     path = table_data_dir(path)
-    manifest = os.path.join(path, FILE_STATS_SIDECAR)
-    shard_dir = os.path.join(path, STATS_SHARD_DIR)
-    files = payload.get("files", {})
-    if isinstance(files, _ShardedFiles):
-        files = files._all()
+    stats = _load_sidecar(path)
+    if stats is None:
+        return True
+    hit = _SIDECAR_CACHE.get(path)
+    if hit is not None and hit[1] is stats and hit[2] is not None:
+        return hit[2]
+    verdict = SEQ_COL not in stats.get("columns", []) or all(
+        bound is None or _is_canonical_seq_str(bound)
+        for entry in stats["files"].values()
+        for bound in entry.get(SEQ_COL, ())
+    )
+    if hit is not None and hit[1] is stats:
+        hit[2] = verdict
+    return verdict
+
+
+def _parts(files: dict) -> dict:
+    """Per-file entries grouped for ``_dump_sidecar``: shard component
+    -> (fileset hash, {rel: entry})."""
     by_comp: dict[str, dict] = {}
     for rel, entry in files.items():
         by_comp.setdefault(_shard_component(rel), {})[rel] = entry
+    return {c: (_fileset_hash(m), m) for c, m in by_comp.items()}
 
-    if len(by_comp) <= 1:
-        doc = {k: v for k, v in payload.items() if k != "shards"}
-        doc["files"] = files
+
+def _dump_sidecar(
+    path: str, head: dict, parts: dict, carried: dict | None = None
+) -> dict:
+    """The ONE writer of the stats sidecar; returns it as
+    ``_load_sidecar`` would. ``head`` is the table-level metadata
+    (columns, schema, bloom), ``parts`` maps shard components to
+    (fileset hash, entries) to write, and ``carried`` holds prior index
+    entries of shards kept as they are (neither parsed nor rewritten).
+    At most one component persists as one format-1 JSON and sweeps the
+    shards a sharded past left (a sweep failure must not fail the dump,
+    whose sidecar is already written). More persist as format 2: the
+    shards in ``parts`` are written first (atomic each), shards the
+    index no longer names are swept, and the index manifest is
+    replaced LAST, so its (mtime, size) freshness key covers every
+    shard it names."""
+    manifest = os.path.join(path, FILE_STATS_SIDECAR)
+    shard_dir = os.path.join(path, STATS_SHARD_DIR)
+    doc = dict(head)
+    if len(parts) + len(carried or ()) <= 1:
         doc["version"] = _STATS_VERSION
+        doc["files"] = next((m for _fh, m in parts.values()), {})
         fsio.atomic_write_text(manifest, json.dumps(doc))
-        # a format downgrade (e.g. a flat rewrite of a once-partitioned
-        # table) must not strand stale shard files; cleanup failures
-        # (an unexpected subdir, permissions) must not fail the dump —
-        # the flat sidecar above is already written and correct
         try:
             for name in fsio.listdir(shard_dir):
                 fsio.remove(os.path.join(shard_dir, name))
         except OSError:
             pass
         fsio.rmdir(shard_dir)
-        return
-
-    prior = _load_sidecar(path)
-    prior_view = prior.get("files") if prior else None
-    index: dict[str, dict] = {}
-    writes: dict[str, dict] = {}
-    for comp, fmap in sorted(by_comp.items()):
-        fname = _shard_fname(comp)
-        index[fname] = {
-            "dir": comp,
-            "n": len(fmap),
-            "fh": _fileset_hash(fmap.keys()),
-        }
-        if isinstance(prior_view, _ShardedFiles):
-            if prior_view._load(comp) == fmap:
-                continue  # byte-equal shard: no rewrite
-        writes[fname] = fmap
-    head = {
-        k: v
-        for k, v in payload.items()
-        if k not in ("files", "shards", "version")
-    }
-    _persist_sharded(path, index, writes, head)
-
-
-def _persist_sharded(
-    path: str, index: dict, writes: dict, head: dict
-) -> None:
-    """The ONE writer of the sharded sidecar format — both the full
-    dump and the incremental accretion delegate here so the format's
-    correctness invariant cannot drift between them: changed shards
-    are written first (atomic each), shards the index no longer names
-    are swept, and the manifest is replaced LAST, so its (mtime, size)
-    freshness key always covers every shard it names."""
-    from .. import fsio
-
-    shard_dir = os.path.join(path, STATS_SHARD_DIR)
+        return doc
+    index = dict(carried or {})
     fsio.makedirs(shard_dir)
-    for fname, fmap in writes.items():
+    for comp, (fh, fmap) in parts.items():
+        fname = _shard_fname(comp)
+        index[fname] = {"dir": comp, "n": len(fmap), "fh": fh}
         fsio.atomic_write_text(
             os.path.join(shard_dir, fname), json.dumps({"files": fmap})
         )
     for name in fsio.listdir(shard_dir):
         if name not in index:
             fsio.remove(os.path.join(shard_dir, name))
-    doc = dict(head)
     doc["version"] = _STATS_VERSION_SHARDED
-    doc["shards"] = index
-    fsio.atomic_write_text(
-        os.path.join(path, FILE_STATS_SIDECAR), json.dumps(doc)
-    )
+    doc["shards"] = dict(sorted(index.items()))
+    fsio.atomic_write_text(manifest, json.dumps(doc))
+    doc["files"] = _ShardedFiles(shard_dir, doc["shards"])
+    doc["files"]._loaded.update({c: m for c, (_fh, m) in parts.items()})
+    return doc
 
 
 def _enc_stat(v):
@@ -551,7 +548,9 @@ def collect_file_stats(
     ``_swap_into`` swaps only if registered — stats are advisory, a
     stale or missing sidecar only costs pruning, never correctness,
     because ``read_skipping`` includes unknown files conservatively and
-    re-applies the full predicate to every row it reads).
+    re-applies the full predicate to every row it reads). The pass
+    reads through the table's own reader (``apply._read_table``: the
+    schema manifest when the table carries one, so no footer merge).
 
     This is the maintenance-time twin of what a lakehouse writer stamps
     into its log at commit time; on plain parquet the stats pass reads
@@ -559,14 +558,15 @@ def collect_file_stats(
     scan, not a table scan). File keys are stored relative to the table
     root so the sidecar survives a directory move.
 
-    ``incremental=True`` scans only the files the sidecar has never
-    seen and drops entries for vanished ones — O(new files), not
-    O(table): after a streaming append tick, refreshing stats costs
-    the new files' footers, exactly how a lakehouse log accretes
-    per-commit stats. Falls back to the full pass when there is no
-    sidecar or its column set differs. (After a compaction/OPTIMIZE
-    rewrite, every file is new, so incremental degenerates to the full
-    pass by itself.)
+    ``incremental=True`` accretes instead (``_accrete``): entries of
+    surviving files are kept, vanished files drop, and only files the
+    sidecar has never seen are scanned — O(new files), not O(table):
+    after a streaming append tick, refreshing stats costs the new
+    files' footers, exactly how a lakehouse log accretes per-commit
+    stats. Falls back to the full pass when there is no sidecar, its
+    column set differs, or the new files conflict with the recorded
+    schema. (After a compaction/OPTIMIZE rewrite, every file is new, so
+    incremental degenerates to the full pass by itself.)
 
     Scale: the aggregate is one shuffle keyed by file name — O(files
     scanned) result rows collected to the driver, the same order of
@@ -574,182 +574,70 @@ def collect_file_stats(
     """
     path = table_data_dir(path)
     existing = _load_sidecar(path)
-    bloom_meta = existing.get("bloom") if existing else None
-    prior = existing if incremental else None
-    if prior is not None and prior.get("columns") != columns:
-        prior = None  # column set changed: full re-collect
-
-    if prior is not None and isinstance(prior.get("files"), _ShardedFiles):
-        # sharded accretion: shards whose on-disk fileset hash matches
-        # the manifest are provably current (data files are immutable
-        # and uniquely named) — neither parsed nor rewritten; only
-        # changed partition subtrees pay I/O. Falls through to the
-        # full pass on a cross-file schema conflict.
-        out = _collect_sharded_incremental(spark, path, columns, prior)
-        if out is not None:
-            return out
-        prior = None
-
-    if prior is not None:
-        on_disk = set(fileset.committed_files(path))
-        kept = {
-            rel: st for rel, st in prior["files"].items() if rel in on_disk
-        }
-        new_rel = sorted(on_disk - set(kept))
-        schema_json = prior["schema"]
-        if new_rel:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(schema_json))
-            new_paths = [os.path.join(path, r) for r in new_rel]
-            # Schema evolution guard: a mid-stream evolving append writes
-            # files whose footers carry columns the recorded schema lacks;
-            # carrying the stale schema forever would make read_skipping
-            # (which imposes the sidecar schema instead of mergeSchema)
-            # silently drop the evolved column. Footer-merge ONLY the new
-            # files (O(new files), the incremental contract) and union any
-            # new fields into the record; a same-name type conflict falls
-            # back to the full pass, which re-derives the table's own
-            # merged schema.
-            new_schema = (
-                spark.read.option("mergeSchema", "true")
-                .option("basePath", path)
-                .parquet(*new_paths)
-                .schema
-            )
-            recorded_types = {f.name: f.dataType for f in schema.fields}
-            conflict = any(
-                f.name in recorded_types
-                and f.dataType != recorded_types[f.name]
-                for f in new_schema.fields
-            )
-            if conflict:
-                prior = None
-            else:
-                added = [
-                    f for f in new_schema.fields
-                    if f.name not in recorded_types
-                ]
-                if added:
-                    schema = StructType(list(schema.fields) + added)
-                    schema_json = schema.json()
-                sub = (
-                    spark.read.schema(schema)
-                    .option("basePath", path)
-                    .parquet(*new_paths)
-                )
-                kept.update(_stat_files(spark, path, columns, sub))
-        if prior is not None:
-            payload = {
-                "version": _STATS_VERSION,
-                "columns": columns,
-                "schema": schema_json,
-                "files": kept,
-            }
-    if prior is None:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        missing = [c for c in columns if c not in df.columns]
-        if missing:
-            raise ValueError(f"stats columns not in table: {missing}")
-        payload = {
-            "version": _STATS_VERSION,
-            "columns": columns,
-            "schema": df.schema.json(),
-            "files": _stat_files(spark, path, columns, df),
-        }
-    if bloom_meta:
+    head = {"columns": columns}
+    if existing and existing.get("bloom"):
         # keep the bloom configuration through min/max refreshes; files
         # whose bloom entry was dropped by a full rebuild probe
         # conservatively until collect_file_blooms re-stamps them
         # (refresh_file_stats chains the two)
-        payload["bloom"] = bloom_meta
-    _dump_sidecar(path, payload)
-    return payload
+        head["bloom"] = existing["bloom"]
+    if incremental and existing and existing.get("columns") == columns:
+        out = _accrete(spark, path, head, existing)
+        if out is not None:
+            return out
+    df = _read_table(spark, path)
+    missing = [c for c in columns if c not in df.columns]
+    if missing:
+        raise ValueError(f"stats columns not in table: {missing}")
+    head["schema"] = df.schema.json()
+    return _dump_sidecar(path, head, _parts(_stat_files(spark, path, columns, df)))
 
 
-def _collect_sharded_incremental(
-    spark: SparkSession, path: str, columns: list[str], prior: dict
+def _accrete(
+    spark: SparkSession, path: str, head: dict, prior: dict
 ) -> dict | None:
-    """Accrete a SHARDED stats sidecar: per top-level partition dir,
-    compare the on-disk fileset hash against the manifest — matching
-    shards carry over untouched (no parse, no rewrite); changed ones
-    keep entries for surviving files and stat only the new ones (one
-    batched column-pruned job across all changed shards). Returns the
-    fresh sidecar, or None on a cross-file schema conflict (the caller
-    then runs the full pass, which owns conflict reconciliation)."""
-    view: _ShardedFiles = prior["files"]
-    by_comp_disk: dict[str, list[str]] = {}
+    """Accrete ``prior`` (either format) to the table's committed
+    files under ``head``'s columns, or None when the new files conflict
+    with the recorded schema (the caller then runs the full pass, which
+    re-derives the table's own schema). Files are grouped by shard
+    component; a component whose fileset hash matches the prior index
+    is carried without being parsed. The others keep the entries of
+    their surviving files,
+    and every file no entry covers is statted in one column-pruned job
+    under the recorded schema, widened by ``apply._schema_union`` with
+    the footer schema of exactly those files (a mid-stream evolving
+    append must not vanish from sidecar-schema reads)."""
+    view = prior["files"]
+    groups: dict[str, list[str]] = {}
     for rel in fileset.committed_files(path):
-        by_comp_disk.setdefault(_shard_component(rel), []).append(rel)
-
-    index: dict[str, dict] = {}
-    pending: list[tuple[str, dict, list[str]]] = []
-    new_all: list[str] = []
-    for comp, rels in sorted(by_comp_disk.items()):
-        fname = _shard_fname(comp)
+        groups.setdefault(_shard_component(rel), []).append(rel)
+    index = {}
+    if isinstance(view, _ShardedFiles) and len(groups) > 1:
+        index = view._by_comp
+    parts, carried, new = {}, {}, []
+    for comp, rels in groups.items():
         fh = _fileset_hash(rels)
-        meta = view._by_comp.get(comp)
+        meta = index.get(comp)
         if meta is not None and meta[2] == fh:
-            index[fname] = {"dir": comp, "n": len(rels), "fh": fh}
-            continue  # untouched subtree: carried by reference
-        entries = view._load(comp)
-        kept = {r: entries[r] for r in rels if r in entries}
-        new = [r for r in rels if r not in entries]
-        pending.append((comp, kept, new))
-        new_all += new
-
-    schema_json = prior["schema"]
-    stats_new: dict = {}
-    if new_all:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(schema_json))
-        new_paths = [os.path.join(path, r) for r in new_all]
-        # same evolution guard as the monolith accretion: footer-merge
-        # ONLY the new files; union new fields; conflict -> full pass
-        new_schema = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
-            .parquet(*new_paths)
-            .schema
-        )
-        recorded_types = {f.name: f.dataType for f in schema.fields}
-        if any(
-            f.name in recorded_types and f.dataType != recorded_types[f.name]
-            for f in new_schema.fields
-        ):
+            carried[meta[0]] = {"dir": comp, "n": meta[1], "fh": fh}
+            continue
+        parts[comp] = (fh, {r: view[r] for r in rels if r in view})
+        new += [r for r in rels if r not in view]
+    head["schema"] = prior["schema"]
+    if new:
+        recorded = StructType.fromJson(json.loads(prior["schema"]))
+        paths = [os.path.join(path, r) for r in new]
+        schema = _schema_union(recorded, _footer_schema(spark, path, paths))
+        if schema is None:
             return None
-        added = [
-            f for f in new_schema.fields if f.name not in recorded_types
-        ]
-        if added:
-            schema = StructType(list(schema.fields) + added)
-            schema_json = schema.json()
-        sub = (
-            spark.read.schema(schema)
-            .option("basePath", path)
-            .parquet(*new_paths)
-        )
-        stats_new = _stat_files(spark, path, columns, sub)
-
-    writes: dict[str, dict] = {}
-    for comp, kept, new in pending:
-        fmap = dict(kept)
+        if schema != recorded:
+            head["schema"] = schema.json()
+        df = spark.read.schema(schema).option("basePath", path).parquet(*paths)
+        stats = _stat_files(spark, path, head["columns"], df)
         for r in new:
-            if r in stats_new:
-                fmap[r] = stats_new[r]
-        fname = _shard_fname(comp)
-        index[fname] = {
-            "dir": comp,
-            "n": len(fmap),
-            "fh": _fileset_hash(by_comp_disk[comp]),
-        }
-        writes[fname] = fmap
-    head = {"columns": columns, "schema": schema_json}
-    if prior.get("bloom"):
-        head["bloom"] = prior["bloom"]
-    _persist_sharded(path, index, writes, head)
-    return _load_sidecar(path)
+            if r in stats:
+                parts[_shard_component(r)][1][r] = stats[r]
+    return _dump_sidecar(path, head, parts, carried)
 
 
 def _promote(stat, bound):
@@ -1033,38 +921,32 @@ def collect_file_blooms(
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StringType, StructField
 
     path = table_data_dir(path)
-    payload = _load_sidecar(path)
-    if payload is not None:
+    df = _read_table(spark, path)
+    missing = [c for c in columns if c not in df.columns]
+    if missing:
+        raise ValueError(f"bloom columns not in table: {missing}")
+    prior = _load_sidecar(path)
+    if prior is None:
+        head = {"columns": [], "schema": df.schema.json()}
+        files = {}
+    else:
         import copy
 
         # _load_sidecar returns the memoized parse — never mutate it;
         # a sharded view materializes (bloom collection is whole-table
         # maintenance by nature)
-        files = payload.get("files", {})
+        head = {
+            k: copy.deepcopy(v)
+            for k, v in prior.items()
+            if k not in ("files", "shards", "version")
+        }
+        files = prior["files"]
         if isinstance(files, _ShardedFiles):
             files = files._all()
-        payload = {
-            k: copy.deepcopy(v)
-            for k, v in payload.items()
-            if k not in ("files", "shards")
-        }
-        payload["files"] = copy.deepcopy(files)
-    if payload is None:
-        df0 = spark.read.option("mergeSchema", "true").parquet(path)
-        payload = {
-            "version": _STATS_VERSION,
-            "columns": [],
-            "schema": df0.schema.json(),
-            "files": {},
-        }
-
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    missing = [c for c in columns if c not in df.columns]
-    if missing:
-        raise ValueError(f"bloom columns not in table: {missing}")
+        files = copy.deepcopy(files)
     m, k = num_bits, num_hashes
 
     out_schema = StructType(
@@ -1127,7 +1009,7 @@ def collect_file_blooms(
         if fpath.startswith("file:"):
             fpath = fpath[len("file:"):]
         rel = os.path.relpath(os.path.abspath(fpath), root)
-        entry = payload["files"].setdefault(rel, {})
+        entry = files.setdefault(rel, {})
         for c in columns:
             b64 = r[f"{_BLOOM_PREFIX}{c}"]
             if b64 is None:
@@ -1136,9 +1018,8 @@ def collect_file_blooms(
                 entry.pop(f"{_BLOOM_PREFIX}{c}", None)
             else:
                 entry[f"{_BLOOM_PREFIX}{c}"] = b64
-    payload["bloom"] = {"columns": columns, "m": m, "k": k}
-    _dump_sidecar(path, payload)
-    return payload
+    head["bloom"] = {"columns": columns, "m": m, "k": k}
+    return _dump_sidecar(path, head, _parts(files))
 
 
 def _bloom_may_contain(

@@ -41,9 +41,8 @@ from ..operators.apply import (
     apply_changes,
     apply_changes_bucketed,
     current_max_seq,
-    table_data_dir,
 )
-from ..operators.layout import FILE_STATS_SIDECAR, collect_file_stats
+from ..operators.layout import _load_sidecar, collect_file_stats
 from ..operators.maintenance import (
     compact_history,
     compact_parquet,
@@ -291,15 +290,10 @@ def run_envelope_apply(
             # new files), the lakehouse per-commit stats stamp. Upsert
             # rewrites files, so its stats refresh stays at the
             # compaction cadence instead.
-            sidecar = fsio.read_text(
-                os.path.join(table_data_dir(warehouse_path), FILE_STATS_SIDECAR)
-            )
+            sidecar = _load_sidecar(warehouse_path)
             if sidecar is not None:
                 collect_file_stats(
-                    spark,
-                    warehouse_path,
-                    json.loads(sidecar)["columns"],
-                    incremental=True,
+                    spark, warehouse_path, sidecar["columns"], incremental=True
                 )
         if (
             compact_every_n_batches

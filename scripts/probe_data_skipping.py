@@ -195,9 +195,6 @@ def main_shard_scale() -> None:
     from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import (
         layout as L,
     )
-    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
-        _SEQ_CANONICAL_CACHE,
-    )
 
     work = tempfile.mkdtemp(prefix="shard_scale_probe_")
     try:
@@ -234,7 +231,6 @@ def main_shard_scale() -> None:
 
             def cold(preds):
                 L._SIDECAR_CACHE.clear()
-                _SEQ_CANONICAL_CACHE.clear()
                 t0 = time.perf_counter()
                 keep, total = prune_files(path, preds)
                 return time.perf_counter() - t0, len(keep), total

@@ -813,3 +813,40 @@ def test_sharded_manifest_survives_swap_conservatively(spark, tmp_path):
     refresh_file_stats(spark, path)
     keep2, _ = prune_files(path, [("a", ">", 10_000)])
     assert keep2 == []
+
+
+def test_stats_and_bloom_passes_read_through_the_table_reader(spark, tmp_path):
+    """On a table with a schema manifest, the full stats pass and the
+    bloom pass impose the manifest (``apply._read_table``) instead of
+    footer-merging every file first: each is its keyed aggregate's two
+    jobs, with no third for a mergeSchema footer union."""
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.apply import (
+        apply_changes,
+        read_table_schema,
+    )
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators.layout import (
+        collect_file_blooms,
+    )
+
+    from .fixtures import run_counting_jobs
+
+    hist = str(tmp_path / "jobs_hist")
+    for b in range(2):
+        env = spark.range(10).select(
+            (F.col("id") + b * 10).cast("string").alias("key"),
+            F.lit("INSERT").alias("op"),
+            F.struct((F.col("id") + b * 10).alias("k")).alias("after"),
+            (F.col("id") + 1 + b * 10).alias("seq"),
+        )
+        apply_changes(spark, env, hist, "k", mode="history")
+    assert read_table_schema(hist) is not None
+
+    out, stats_jobs = run_counting_jobs(
+        spark, lambda: collect_file_stats(spark, hist, ["_seq", "_key"])
+    )
+    assert len(out["files"]) >= 2
+    _, bloom_jobs = run_counting_jobs(
+        spark, lambda: collect_file_blooms(spark, hist, ["_key"], num_bits=1 << 10)
+    )
+    assert (stats_jobs, bloom_jobs) == (2, 2)
+    assert read_skipping(spark, hist, [("_key", "=", "13")]).count() == 1

@@ -137,3 +137,40 @@ def test_sql_rendered_merge_round_trips_hostile_schema(
         (k2, None, None, None)
     ]
     assert tombstones[0][A.SEQ_COL] == A._canonical_seq_py(6)
+
+
+@pytest.mark.parametrize("partition_by", [None, [PART]], ids=["flat", "partitioned"])
+def test_nested_fields_differing_only_in_order_merge_by_name(
+    spark, tmp_path, partition_by
+):
+    """A batch whose nested struct lists the stored fields in another
+    order, one of them named with a backtick, merges field by name."""
+    ab = GROWN
+    ba = T.StructType(list(reversed(GROWN.fields)))
+    wh = str(tmp_path / "wh")
+
+    def apply(nest_type, rows):
+        A.apply_changes(
+            spark, _batch(spark, T.IntegerType(), nest_type, rows), wh, KEY,
+            mode="upsert", partition_by=partition_by, propagate_deletes=True,
+        )
+
+    apply(ab, [
+        ("INSERT", 1, _image(1, "one", 1, {"p.q": 1, "r`s": "a"}), 1),
+        ("INSERT", 2, _image(2, "two", 1, {"p.q": 2, "r`s": "b"}), 2),
+    ])
+    apply(ba, [
+        ("MODIFY", 1, _image(1, "one 2", 1, {"r`s": "c", "p.q": 10}), 3),
+        ("INSERT", 3, _image(3, "three", 2, {"r`s": "d", "p.q": 3}), 4),
+    ])
+    apply(ab, [("MODIFY", 2, _image(2, "stale", 1, {"p.q": -2, "r`s": "z"}), 1)])
+
+    got = sorted(
+        (r[KEY], r[TXT], r[PART], r[NEST].asDict())
+        for r in A.read_warehouse(spark, wh).collect()
+    )
+    assert got == [
+        (1, "one 2", 1, {"p.q": 10, "r`s": "c"}),
+        (2, "two", 1, {"p.q": 2, "r`s": "b"}),
+        (3, "three", 2, {"p.q": 3, "r`s": "d"}),
+    ]

@@ -724,3 +724,76 @@ def test_maintenance_keeps_partition_column_types(spark, tmp_path, writer, op):
     else:
         assert M.compact_parquet(spark, wh, partition_by=part).n_files == 2
     assert read_warehouse(spark, wh).schema == before
+
+
+def test_nested_field_gain_widens_the_manifest_in_place(spark, tmp_path, monkeypatch):
+    """A partitioned upsert whose struct column gains a nested field
+    widens the schema manifest in place: no stamp removes it or
+    footer-merges the table, and the recorded column order holds."""
+    import json
+
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark import fsio
+    from cdc_from_sql_and_nosql_to_data_warehouse_spark.operators import apply as A
+
+    from .fixtures import run_counting_jobs
+
+    inner = T.StructType([T.StructField("a", T.LongType())])
+    grown = T.StructType(inner.fields + [T.StructField("b", T.StringType())])
+
+    def upsert(nest_type, rows):
+        after = T.StructType(
+            [
+                T.StructField("id", T.StringType()),
+                T.StructField("region", T.StringType()),
+                T.StructField("n", nest_type),
+            ]
+        )
+        batch = spark.createDataFrame(
+            [("MODIFY", i, {"id": i, "region": r, "n": n}, s) for i, r, n, s in rows],
+            T.StructType(
+                [
+                    T.StructField("op", T.StringType()),
+                    T.StructField("key", T.StringType()),
+                    T.StructField("after", after),
+                    T.StructField("seq", T.LongType()),
+                ]
+            ),
+        )
+        apply_changes(spark, batch, wh, "id", mode="upsert", partition_by=["region"])
+
+    def recorded():
+        with open(os.path.join(tdd(wh), A.SCHEMA_MANIFEST)) as f:
+            return T.StructType.fromJson(json.load(f))
+
+    wh = str(tmp_path / "wh")
+    upsert(inner, [("a", "eu", {"a": 1}, 1), ("b", "us", {"a": 2}, 2)])
+    names = recorded().fieldNames()
+
+    removed: list[str] = []
+    real_remove = fsio.remove
+    monkeypatch.setattr(
+        fsio, "remove", lambda p: removed.append(p) or real_remove(p)
+    )
+    stamp_jobs: list[int] = []
+    real_stamp = A._stamp_schema_union
+
+    def counted(spark_, path, schema):
+        stamp_jobs.append(
+            run_counting_jobs(spark_, lambda: real_stamp(spark_, path, schema))[1]
+        )
+
+    monkeypatch.setattr(A, "_stamp_schema_union", counted)
+    upsert(grown, [("a", "eu", {"a": 10, "b": "x"}, 3)])
+
+    assert [p for p in removed if p.endswith(A.SCHEMA_MANIFEST)] == []
+    assert stamp_jobs == [0, 0]  # the pre-write and post-write stamps
+    assert recorded().fieldNames() == names
+    assert recorded()["n"].dataType.fieldNames() == ["a", "b"]
+    got = sorted(
+        (r["id"], r["region"], r["n"].asDict())
+        for r in read_warehouse(spark, wh).collect()
+    )
+    assert got == [
+        ("a", "eu", {"a": 10, "b": "x"}),
+        ("b", "us", {"a": 2, "b": None}),
+    ]

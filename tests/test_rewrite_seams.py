@@ -34,3 +34,16 @@ def test_maintenance_makes_no_direct_spark_read():
         and n.value.id == "spark"
     )
     assert [f for f in found if f[0] == "operators/maintenance.py"] == []
+
+
+def test_footer_merge_requested_in_two_places():
+    # the table reader's manifest-less fallback, and the one helper that
+    # footer-merges the schema of chosen files; every other schema need
+    # goes through the manifest, the sidecar or _schema_union
+    found = _enclosing(
+        lambda n: isinstance(n, ast.Constant) and n.value == "mergeSchema"
+    )
+    assert sorted(found) == [
+        ("operators/apply.py", "_footer_schema"),
+        ("operators/apply.py", "_table_reader"),
+    ]

@@ -98,6 +98,8 @@ _RAW_STORAGE = (
     "os.rmdir",
     "os.makedirs",
     "os.path.isdir",
+    "os.stat",
+    "open",
     "shutil.rmtree",
 )
 # (module, enclosing function, call) -> why it stays outside fsio
@@ -108,6 +110,8 @@ _RAW_STORAGE_EXEMPT = {
         "shutil.rmtree",
     ): "a partition dir emptied by the rewrite must be deleted or the "
     "rewrite must fail loudly; fsio.remove_tree ignores errors",
+    ("operators/apply.py", "_proc_start_time", "open"): "a lock owner's "
+    "start time is read from the local /proc, not from table storage",
 }
 
 
